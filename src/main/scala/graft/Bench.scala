@@ -1,9 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
-  /** Memory-sink stream tables register as temp views and hold EVERY
-    * drained row on the driver — at sf10 two undropped drains exhaust a
-    * 24g heap before the retry pass. Queries re-create what they need.
+  /** Temp views a query leaves in the session are swept after it (a view
+    * can pin every row it was built from on the driver). The stream drains
+    * register their memory-sink views on a session clone, never here;
+    * `q_sql_gateway` still registers views on the caller's session.
     */
   private def dropTempViews(spark: SparkSession): Unit =
     spark.catalog.listTables().collect()
@@ -53,6 +54,17 @@ object Bench {
     sys.env.get("SPARK_GRAFT_RDD_COMPRESS").foreach { v =>
       builder.config("spark.rdd.compress", v)
     }
+    // Streaming state observability (the SCALING streaming-decade soaks):
+    // SPARK_GRAFT_STREAM_STATS=1 logs every micro-batch's state-store
+    // rows/memory per stateful operator to stderr — the state GROWTH curve
+    // that wall-clock timings cannot see. Registered through the static
+    // conf, not `spark.streams.addListener`: the drains run on session
+    // clones, each with its own query manager, and only the static conf
+    // reaches those.
+    sys.env.get("SPARK_GRAFT_STREAM_STATS").foreach { _ =>
+      builder.config("spark.sql.streaming.streamingQueryListeners",
+        classOf[StreamStateLog].getName)
+    }
     val spark = builder
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
@@ -70,30 +82,6 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Streaming state observability (the SCALING streaming-decade soaks):
-    // SPARK_GRAFT_STREAM_STATS=1 logs every micro-batch's state-store
-    // rows/memory per stateful operator to stderr — the state GROWTH curve
-    // that wall-clock timings cannot see. Attribution: the bench runs
-    // queries serially and prints each query's line to the same stderr, so
-    // state lines sit under the query that drained them.
-    sys.env.get("SPARK_GRAFT_STREAM_STATS").foreach { _ =>
-      spark.streams.addListener(
-        new org.apache.spark.sql.streaming.StreamingQueryListener {
-          import org.apache.spark.sql.streaming.StreamingQueryListener._
-          override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-          override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-          override def onQueryProgress(e: QueryProgressEvent): Unit = {
-            val p = e.progress
-            if (p.stateOperators.nonEmpty)
-              System.err.println(
-                s"[stream-state] name=${Option(p.name).getOrElse(p.id)} " +
-                  s"batch=${p.batchId} " +
-                  p.stateOperators.map(o => s"${o.operatorName}: " +
-                    s"rows=${o.numRowsTotal} mem=${o.memoryUsedBytes}B")
-                    .mkString(" | "))
-          }
-        })
-    }
     sys.env.get("SPARK_GRAFT_RELIABLE_CKPT").foreach { d =>
       spark.sparkContext.setCheckpointDir(d)
     }
@@ -256,5 +244,27 @@ object Bench {
       System.err.println(s"[bench] ${failed.size} queries failed: ${failed.mkString(", ")}")
       sys.exit(1)
     }
+  }
+}
+
+/** `[stream-state]` stderr line per micro-batch with stateful operators:
+  * state-store rows and memory per operator (SPARK_GRAFT_STREAM_STATS=1;
+  * digested by tools/stream_state_report.py). Attribution: the bench runs
+  * queries serially and prints each query's line to the same stderr, so
+  * state lines sit above the query that drained them.
+  */
+class StreamStateLog extends org.apache.spark.sql.streaming.StreamingQueryListener {
+  import org.apache.spark.sql.streaming.StreamingQueryListener._
+  override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+  override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+  override def onQueryProgress(e: QueryProgressEvent): Unit = {
+    val p = e.progress
+    if (p.stateOperators.nonEmpty)
+      System.err.println(
+        s"[stream-state] name=${Option(p.name).getOrElse(p.id)} " +
+          s"batch=${p.batchId} " +
+          p.stateOperators.map(o => s"${o.operatorName}: " +
+            s"rows=${o.numRowsTotal} mem=${o.memoryUsedBytes}B")
+            .mkString(" | "))
   }
 }

@@ -2,9 +2,10 @@ package graft
 
 import graft.util.Checkpoints._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftExpressionBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 
 import graft.model._
 import graft.schema.DestinationSchemas
@@ -2497,17 +2498,6 @@ object SparkEntry {
   // oracle — stream/batch equivalence as a correctness row, not just a test
   // ------------------------------------------------------------------
 
-  /** The watermarked streaming hourly rollup over the real events table,
-    * drained with availableNow into a memory sink; output reshaped to the
-    * q_hourly_rollup schema. Equivalence to the batch plan is exact: same
-    * window arithmetic, same µs truncation.
-    */
-  /** One READ-ONLY landing directory per (sf dir, table), shared by every
-    * streaming query that only TAILS the table: the per-query temp-dir +
-    * file copy was pure fixed cost repeated 13 times per bench run.
-    * Queries that MUTATE their landing dir (sentinel appenders driving
-    * watermark advancement) keep private copies.
-    */
   /** All query scratch (streaming landing dirs, checkpoints, sink
     * outputs, and the batch queries' planted fixture dirs — versioned
     * stores, index layouts, round-trip files) lives under ONE per-JVM
@@ -2563,10 +2553,6 @@ object SparkEntry {
   private def scratch(prefix: String): java.nio.file.Path =
     java.nio.file.Files.createTempDirectory(streamScratchRoot, prefix)
 
-  /** Shared default checkpoint root for the availableNow drains: set once
-    * per session; every query checkpoints under it in a unique (nanoTime-
-    * named) subdirectory on tmpfs instead of a disk temp dir.
-    */
   /** Drain shuffle width, auto-sized from the sf dir's events table (the
     * input every one of these streams tails): the round-8 width probe
     * (SCALING.md) measured width ~indifferent at sf0.1 (fixed per-
@@ -2575,68 +2561,71 @@ object SparkEntry {
     * (61.1 → 42.6 s at width 8) where the keyed-state walk outweighs the
     * per-partition fixed cost. One partition per ~3 MB of events parquet,
     * clamped to [2, 32]: sf0.1 → 2, sf1 → 8, a decade up saturates the
-    * local core budget. SPARK_GRAFT_STREAM_PARTS overrides.
+    * local core budget.
     */
   private val streamPartsCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def autoStreamParts(dir: String): String =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS",
-      streamPartsCache.computeIfAbsent(dir, { _ =>
-        val bytes =
-          try java.nio.file.Files.size(java.nio.file.Paths.get(s"$dir/events.parquet"))
-          catch { case _: Exception => 0L }
-        math.max(2L, math.min(32L, bytes / (3L << 20))).toString
-      }))
+    streamPartsCache.computeIfAbsent(dir, { _ =>
+      val bytes =
+        try java.nio.file.Files.size(java.nio.file.Paths.get(s"$dir/events.parquet"))
+        catch { case _: Exception => 0L }
+      math.max(2L, math.min(32L, bytes / (3L << 20))).toString
+    })
 
-  private def narrowStreamConfs(s: SparkSession, dir: String): Map[String, Option[String]] = {
-    // validate the env BEFORE touching any conf: a throw from here must
-    // not leak half-applied confs onto the shared session (the caller
-    // only installs its restore finally after this returns)
-    val provider = sys.env.get("SPARK_GRAFT_STATE_PROVIDER").map {
-      case "rocksdb" =>
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-      case other => throw new IllegalArgumentException(
-        s"SPARK_GRAFT_STATE_PROVIDER: unknown provider '$other' (expected rocksdb)")
+  /** Runs the stream `build` wires up to one availableNow drain, on a clone
+    * of `s` scoped to the drain confs ([[graft.util.Sessions.scoped]]), and
+    * returns the clone once the drain has finished. The caller's session is
+    * never written. Every frame the stream touches must be built from the
+    * session `build` is given. The drain confs:
+    *  - stateful shuffle narrowed to [[autoStreamParts]]: state-store
+    *    open/commit is a fixed per-partition cost in these single-burst
+    *    drains;
+    *  - checkpoints under the scratch root, one subdirectory per query;
+    *  - no trailing no-data micro-batch. It exists to advance the watermark
+    *    once more after the last data batch, and every drain here runs in
+    *    Complete mode, emits within its data batch, or advances its
+    *    watermark with explicit sentinel batches, so the extra empty batch
+    *    is pure fixed cost on all 21 drains. The oracle gate on the 21 s_*
+    *    rows pins that disabling it is output-neutral.
+    * The state-store provider is the caller's: the in-memory default is
+    * right for single-burst drains (state fits the executor heap and dies
+    * with the query). A long-running deployment whose keyed state outgrows
+    * memory sets Spark's `spark.sql.streaming.stateStore.providerClass` to
+    * RocksDB, which the clone inherits — per-partition RocksDB instances
+    * with changelog checkpointing, measured at sf1 on the same width-8
+    * drains at 0.7-1.9x the in-memory time: the bounded constant paid for
+    * state that never OOMs (SCALING.md).
+    */
+  private def drainSink(s: SparkSession, dir: String)(
+      build: SparkSession => DataStreamWriter[Row]): SparkSession =
+    graft.util.Sessions.scoped(s,
+      "spark.sql.shuffle.partitions" -> autoStreamParts(dir),
+      "spark.sql.streaming.checkpointLocation" ->
+        streamScratchRoot.resolve("ckpt").toString,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") { c =>
+      build(c).trigger(Trigger.AvailableNow()).start().awaitTermination()
+      c
     }
-    val parts = autoStreamParts(dir)
-    val keys = Seq("spark.sql.shuffle.partitions",
-      "spark.sql.streaming.checkpointLocation",
-      "spark.sql.streaming.noDataMicroBatches.enabled",
-      "spark.sql.streaming.stateStore.providerClass")
-    val prev = keys.map(k => k -> s.conf.getOption(k)).toMap
-    // Narrowed stateful shuffle for the single-batch drains (fixed per-
-    // partition state-store cost), checkpoints on the scratch root.
-    s.conf.set("spark.sql.shuffle.partitions", parts)
-    s.conf.set("spark.sql.streaming.checkpointLocation",
-      streamScratchRoot.resolve("ckpt").toString)
-    // The trailing no-data micro-batch exists to advance the watermark
-    // once more after the last data batch. Every drain here either runs
-    // in Complete mode, emits within the data batch, or advances its
-    // watermark with explicit sentinel batches — the extra empty batch is
-    // pure fixed cost ×14 queries. The oracle gate (14 s_* rows) pins
-    // that disabling it is output-neutral.
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    // State-store provider: the in-memory default is right for these
-    // single-burst drains (state fits the executor heap and dies with the
-    // query); a LONG-RUNNING deployment whose keyed state outgrows memory
-    // flips SPARK_GRAFT_STATE_PROVIDER=rocksdb — per-partition RocksDB
-    // instances with changelog checkpointing, the standard large-state
-    // choice (measured at sf1, same width-8 drains: 0.7-1.9x vs in-memory —
-    // slower on the state-heaviest walks, occasionally faster where the
-    // commit pattern suits it — the bounded constant you pay for state
-    // that never OOMs; SCALING.md).
-    provider.foreach(
-      s.conf.set("spark.sql.streaming.stateStore.providerClass", _))
-    prev
+
+  /** [[drainSink]] into a memory sink under a unique `name_<nanos>` query
+    * name; returns the drained rows as a frame of `s`, so everything
+    * planned on top of them runs under the caller's confs. The sink's temp
+    * view exists only in the drain's clone, never in the caller's catalog.
+    */
+  private def drainToMemory(s: SparkSession, dir: String, name: String,
+      mode: OutputMode)(build: SparkSession => DataFrame): DataFrame = {
+    val qn = s"${name}_${System.nanoTime()}"
+    val drained = drainSink(s, dir)(c =>
+      build(c).writeStream.format("memory").queryName(qn).outputMode(mode))
+    GraftExpressionBridge.rebind(s, drained.table(qn))
   }
 
-  /** Puts back every conf [[narrowStreamConfs]] touched (unset where it
-    * was unset) — a later streaming workload on the same session must not
-    * inherit the drains' narrowed shuffle, scratch checkpoint root, or
-    * disabled no-data micro-batches.
+  /** One READ-ONLY landing directory per (sf dir, table), shared by every
+    * streaming query that only TAILS the table: the per-query temp-dir +
+    * file copy was pure fixed cost repeated on every drain. Queries that
+    * MUTATE their landing dir (sentinel appenders driving watermark
+    * advancement) keep private copies.
     */
-  private def restoreStreamConfs(s: SparkSession, prev: Map[String, Option[String]]): Unit =
-    prev.foreach { case (k, v) => v.fold(s.conf.unset(k))(v2 => s.conf.set(k, v2)) }
-
   private val landingCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def sharedLanding(dir: String, table: String): String =
     landingCache.computeIfAbsent(s"$dir/$table", { _ =>
@@ -2674,23 +2663,18 @@ object SparkEntry {
       if (r.isNullAt(0)) 0L else r.getLong(0)
     })
 
+  /** The watermarked streaming hourly rollup over the real events table,
+    * drained with availableNow into a memory sink; output reshaped to the
+    * q_hourly_rollup schema. Equivalence to the batch plan is exact: same
+    * window arithmetic, same µs truncation.
+    */
   private def sRollupStream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val landing = sharedLanding(dir, "events")
-    val ev = graft.streaming.Streaming.readParquetStream(s, landing.toString)
-      .transform(graft.io.EventTs.toTimestamp)
-    val qn = s"s_rollup_stream_${System.nanoTime()}"
-    // Narrowed stateful shuffle for the single-batch drain (fixed per-
-    // partition state-store cost; see s_sessionize_stream's note).
-    val prevConfs = narrowStreamConfs(s, dir)
-    try {
-      val query = graft.streaming.Streaming.hourlyRollup(ev, watermark = "2 hours")
-        .writeStream.format("memory").queryName(qn)
-        .outputMode(OutputMode.Complete())
-        .trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    } finally restoreStreamConfs(s, prevConfs)
-    s.table(qn).select(
+    drainToMemory(s, dir, "s_rollup_stream", OutputMode.Complete()) { c =>
+      val ev = graft.streaming.Streaming.readParquetStream(c, landing)
+        .transform(graft.io.EventTs.toTimestamp)
+      graft.streaming.Streaming.hourlyRollup(ev, watermark = "2 hours")
+    }.select(
       (unix_timestamp(col("hour_start")) / 3600).cast("long").as("hour_id"),
       col("event_type"), col("n"), col("total_value"))
   }
@@ -2705,12 +2689,9 @@ object SparkEntry {
     * oracle (the batch window replay) proves both paths.
     */
   private def sSrmStream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val landing = sharedLanding(dir, "events")
-    val qn = s"s_srm_stream_${System.nanoTime()}"
-    val prevConfs = narrowStreamConfs(s, dir)
-    try {
-      val ev = graft.streaming.Streaming.readParquetStream(s, landing.toString)
+    drainToMemory(s, dir, "s_srm_stream", OutputMode.Complete()) { c =>
+      val ev = graft.streaming.Streaming.readParquetStream(c, landing)
         .transform(graft.io.EventTs.toTimestamp)
         .select(col("ts"), explode(array(
           struct(lit("exp_even").as("experiment"),
@@ -2720,18 +2701,12 @@ object SparkEntry {
           .as("e"))
         .select(col("ts"), col("e.experiment").as("experiment"),
           col("e.arm").as("arm"))
-      val query = ev.withWatermark("ts", "1 day")
+      ev.withWatermark("ts", "1 day")
         .groupBy(window(col("ts"), "6 hours"), col("experiment"), col("arm"))
         .agg(count(lit(1)).as("n"))
         .select(col("window.start").as("w_start"), col("experiment"),
           col("arm"), col("n"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode(OutputMode.Complete())
-        .trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    } finally restoreStreamConfs(s, prevConfs)
-    s.table(qn)
-      .groupBy((unix_timestamp(col("w_start")) / 21600).cast("long").as("w_id"),
+    }.groupBy((unix_timestamp(col("w_start")) / 21600).cast("long").as("w_id"),
         col("experiment"))
       .agg(sum(when(col("arm") === "A", col("n")).otherwise(0L)).as("n_a"),
         sum(when(col("arm") === "B", col("n")).otherwise(0L)).as("n_b"))
@@ -2749,24 +2724,15 @@ object SparkEntry {
     * the oracle is the plain batch window ranking.
     */
   private def sTopkStream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val landing = sharedLanding(dir, "events")
-    val ev = graft.streaming.Streaming.readParquetStream(s, landing.toString)
-      .transform(graft.io.EventTs.toTimestamp)
-    val qn = s"s_topk_stream_${System.nanoTime()}"
-    val prevConfs = narrowStreamConfs(s, dir)
-    try {
-      val query = ev.withWatermark("ts", "2 hours")
+    drainToMemory(s, dir, "s_topk_stream", OutputMode.Complete()) { c =>
+      graft.streaming.Streaming.readParquetStream(c, landing)
+        .transform(graft.io.EventTs.toTimestamp)
+        .withWatermark("ts", "2 hours")
         .groupBy(window(col("ts"), "1 hour").as("w"))
         .agg(graft.functions.TopKAggregate.topKByScore(
           col("value"), col("event_id"), 3).as("top"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode(OutputMode.Complete())
-        .trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    } finally restoreStreamConfs(s, prevConfs)
-    s.table(qn)
-      .select((unix_timestamp(col("w.start")) / 3600).cast("long").as("hour_id"),
+    }.select((unix_timestamp(col("w.start")) / 3600).cast("long").as("hour_id"),
         posexplode(col("top")).as(Seq("pos", "e")))
       .select(col("hour_id"), (col("pos") + 1).cast("long").as("rank"),
         col("e.id").as("event_id"), col("e.score").as("value"))
@@ -2778,20 +2744,12 @@ object SparkEntry {
     * replays the expansion as an explicit explode + tumbling group.
     */
   private def sSlidingStream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val landing = sharedLanding(dir, "events")
-    val ev = graft.streaming.Streaming.readParquetStream(s, landing.toString)
-      .transform(graft.io.EventTs.toTimestamp)
-    val qn = s"s_sliding_stream_${System.nanoTime()}"
-    val prevConfs = narrowStreamConfs(s, dir)
-    try {
-      val query = graft.streaming.Streaming.slidingRollup(ev)
-        .writeStream.format("memory").queryName(qn)
-        .outputMode(OutputMode.Complete())
-        .trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    } finally restoreStreamConfs(s, prevConfs)
-    s.table(qn).select(
+    drainToMemory(s, dir, "s_sliding_stream", OutputMode.Complete()) { c =>
+      graft.streaming.Streaming.slidingRollup(
+        graft.streaming.Streaming.readParquetStream(c, landing)
+          .transform(graft.io.EventTs.toTimestamp))
+    }.select(
       (unix_timestamp(col("win_start")) / 60).cast("long").as("win_min"),
       col("event_type"), col("n"), col("total_value"))
   }
@@ -2803,22 +2761,13 @@ object SparkEntry {
     * batch interval-coverage rewrite's independent brute-force oracle.
     */
   private def sActiveUsersStream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val landing = sharedLanding(dir, "events")
-    val ev = graft.streaming.Streaming.readParquetStream(s, landing.toString)
-      .transform(graft.io.EventTs.toTimestamp)
-    val qn = s"s_active_users_stream_${System.nanoTime()}"
-    val prevConfs = narrowStreamConfs(s, dir)
-    try {
-      val query = graft.streaming.Streaming
-        .activeEntitiesWindow(ev, "user_id", "ts")
-        .writeStream.format("memory").queryName(qn)
-        .outputMode(OutputMode.Complete())
-        .trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    } finally restoreStreamConfs(s, prevConfs)
-    s.table(qn)
-      .select((unix_timestamp(col("covered_ts")) / 86400).cast("long")
+    drainToMemory(s, dir, "s_active_users_stream", OutputMode.Complete()) { c =>
+      graft.streaming.Streaming.activeEntitiesWindow(
+        graft.streaming.Streaming.readParquetStream(c, landing)
+          .transform(graft.io.EventTs.toTimestamp),
+        "user_id", "ts")
+    }.select((unix_timestamp(col("covered_ts")) / 86400).cast("long")
           .as("day_id"),
         col("n_distinct").as("active_users_7d"))
   }
@@ -2830,33 +2779,24 @@ object SparkEntry {
     * DuckDB's native ASOF LEFT JOIN over the same tables.
     */
   private def sAsofStream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     import graft.streaming.Streaming.AsofIn
     val landingE = sharedLanding(dir, "events")
     val landingO = sharedLanding(dir, "orders")
-    import s.implicits._
-    val ev = graft.streaming.Streaming.readParquetStream(s, landingE.toString)
-      .transform(graft.io.EventTs.toNsLong)
-      .select(col("user_id").as("key"), expr("ts div 1000").as("ts"),
-        lit(1).as("side"), col("event_id").as("id"), lit(0.0).as("payload"))
-      .as[AsofIn]
-    val ord = graft.streaming.Streaming.readParquetStream(s, landingO.toString)
-      .select(col("o_custkey").as("key"),
-        unix_micros(col("o_orderdate").cast("timestamp")).as("ts"),
-        lit(0).as("side"), lit(0L).as("id"),
-        round(col("o_totalprice"), 2).as("payload"))
-      .as[AsofIn]
-    val qn = s"s_asof_stream_${System.nanoTime()}"
-    val prevConfs = narrowStreamConfs(s, dir)
-    try {
-      val query = graft.streaming.Streaming.asofEnrich(ev.unionByName(ord))
-        .toDF()
-        .writeStream.format("memory").queryName(qn)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    } finally restoreStreamConfs(s, prevConfs)
-    s.table(qn).select(col("id").as("event_id"), col("key").as("user_id"),
+    drainToMemory(s, dir, "s_asof_stream", OutputMode.Append()) { c =>
+      import c.implicits._
+      val ev = graft.streaming.Streaming.readParquetStream(c, landingE)
+        .transform(graft.io.EventTs.toNsLong)
+        .select(col("user_id").as("key"), expr("ts div 1000").as("ts"),
+          lit(1).as("side"), col("event_id").as("id"), lit(0.0).as("payload"))
+        .as[AsofIn]
+      val ord = graft.streaming.Streaming.readParquetStream(c, landingO)
+        .select(col("o_custkey").as("key"),
+          unix_micros(col("o_orderdate").cast("timestamp")).as("ts"),
+          lit(0).as("side"), lit(0L).as("id"),
+          round(col("o_totalprice"), 2).as("payload"))
+        .as[AsofIn]
+      graft.streaming.Streaming.asofEnrich(ev.unionByName(ord)).toDF()
+    }.select(col("id").as("event_id"), col("key").as("user_id"),
       col("ts").as("ts_us"), col("payload").as("last_order_price"))
   }
 
@@ -2868,26 +2808,16 @@ object SparkEntry {
     * emission.
     */
   private def sTransitionsStream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     import graft.streaming.Streaming.TransIn
     val landing = sharedLanding(dir, "events")
-    import s.implicits._
-    val ev = graft.streaming.Streaming.readParquetStream(s, landing.toString)
-      .transform(graft.io.EventTs.toNsLong)
-      .select(col("user_id"), tsUs.as("ts"), col("event_id"), col("event_type"))
-      .as[TransIn]
-    val qn = s"s_transitions_stream_${System.nanoTime()}"
-    val prevConfs = narrowStreamConfs(s, dir)
-    try {
-      val query = graft.streaming.Streaming.transitionsStream(ev)
-        .toDF()
-        .writeStream.format("memory").queryName(qn)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    } finally restoreStreamConfs(s, prevConfs)
-    s.table(qn)
-      .groupBy(col("src_type"), col("dst_type"))
+    drainToMemory(s, dir, "s_transitions_stream", OutputMode.Append()) { c =>
+      import c.implicits._
+      val ev = graft.streaming.Streaming.readParquetStream(c, landing)
+        .transform(graft.io.EventTs.toNsLong)
+        .select(col("user_id"), tsUs.as("ts"), col("event_id"), col("event_type"))
+        .as[TransIn]
+      graft.streaming.Streaming.transitionsStream(ev).toDF()
+    }.groupBy(col("src_type"), col("dst_type"))
       .agg(count(lit(1)).as("n"))
   }
 
@@ -2900,26 +2830,18 @@ object SparkEntry {
     * construction (the horizon bounds state at real scale).
     */
   private def sDedupStream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val landing = java.nio.file.Paths.get(assembledLanding(s"dedup:$dir") { d =>
       Seq("a.parquet", "b.parquet").foreach { n =>
         java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
           d.resolve(n))
       }
     })
-    val prevConfs = narrowStreamConfs(s, dir)
-    val qn = s"s_dedup_stream_${System.nanoTime()}"
-    try {
-      val ev = graft.streaming.Streaming.readParquetStream(s, landing.toString)
-        .transform(graft.io.EventTs.toTimestamp)
-      val query = graft.streaming.Streaming
-        .dedupStream(ev, Seq("event_id"), "ts", "1 day")
-        .writeStream.format("memory").queryName(qn)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    } finally restoreStreamConfs(s, prevConfs)
-    s.table(qn).groupBy(col("user_id")).agg(count(lit(1)).as("n_events"))
+    drainToMemory(s, dir, "s_dedup_stream", OutputMode.Append()) { c =>
+      graft.streaming.Streaming.dedupStream(
+        graft.streaming.Streaming.readParquetStream(c, landing.toString)
+          .transform(graft.io.EventTs.toTimestamp),
+        Seq("event_id"), "ts", "1 day")
+    }.groupBy(col("user_id")).agg(count(lit(1)).as("n_events"))
   }
 
   /** Row-level quarantine split ([[graft.operators.Expectations
@@ -2947,7 +2869,6 @@ object SparkEntry {
     * is exactly what the oracle replays (batch audit × batch ids).
     */
   private def sQualityMonitorStream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import graft.operators.Expectations._
     val landing = java.nio.file.Paths.get(assembledLanding(s"qmon:$dir") { d =>
       Seq("a.parquet", "b.parquet").foreach { n =>
@@ -2956,17 +2877,15 @@ object SparkEntry {
       }
     })
     val out = scratch("qmon_out").toString + "/report"
-    val prevConfs = narrowStreamConfs(s, dir)
-    try {
-      val ev = graft.streaming.Streaming.readParquetStream(s, landing.toString,
+    drainSink(s, dir) { c =>
+      val ev = graft.streaming.Streaming.readParquetStream(c, landing.toString,
         Map("maxFilesPerTrigger" -> "1"))
-      val query = graft.streaming.Streaming.qualityMonitorSink(ev, Seq(
+      graft.streaming.Streaming.qualityMonitorSink(ev, Seq(
           Completeness("user_id"),
           Bounds("value", 0.0, 400.0),
           InSet("event_type", Seq("view", "click", "purchase", "signup"))),
-        out).trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    } finally restoreStreamConfs(s, prevConfs)
+        out)
+    }
     s.read.parquet(out)
       .select(col("batch_id"), col("check"), col("target"),
         col("observed_e6"), col("pass"))
@@ -2982,7 +2901,6 @@ object SparkEntry {
     * state store. The oracle is the batch first-occurrence derivation.
     */
   private def sIngestDedupStream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val landing = java.nio.file.Paths.get(assembledLanding(s"ingest:$dir") { d =>
       Seq("a.parquet", "b.parquet").foreach { n =>
         java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/documents.parquet"),
@@ -2992,15 +2910,11 @@ object SparkEntry {
     val log = scratch("ingest_log").toString +
       "/digests.parquet"
     val out = scratch("ingest_out").toString + "/kept"
-    val prevConfs = narrowStreamConfs(s, dir)
-    try {
-      val docs = graft.streaming.Streaming.readParquetStream(s, landing.toString,
+    drainSink(s, dir) { c =>
+      val docs = graft.streaming.Streaming.readParquetStream(c, landing.toString,
         Map("maxFilesPerTrigger" -> "1"))
-      val query = graft.streaming.Streaming
-        .ingestDedupSink(docs, "text", "doc_id", log, out)
-        .trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    } finally restoreStreamConfs(s, prevConfs)
+      graft.streaming.Streaming.ingestDedupSink(docs, "text", "doc_id", log, out)
+    }
     s.read.parquet(out).groupBy(col("lang"))
       .agg(count(lit(1)).as("n_kept"), sum(col("doc_id")).as("id_sum"))
   }
@@ -3012,23 +2926,15 @@ object SparkEntry {
     * drained output must equal the batch NOT-EXISTS the oracle runs.
     */
   private def sAntiJoinStream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val landing = sharedLanding(dir, "events")
-    val uploaded = t(s, dir, "events")
-      .filter(col("event_id") % 3 === 0).select(col("event_id"))
-    val prevConfs = narrowStreamConfs(s, dir)
-    val qn = s"s_anti_join_${System.nanoTime()}"
-    try {
-      val ev = graft.streaming.Streaming.readParquetStream(s, landing.toString)
-      val query = graft.streaming.Streaming
-        .antiJoinUploaded(ev, uploaded, Seq("event_id"))
+    drainToMemory(s, dir, "s_anti_join", OutputMode.Append()) { c =>
+      val uploaded = t(c, dir, "events")
+        .filter(col("event_id") % 3 === 0).select(col("event_id"))
+      graft.streaming.Streaming
+        .antiJoinUploaded(graft.streaming.Streaming.readParquetStream(c, landing),
+          uploaded, Seq("event_id"))
         .select(col("event_id"), col("event_type"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    } finally restoreStreamConfs(s, prevConfs)
-    s.table(qn).groupBy(col("event_type")).agg(count(lit(1)).as("n"))
+    }.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
   }
 
   /** Watermarked stream-stream INTERVAL join under the oracle gate
@@ -3040,26 +2946,18 @@ object SparkEntry {
     * time bound is what keeps the join state finite.
     */
   private def sIntervalJoinStream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val landing = sharedLanding(dir, "events")
-    val prevConfs = narrowStreamConfs(s, dir)
-    val qn = s"s_interval_join_${System.nanoTime()}"
-    try {
-      val ev = graft.streaming.Streaming.readParquetStream(s, landing.toString)
+    drainToMemory(s, dir, "s_interval_join", OutputMode.Append()) { c =>
+      val ev = graft.streaming.Streaming.readParquetStream(c, landing)
         .transform(graft.io.EventTs.toTimestamp)
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("user_id"), col("ts"), col("event_id"))
       val purchases = ev.filter(col("event_type") === "purchase")
         .select(col("user_id"), col("ts"), col("event_id"))
-      val query = graft.streaming.Streaming
+      graft.streaming.Streaming
         .intervalJoin(clicks, purchases, "user_id", "ts", windowSeconds = 1800L)
         .select(col("user_id"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    } finally restoreStreamConfs(s, prevConfs)
-    s.table(qn).groupBy(col("user_id")).agg(count(lit(1)).as("n_pairs"))
+    }.groupBy(col("user_id")).agg(count(lit(1)).as("n_pairs"))
   }
 
   /** LEFT OUTER watermarked interval join under the oracle gate
@@ -3073,7 +2971,6 @@ object SparkEntry {
     * are filtered from the aggregate.
     */
   private def sOuterIntervalStream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val landing = java.nio.file.Paths.get(assembledLanding(s"outer:$dir") { d =>
       java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
         d.resolve("events.parquet"))
@@ -3112,27 +3009,19 @@ object SparkEntry {
             java.nio.file.attribute.FileTime.fromMillis(t0 + off))
         }
     })
-    val prevConfs = narrowStreamConfs(s, dir)
-    val qn = s"s_outer_interval_${System.nanoTime()}"
-    try {
-      val ev = graft.streaming.Streaming.readParquetStream(s, landing.toString,
+    drainToMemory(s, dir, "s_outer_interval", OutputMode.Append()) { c =>
+      val ev = graft.streaming.Streaming.readParquetStream(c, landing.toString,
           Map("maxFilesPerTrigger" -> "2"))
         .transform(graft.io.EventTs.toTimestamp)
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("user_id"), col("ts"), col("event_id"))
       val purchases = ev.filter(col("event_type") === "purchase")
         .select(col("user_id"), col("ts"), col("event_id"))
-      val query = graft.streaming.Streaming
+      graft.streaming.Streaming
         .intervalJoinLeftOuter(clicks, purchases, "user_id", "ts",
           windowSeconds = 1800L)
         .select(col("user_id"), col("r_event_id"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    } finally restoreStreamConfs(s, prevConfs)
-    s.table(qn)
-      .filter(col("user_id") >= 0L)
+    }.filter(col("user_id") >= 0L)
       .groupBy(col("user_id"))
       .agg(sum(when(col("r_event_id").isNotNull, 1L).otherwise(0L)).as("n_pairs"),
         sum(when(col("r_event_id").isNull, 1L).otherwise(0L)).as("n_no_conv"))
@@ -3147,22 +3036,14 @@ object SparkEntry {
     * output reshaped to per-user session/event counts.
     */
   private def sSessionWindowStream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val landing = sharedLanding(dir, "events")
-    val prevConfs = narrowStreamConfs(s, dir)
-    val qn = s"s_session_window_${System.nanoTime()}"
-    try {
-      val ev = graft.streaming.Streaming.readParquetStream(s, landing.toString)
+    drainToMemory(s, dir, "s_session_window", OutputMode.Complete()) { c =>
+      graft.streaming.Streaming.readParquetStream(c, landing)
         .transform(graft.io.EventTs.toTimestamp)
-      val query = ev.withWatermark("ts", "2 hours")
+        .withWatermark("ts", "2 hours")
         .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
         .agg(count(lit(1)).as("n"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode(OutputMode.Complete())
-        .trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    } finally restoreStreamConfs(s, prevConfs)
-    s.table(qn).groupBy(col("user_id"))
+    }.groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_sessions"), sum(col("n")).as("n_events"))
   }
 
@@ -3184,9 +3065,7 @@ object SparkEntry {
     * the q_sessionize shape.
     */
   private def sSessionizeStream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     import graft.streaming.Streaming
-    import s.implicits._
     val landing = java.nio.file.Paths.get(assembledLanding(s"sess:$dir") { d =>
       java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
         d.resolve("events.parquet"))
@@ -3222,22 +3101,15 @@ object SparkEntry {
             java.nio.file.attribute.FileTime.fromMillis(t0 + off))
         }
     })
-    val prevConfs = narrowStreamConfs(s, dir)
-    val qn = s"s_sessionize_stream_${System.nanoTime()}"
-    try {
-      val ev = Streaming.readParquetStream(s, landing.toString,
+    drainToMemory(s, dir, "s_sessionize_stream", OutputMode.Append()) { c =>
+      import c.implicits._
+      val ev = Streaming.readParquetStream(c, landing.toString,
           Map("maxFilesPerTrigger" -> "2"))
         .transform(graft.io.EventTs.toTimestamp)
         .select(col("event_id"), col("user_id"), col("ts"), col("event_type"), col("value"))
-      val query = Streaming.sessionize(ev.as[Streaming.Event],
-          gapMinutes = 30, watermark = "0 minutes")
-        .writeStream.format("memory").queryName(qn)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    } finally restoreStreamConfs(s, prevConfs)
-    s.table(qn)
-      .filter(col("user_id") >= 0L)
+      Streaming.sessionize(ev.as[Streaming.Event],
+        gapMinutes = 30, watermark = "0 minutes").toDF()
+    }.filter(col("user_id") >= 0L)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_sessions"), sum(col("n_events")).as("n_events"))
   }
@@ -5342,22 +5214,14 @@ object SparkEntry {
     * s_psi_stream's mix alarm; one oracle form proves both paths.
     */
   private def sCusumStream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val landing = sharedLanding(dir, "events")
-    val ev = graft.streaming.Streaming.readParquetStream(s, landing)
-      .transform(graft.io.EventTs.toTimestamp)
-    val qn = s"s_cusum_stream_${System.nanoTime()}"
-    val prevConfs = narrowStreamConfs(s, dir)
-    try {
-      val query = ev.withWatermark("ts", "2 hours")
+    cusumScore(drainToMemory(s, dir, "s_cusum_stream", OutputMode.Complete()) { c =>
+      graft.streaming.Streaming.readParquetStream(c, landing)
+        .transform(graft.io.EventTs.toTimestamp)
+        .withWatermark("ts", "2 hours")
         .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
         .agg(count(lit(1)).as("c"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode(OutputMode.Complete())
-        .trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    } finally restoreStreamConfs(s, prevConfs)
-    cusumScore(s.table(qn).select(col("event_type"),
+    }.select(col("event_type"),
       (unix_timestamp(col("w.start")) / 3600).cast("long").as("hour_id"),
       col("c")))
   }
@@ -5739,23 +5603,15 @@ object SparkEntry {
     * proves both paths.
     */
   private def sEwmaStream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val landing = sharedLanding(dir, "events")
-    val ev = graft.streaming.Streaming.readParquetStream(s, landing)
-      .transform(graft.io.EventTs.toTimestamp)
-    val qn = s"s_ewma_stream_${System.nanoTime()}"
-    val prevConfs = narrowStreamConfs(s, dir)
-    try {
-      val query = ev.filter(col("event_type") === "purchase")
+    ewmaScore(drainToMemory(s, dir, "s_ewma_stream", OutputMode.Complete()) { c =>
+      graft.streaming.Streaming.readParquetStream(c, landing)
+        .transform(graft.io.EventTs.toTimestamp)
+        .filter(col("event_type") === "purchase")
         .withWatermark("ts", "2 days")
         .groupBy(window(col("ts"), "1 day").as("w"))
         .agg(sum(round(col("value") * 100.0, 0).cast("long")).as("rev_e2"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode(OutputMode.Complete())
-        .trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    } finally restoreStreamConfs(s, prevConfs)
-    ewmaScore(s.table(qn).select(
+    }.select(
       (unix_timestamp(col("w.start")) / 86400).cast("long").as("day_id"),
       col("rev_e2")))
   }
@@ -6370,7 +6226,6 @@ object SparkEntry {
     * aggregate must equal the oracle's sequential merge replay.
     */
   private def sCdcStream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val landing = java.nio.file.Paths.get(assembledLanding(s"cdc:$dir") { d =>
       val base = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
@@ -6402,18 +6257,15 @@ object SparkEntry {
     })
     // the store is MUTATED by the apply — fresh per invocation
     val store = scratch("cdc_store").toString + "/store"
-    graft.io.Versioned.write(
-      t(s, dir, "orders").select(col("o_orderkey"), col("o_orderstatus"),
-        col("o_totalprice"), lit(0L).as("v")), store)
-    val prevConfs = narrowStreamConfs(s, dir)
-    try {
-      val changes = graft.streaming.Streaming.readParquetStream(s,
+    drainSink(s, dir) { c =>
+      graft.io.Versioned.write(
+        t(c, dir, "orders").select(col("o_orderkey"), col("o_orderstatus"),
+          col("o_totalprice"), lit(0L).as("v")), store)
+      val changes = graft.streaming.Streaming.readParquetStream(c,
         landing.toString, Map("maxFilesPerTrigger" -> "1"))
-      val query = graft.streaming.Streaming
+      graft.streaming.Streaming
         .cdcApplySink(changes, store, Seq("o_orderkey"), "v", "op")
-        .trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    } finally restoreStreamConfs(s, prevConfs)
+    }
     graft.io.Versioned.read(s, store)
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n"), round(sum(col("o_totalprice")), 2).as("total"))
@@ -6546,25 +6398,17 @@ object SparkEntry {
     * estimate exactly.
     */
   private def sHllStream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val landing = sharedLanding(dir, "events")
-    val ev = graft.streaming.Streaming.readParquetStream(s, landing)
-      .transform(graft.io.EventTs.toTimestamp)
-    val qn = s"s_hll_stream_${System.nanoTime()}"
-    val prevConfs = narrowStreamConfs(s, dir)
     val p = 9 // 512 registers/window — small state, LC-accurate for this corpus
-    try {
+    val regs = drainToMemory(s, dir, "s_hll_stream", OutputMode.Complete()) { c =>
       val h = Dedup.shingleHash(col("user_id").cast("string"))
-      val query = ev.withWatermark("ts", "2 hours")
+      graft.streaming.Streaming.readParquetStream(c, landing)
+        .transform(graft.io.EventTs.toTimestamp)
+        .withWatermark("ts", "2 hours")
         .groupBy(window(col("ts"), "6 hours").as("w"),
           graft.operators.Sketches.hllRegister(h, p).as("reg"))
         .agg(max(graft.operators.Sketches.hllRank(h)).as("rho"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode(OutputMode.Complete())
-        .trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    } finally restoreStreamConfs(s, prevConfs)
-    val regs = s.table(qn).select(
+    }.select(
       (unix_timestamp(col("w.start")) / 21600).cast("long").as("win_id"),
       col("reg"), col("rho"))
     graft.operators.Sketches.hllEstimate(regs, Seq("win_id"), p)
@@ -6609,22 +6453,14 @@ object SparkEntry {
     * 1e6-scaled integers so the per-window sum is exact.
     */
   private def sPsiStream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val landing = sharedLanding(dir, "events")
-    val ev = graft.streaming.Streaming.readParquetStream(s, landing)
-      .transform(graft.io.EventTs.toTimestamp)
-    val qn = s"s_psi_stream_${System.nanoTime()}"
-    val prevConfs = narrowStreamConfs(s, dir)
-    try {
-      val query = ev.withWatermark("ts", "2 hours")
+    val win = drainToMemory(s, dir, "s_psi_stream", OutputMode.Complete()) { c =>
+      graft.streaming.Streaming.readParquetStream(c, landing)
+        .transform(graft.io.EventTs.toTimestamp)
+        .withWatermark("ts", "2 hours")
         .groupBy(window(col("ts"), "6 hours").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode(OutputMode.Complete())
-        .trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    } finally restoreStreamConfs(s, prevConfs)
-    val win = s.table(qn).select(
+    }.select(
       (unix_timestamp(col("w.start")) / 21600).cast("long").as("win_id"),
       col("event_type"), col("n"))
     val base = s.read.parquet(s"$landing/events.parquet")
@@ -6768,27 +6604,19 @@ object SparkEntry {
     * streaming-native sketch.
     */
   private def sF2Stream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val landing = sharedLanding(dir, "events")
-    val ev = graft.streaming.Streaming.readParquetStream(s, landing)
-      .transform(graft.io.EventTs.toTimestamp)
-    val qn = s"s_f2_stream_${System.nanoTime()}"
-    val prevConfs = narrowStreamConfs(s, dir)
     val d = 32
-    try {
+    drainToMemory(s, dir, "s_f2_stream", OutputMode.Complete()) { c =>
       val h = Dedup.shingleHash(col("user_id").cast("string"))
       val signs = graft.operators.Sketches.amsSigns(h, d)
-      val query = ev.withWatermark("ts", "2 hours")
+      graft.streaming.Streaming.readParquetStream(c, landing)
+        .transform(graft.io.EventTs.toTimestamp)
+        .withWatermark("ts", "2 hours")
         .groupBy(window(col("ts"), "6 hours").as("w"))
         .agg(sum(signs.head).as("z0"),
           signs.tail.zipWithIndex.map { case (sg, i) =>
             sum(sg).as(s"z${i + 1}") }: _*)
-        .writeStream.format("memory").queryName(qn)
-        .outputMode(OutputMode.Complete())
-        .trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    } finally restoreStreamConfs(s, prevConfs)
-    s.table(qn).select(
+    }.select(
       (unix_timestamp(col("w.start")) / 21600).cast("long").as("win_id"),
       graft.operators.Sketches.amsF2FromZ(d).as("ams_f2_est"))
   }
@@ -6834,35 +6662,31 @@ object SparkEntry {
     * keeps a 100 TB shuffle from carrying rows the join will drop.
     * Injection is conf-scoped at PLANNING time (`runtime.bloomFilter.
     * enabled`, the application-side size gate a local test corpus can't
-    * meet, and broadcast disabled so there is a shuffle to protect), so
-    * the result materializes INSIDE the conf scope and the confs are
-    * restored before returning; the plan shape (`might_contain` on the
-    * fact side) is pinned under the same confs in `PlanSpec`. At 100 TB
-    * the defaults fire on their own — only the size gate is test-scoped.
+    * meet, and broadcast disabled so there is a shuffle to protect:
+    * [[RuntimeFilterConfs]]), so the result materializes on a session clone
+    * scoped to those confs and never touches the caller's; the plan shape
+    * (`might_contain` on the fact side) is pinned under the same confs in
+    * `PlanSpec`. At 100 TB the defaults fire on their own — only the size
+    * gate is test-scoped.
     */
+  private[graft] val RuntimeFilterConfs = Seq(
+    "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
+
   private def qRuntimeFilter(s: SparkSession, dir: String): DataFrame = {
-    val keys = Seq("spark.sql.optimizer.runtime.bloomFilter.enabled",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
-    val prev = keys.map(k => k -> s.conf.getOption(k)).toMap
-    val rows = try {
-      s.conf.set(keys(0), "true")
-      s.conf.set(keys(1), "0")
-      s.conf.set(keys(2), "-1")
-      s.conf.set(keys(3), "-1")
-      val sel = t(s, dir, "orders")
+    val rows = graft.util.Sessions.scoped(s, RuntimeFilterConfs: _*) { c =>
+      val sel = t(c, dir, "orders")
         .filter(col("o_orderpriority") === "1-URGENT" &&
           col("o_orderdate") >= lit("1996-01-01").cast("date") &&
           col("o_orderdate") < lit("1997-01-01").cast("date"))
         .select(col("o_orderkey"))
-      t(s, dir, "lineitem")
+      t(c, dir, "lineitem")
         .join(sel, col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"), round(sum(col("l_quantity")), 2).as("sum_qty"))
-        .collect() // materialize while the planning confs are live
-    } finally prev.foreach { case (k, v) =>
-      v.fold(s.conf.unset(k))(v2 => s.conf.set(k, v2))
+        .collect() // materialize under the planning confs
     }
     import scala.jdk.CollectionConverters._
     s.createDataFrame(rows.toSeq.asJava, org.apache.spark.sql.types.StructType(Seq(

@@ -61,8 +61,9 @@ object Verify {
       // don't accumulate storage blocks (same isolation as Bench).
       spark.sharedState.cacheManager.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      // memory-sink stream tables are temp views holding drained rows on
-      // the driver — drop them so 268 sequential queries don't accumulate
+      // drop temp views a query leaves behind (q_sql_gateway registers
+      // some; the stream drains keep theirs on a session clone) so the
+      // sequential queries don't accumulate them
       spark.catalog.listTables().collect().filter(_.isTemporary)
         .foreach(tv => spark.catalog.dropTempView(tv.name))
     }

@@ -224,11 +224,13 @@ object Streaming {
         GroupStateTimeout.NoTimeout())(walk)
   }
 
-  /** State-store scale configuration, applied BEFORE the first query
-    * starts (the stateful shuffle width is frozen into the checkpoint):
-    * RocksDB-backed state keeps large keyed state (hundreds of millions of
-    * live sessions / dedup keys) off the executor heap with incremental
-    * checkpointing — the 100 TB-stream setting, where the default in-memory
+  /** State-store scale configuration, returned as a clone of `spark` that
+    * carries it ([[graft.util.Sessions.scoped]]; `spark` is left unchanged):
+    * start the streams on the returned session (the stateful shuffle width
+    * is frozen into the checkpoint at the first start). RocksDB-backed
+    * state keeps large keyed state (hundreds of millions of live sessions
+    * / dedup keys) off the executor heap with incremental checkpointing —
+    * the 100 TB-stream setting, where the default in-memory
     * HDFSBackedStateStore would OOM or GC-thrash. `shufflePartitions` sizes
     * the stateful operator's parallelism: wide enough that each partition's
     * state fits the store's memtable budget, narrow enough that per-batch
@@ -236,11 +238,12 @@ object Streaming {
     * 8; a 1000-executor cluster runs thousands).
     */
   def scaleStateStore(spark: SparkSession, shufflePartitions: Int = 32,
-      rocksDb: Boolean = true): Unit = {
-    if (rocksDb)
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      rocksDb: Boolean = true): SparkSession = {
+    val rocks = if (!rocksDb) Nil else Seq(
+      "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
+    graft.util.Sessions.scoped(spark,
+      ("spark.sql.shuffle.partitions" -> shufflePartitions.toString) +: rocks: _*)(identity)
   }
 
   /** Source wiring: a parquet directory tailed as a stream (schema from the

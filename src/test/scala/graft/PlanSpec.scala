@@ -226,16 +226,8 @@ class PlanSpec extends SparkTestBase {
 
   test("runtime bloom filter lands on the fact side when broadcast is off") {
     // the registered q_runtime_filter materializes inside this conf scope
-    // (planning-time confs); the plan pin re-creates the same scope here
-    val s = spark
-    val keys = Seq("spark.sql.optimizer.runtime.bloomFilter.enabled",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
-    val prev = keys.map(k => k -> s.conf.getOption(k)).toMap
-    try {
-      s.conf.set(keys(0), "true"); s.conf.set(keys(1), "0")
-      s.conf.set(keys(2), "-1"); s.conf.set(keys(3), "-1")
+    // (planning-time confs); the plan pin runs under the same conf set
+    graft.util.Sessions.scoped(spark, SparkEntry.RuntimeFilterConfs: _*) { s =>
       val sel = s.read.parquet(s"$dir/orders.parquet")
         .filter(org.apache.spark.sql.functions.col("o_orderpriority") === "1-URGENT")
         .select("o_orderkey")
@@ -248,8 +240,6 @@ class PlanSpec extends SparkTestBase {
       val p = df.queryExecution.executedPlan.toString
       assert(p.contains("might_contain"),
         p.linesIterator.take(25).mkString("\n"))
-    } finally prev.foreach { case (k, v) =>
-      v.fold(s.conf.unset(k))(v2 => s.conf.set(k, v2))
     }
   }
 

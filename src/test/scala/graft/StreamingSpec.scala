@@ -202,36 +202,28 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("sessionizer runs unchanged on the RocksDB state store (scale config)") {
-    implicit val sqlCtx = spark.sqlContext
-    val prevProv = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      Streaming.scaleStateStore(spark, shufflePartitions = 4)
-      val input = MemoryStream[Event]
-      val query = Streaming.sessionize(input.toDS(), gapMinutes = 30, watermark = "0 minutes")
-        .writeStream.format("memory").queryName("sessions_rocks")
-        .outputMode(OutputMode.Append()).start()
-      input.addData(
-        Event(1L, 1L, ts(1000), "click", 1.0),
-        Event(2L, 1L, ts(1010), "click", 2.0),
-        Event(3L, 2L, ts(1005), "view", 1.0))
-      query.processAllAvailable()
-      input.addData(Event(9L, 99L, ts(5000), "z", 0.0))
-      query.processAllAvailable()
-      input.addData(Event(10L, 98L, ts(9000), "z", 0.0))
-      query.processAllAvailable()
-      query.stop()
-      val sessions = spark.table("sessions_rocks").as[Session].collect()
-        .filter(_.user_id <= 2L)
-      assert(sessions.map(s => (s.user_id, s.n_events, s.total_value)).toSet ==
-        Set((1L, 2L, 3.0), (2L, 1L, 1.0)))
-    } finally {
-      prevProv match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None    => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    }
+    val scaled = Streaming.scaleStateStore(spark, shufflePartitions = 4)
+    implicit val sqlCtx = scaled.sqlContext
+    val input = MemoryStream[Event]
+    val query = Streaming.sessionize(input.toDS(), gapMinutes = 30, watermark = "0 minutes")
+      .writeStream.format("memory").queryName("sessions_rocks")
+      .outputMode(OutputMode.Append()).start()
+    input.addData(
+      Event(1L, 1L, ts(1000), "click", 1.0),
+      Event(2L, 1L, ts(1010), "click", 2.0),
+      Event(3L, 2L, ts(1005), "view", 1.0))
+    query.processAllAvailable()
+    input.addData(Event(9L, 99L, ts(5000), "z", 0.0))
+    query.processAllAvailable()
+    input.addData(Event(10L, 98L, ts(9000), "z", 0.0))
+    query.processAllAvailable()
+    query.stop()
+    val sessions = scaled.table("sessions_rocks").as[Session].collect()
+      .filter(_.user_id <= 2L)
+    assert(sessions.map(s => (s.user_id, s.n_events, s.total_value)).toSet ==
+      Set((1L, 2L, 3.0), (2L, 1L, 1.0)))
+    assert(scaled.conf.get("spark.sql.streaming.stateStore.providerClass")
+      .endsWith("RocksDBStateStoreProvider"))
   }
 
   test("streaming rollup agrees with the batch rollup on the same data") {
@@ -445,5 +437,26 @@ class StreamingSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(after2 == after1, "replay changed the published snapshot")
     assert(graft.io.Versioned.latestVersion(spark, store).contains(3))
+  }
+
+  test("a registry drain never writes the caller's confs or catalog") {
+    import scala.jdk.CollectionConverters._
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.checkpointLocation",
+      "spark.sql.streaming.noDataMicroBatches.enabled")
+    def confs(): Seq[Option[String]] = keys.map(spark.conf.getOption)
+    val before = confs()
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Seq[Option[String]]]()
+    @volatile var draining = true
+    // polls the caller's session from a second thread for the whole drain
+    val poller = new Thread(() => while (draining) { seen.add(confs()); Thread.sleep(1) })
+    poller.start()
+    val out = try SparkEntry.queries("s_rollup_stream")(spark, sf("sf0.001"))
+      finally { draining = false; poller.join() }
+    assert(seen.asScala.toSet == Set(before), s"caller's confs changed mid-drain: $seen")
+    assert(out.sparkSession eq spark)
+    val views = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name)
+    assert(!views.exists(_.startsWith("s_rollup_stream_")), views.mkString(", "))
+    assert(out.count() > 0)
   }
 }
