@@ -1,107 +1,32 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
-  /** Temp views a query leaves in the session are swept after it (a view
-    * can pin every row it was built from on the driver). The stream drains
-    * register their memory-sink views on a session clone, never here;
-    * `q_sql_gateway` still registers views on the caller's session.
-    */
-  private def dropTempViews(spark: SparkSession): Unit =
-    spark.catalog.listTables().collect()
-      .filter(_.isTemporary)
-      .foreach(t => spark.catalog.dropTempView(t.name))
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Same overrides as Verify: SPARK_GRAFT_MASTER for multi-process runs
-    // (local-cluster), SPARK_GRAFT_RELIABLE_CKPT for durable loop pins.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    // Shuffle width decouples from core count above sf0.1: per-task
-    // hash-aggregate state is (rows / partitions)-sized, so a 100x corpus
-    // on the same 32 partitions can exhaust task memory where 128+
-    // partitions stream through comfortably (observed: g_kcore at sf10).
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", shuffle)
-      // Giant local soaks (sf30: 180M-row lineitem in one 80g JVM) hit
-      // multi-minute full-GC pauses; at the 10s/120s defaults the in-JVM
-      // executor misses heartbeats, the driver evicts it, and the run
-      // dies mid-query ("Exit as unable to send heartbeats... more than
-      // 60 times" — observed at the sf30 pair-set rows). Heartbeats in
-      // local mode are intra-JVM bookkeeping, so long timeouts cost
-      // nothing and keep the measurement alive through GC.
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-    if (master.startsWith("local-cluster"))
-      builder.config("spark.executor.extraClassPath", sys.props("java.class.path"))
-    // Multi-process soaks need executor-sized heaps: local-cluster's
-    // bracket arg caps the WORKER, but spark.executor.memory still
-    // defaults to 1g — the sf30 fourth-decade re-measure runs e.g.
-    // local-cluster[4,8,20480] with SPARK_GRAFT_EXEC_MEM=18g.
-    sys.env.get("SPARK_GRAFT_EXEC_MEM").foreach { m =>
-      builder.config("spark.executor.memory", m)
-    }
-    sys.env.get("SPARK_GRAFT_RELIABLE_CKPT").foreach { _ =>
-      builder.config("graft.checkpoint.reliable", "true")
-    }
-    // Memory-constrained probes: serialized (and, with RDD_COMPRESS,
-    // compressed) local pins — see Checkpoints.StorageConf.
-    sys.env.get("SPARK_GRAFT_CKPT_STORAGE").foreach { lvl =>
-      builder.config(graft.util.Checkpoints.StorageConf, lvl)
-    }
-    sys.env.get("SPARK_GRAFT_RDD_COMPRESS").foreach { v =>
-      builder.config("spark.rdd.compress", v)
-    }
-    // Streaming state observability (the SCALING streaming-decade soaks):
-    // SPARK_GRAFT_STREAM_STATS=1 logs every micro-batch's state-store
-    // rows/memory per stateful operator to stderr — the state GROWTH curve
-    // that wall-clock timings cannot see. Registered through the static
-    // conf, not `spark.streams.addListener`: the drains run on session
-    // clones, each with its own query manager, and only the static conf
-    // reaches those.
-    sys.env.get("SPARK_GRAFT_STREAM_STATS").foreach { _ =>
-      builder.config("spark.sql.streaming.streamingQueryListeners",
-        classOf[StreamStateLog].getName)
-    }
-    val spark = builder
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE sort-merge -> shuffled-hash rewrite knob (opt guide §3.1).
-      // Default OFF: the round-12 A/B (OPTIMIZATION_r12.md) measured real
-      // wins on the star-schema joins (q3 -45%, q18 -40%) but 1.6-4.9x
-      // REGRESSIONS on the posting-list self-join family (hash-building
-      // hot duplicate keys loses to the streaming merge), so a blanket
-      // rewrite is net-negative on this workload. The env knob stays for
-      // star-schema-heavy deployments (e.g. "128m").
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "0"))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // Session settings are Spark's own confs, set with -D or
+    // spark-submit --conf (see Sessions.recipe for the defaults):
+    //  - spark.master: 'local-cluster[…]' for multi-process runs;
+    //  - spark.sql.shuffle.partitions: above sf0.1 per-task hash-aggregate
+    //    state is rows/partitions-sized, so a 100x corpus wants 128+
+    //    partitions (observed: g_kcore at sf10);
+    //  - spark.executor.memory: local-cluster's bracket caps the worker,
+    //    but executors still default to 1g;
+    //  - spark.checkpoint.dir plus graft.checkpoint.reliable=true: durable
+    //    loop pins (see Checkpoints);
+    //  - graft.checkpoint.storage and spark.rdd.compress: serialized pins;
+    //  - spark.sql.streaming.streamingQueryListeners=graft.StreamStateLog:
+    //    one state-store line per micro-batch.
+    val spark = graft.util.Sessions.start("graft-bench", graft.io.EventTs.NanosAsLong)
     spark.sparkContext.setLogLevel("WARN")
-    sys.env.get("SPARK_GRAFT_RELIABLE_CKPT").foreach { d =>
-      spark.sparkContext.setCheckpointDir(d)
-    }
     // Untimed JVM/codegen warmup so per-query numbers measure steady-state
     // plans, not first-query JIT (the first timed query used to absorb
     // ~4s of warmup regardless of which query it was).
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
     SparkEntry.queries("q1_pricing_summary")(spark, sfDir).count()
-    // Optional comma-separated query filter for targeted local timing runs
-    // (absent → the full registry, which is what the driver measures).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val failed = scala.collection.mutable.ListBuffer.empty[String]
     // One isolated, timed execution of query `name` (cleanup included) —
-    // the unit both the full pass and the retry loop are built from.
-    // Isolation between queries: iterative operators localCheckpoint
-    // working frames whose final round outlives the query (the returned
-    // plan reads it). Dropping all persisted blocks keeps query N's
-    // residue from shrinking query N+1's storage/execution memory — each
-    // timed query starts from the same clean JVM state.
+    // the unit both the full pass and the retry loop are built from. The
+    // cleanup keeps query N's residue from shrinking query N+1's
+    // storage/execution memory.
     def timeOne(name: String, label: String): (Double, Boolean) = {
       val t0 = System.nanoTime()
       val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
@@ -115,16 +40,14 @@ object Bench {
       // SFs a single degenerating query can run for minutes — the log shows
       // WHICH one without waiting for the final line.
       System.err.println(f"[bench] $label$name%-28s $dt%8.2fs")
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      dropTempViews(spark)
+      graft.util.Sessions.clearQueryState(spark)
       (dt, ok)
     }
     // Sorted order: Map iteration order reshuffles whenever the registry
     // grows, which makes per-query times incomparable across rounds (each
     // query's number depends on what ran before it).
     val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(name => only.forall(_.contains(name)))
+      .filter(SparkEntry.only())
     def runPass(label: String): Seq[(String, Double, Boolean)] =
       names.map { name =>
         val (dt, ok) = timeOne(name, label)
@@ -197,7 +120,7 @@ object Bench {
       val outDir = java.nio.file.Paths.get(
         sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench"))
       java.nio.file.Files.createDirectories(outDir)
-      val host = s""""host":{"master":"$master","cpus":"$cpus","jvm_max_mem_mb":${Runtime.getRuntime.maxMemory / (1024 * 1024)},"available_processors":${Runtime.getRuntime.availableProcessors()},"date":"$day","passes":$passes}"""
+      val host = s""""host":{"master":"${spark.sparkContext.master}","cpus":"${spark.sparkContext.defaultParallelism}","jvm_max_mem_mb":${Runtime.getRuntime.maxMemory / (1024 * 1024)},"available_processors":${Runtime.getRuntime.availableProcessors()},"date":"$day","passes":$passes}"""
       val full = line.dropRight(1) + "," + host + "}\n"
       // SPARK_GRAFT_BENCH_TAG names an artifact of record (e.g.
       // `r12_closing`) — deterministic path, overwrite allowed (re-running
@@ -248,8 +171,11 @@ object Bench {
 }
 
 /** `[stream-state]` stderr line per micro-batch with stateful operators:
-  * state-store rows and memory per operator (SPARK_GRAFT_STREAM_STATS=1;
-  * digested by tools/stream_state_report.py). Attribution: the bench runs
+  * state-store rows and memory per operator. Enable it with
+  * `-Dspark.sql.streaming.streamingQueryListeners=graft.StreamStateLog`
+  * (the static conf reaches the drains' session clones, which a listener
+  * added with `spark.streams.addListener` does not); digested by
+  * tools/stream_state_report.py. Attribution: the bench runs
   * queries serially and prints each query's line to the same stderr, so
   * state lines sit above the query that drained them.
   */

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Plan-evidence dumper for optimization rounds: writes
@@ -21,16 +20,7 @@ object ExplainDump {
     val (Array(sfDir, outDir, suffix, names), executed) =
       if (args.length >= 5 && args(4) == "executed") (args.take(4), true)
       else (args, false)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.util.Sessions.start("graft-explain", graft.io.EventTs.NanosAsLong)
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     // A typo'd query name or a planning failure must fail the RUN, not
@@ -56,6 +46,7 @@ object ExplainDump {
         System.err.println(s"[explain] $name FAILED: ${e.getMessage}")
         failed += name
       }
+      graft.util.Sessions.clearQueryState(spark)
     }
     spark.stop()
     if (failed.nonEmpty) {

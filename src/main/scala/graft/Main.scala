@@ -150,20 +150,8 @@ object Main {
     // Fail invalid flag combinations BEFORE paying SparkSession startup
     // (run() re-validates for callers that drive it directly).
     validateConfigFlags(opts)
-    val builder = SparkSession.builder()
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE SMJ->SHJ rewrite, same setting as Bench (opt guide §3.1)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "0"))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-    // spark-submit provides spark.master; default to local[*] otherwise
-    val spark = (if (sys.props.contains("spark.master")) builder
-      else builder.master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]")))
-      .getOrCreate()
+    // spark-submit's --master and --conf values override the defaults
+    val spark = graft.util.Sessions.start("graft")
     // try/finally: a throwing run must still release the session (its
     // exception propagates as the process exit, matching the old behavior)
     val report = try run(spark, opts) finally spark.stop()

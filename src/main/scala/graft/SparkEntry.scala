@@ -7143,6 +7143,12 @@ object SparkEntry {
 
   // ------------------------------------------------------------------
 
+  /** The rows Bench and Verify run: those named in `SPARK_GRAFT_ONLY`
+    * (comma-separated) for a targeted run, every row when it is unset.
+    */
+  def only(raw: Option[String] = sys.env.get("SPARK_GRAFT_ONLY")): String => Boolean =
+    raw.fold[String => Boolean](_ => true)(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "p_pipeline_idempotence" -> (pPipelineIdempotence _),
     "p_branch_registry" -> (pBranchRegistry _),

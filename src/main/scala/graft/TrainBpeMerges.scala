@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-time generator for [[graft.functions.TrainedBpeMerges]]: computes the
@@ -13,18 +12,16 @@ import org.apache.spark.sql.functions._
   * table and a cluster deployment ships the tokenizer as a small versioned
   * artifact (the same freeze-and-ship pattern as [[TrainIvfCentroids]]).
   *
-  * Usage: runMain graft.TrainBpeMerges /root/testdata/sf0.01 [numMerges]
+  * Usage: sbt 'runMain graft.TrainBpeMerges /root/testdata/sf0.01 [numMerges]'
+  *
+  * The word counts are exact integers in a fixed order, so any master
+  * regenerates the same literals.
   */
 object TrainBpeMerges {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val numMerges = args.lift(1).map(_.toInt).getOrElse(40)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.util.Sessions.start("graft-train-bpe", graft.io.EventTs.NanosAsLong)
     try {
       val freqs = spark.read.parquet(s"$dir/documents.parquet")
         .select(explode(graft.functions.TextAnalysis.tokens(col("text"))).as("w"))

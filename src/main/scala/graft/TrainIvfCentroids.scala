@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-time generator for [[graft.operators.TrainedCentroids]]: runs
   * spherical k-means ([[graft.operators.Similarity.trainCentroids]]) over an
   * embeddings table and prints the centroid literals to paste into
@@ -12,17 +10,15 @@ import org.apache.spark.sql.SparkSession
   * versioned artifact instead of retraining per job (the 100 TB practice:
   * train on a sample, freeze, assign).
   *
-  * Usage: runMain graft.TrainIvfCentroids /root/testdata/sf0.01
+  * Usage: sbt 'runMain graft.TrainIvfCentroids /root/testdata/sf0.01'
   */
 object TrainIvfCentroids {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.util.Sessions.start("graft-train-ivf",
+      // the frozen literals were trained at local[8]; the float avg order
+      // depends on partitioning
+      "spark.master" -> "local[8]", graft.io.EventTs.NanosAsLong)
     try {
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       val centroids = graft.operators.Similarity.trainCentroids(

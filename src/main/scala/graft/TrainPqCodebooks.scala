@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-time generator for [[graft.operators.TrainedPq]]: trains the PQ
   * sub-quantizer codebooks ([[graft.operators.Pq.trainCodebooks]]) over an
   * embeddings table and prints the literals to paste into
@@ -11,17 +9,15 @@ import org.apache.spark.sql.SparkSession
   * encode/ADC arithmetic, and a cluster run ships codebooks as a tiny
   * versioned artifact instead of retraining per job.
   *
-  * Usage: runMain graft.TrainPqCodebooks /root/testdata/sf0.01
+  * Usage: sbt 'runMain graft.TrainPqCodebooks /root/testdata/sf0.01 [--residual]'
   */
 object TrainPqCodebooks {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.util.Sessions.start("graft-train-pq",
+      // the frozen literals were trained at local[8]; the float avg order
+      // depends on partitioning
+      "spark.master" -> "local[8]", graft.io.EventTs.NanosAsLong)
     try {
       val emb0 = spark.read.parquet(s"$dir/embeddings.parquet")
       // --residual: train on (vector - nearest trained centroid) — the

@@ -23,6 +23,15 @@ import org.apache.spark.sql.types.LongType
   */
 object EventTs {
 
+  /** The session conf that lets a TIMESTAMP(NANOS) `ts` load at all (as
+    * an ns-epoch BIGINT; without it the read fails with
+    * `PARQUET_TYPE_ILLEGAL`). Every main that reads the registry's tables
+    * passes it to [[graft.util.Sessions.start]]. `graft.Main` does not:
+    * there a NANOS source column would upload epoch-ns numbers as
+    * conversion times instead of failing.
+    */
+  val NanosAsLong: (String, String) = "spark.sql.legacy.parquet.nanosAsLong" -> "true"
+
   /** `ts` as an ns-epoch long, whatever the parquet encoding was. */
   def toNsLong(df: DataFrame): DataFrame = df.schema("ts").dataType match {
     case LongType => df

@@ -17,7 +17,7 @@ import org.apache.spark.sql.Dataset
   *   - default: `localCheckpoint(eager)` — single-JVM / reliable-executor
   *     clusters, zero I/O;
   *   - `graft.checkpoint.reliable=true` (SQL conf, settable per session):
-  *     `checkpoint(eager)` against `SparkContext.setCheckpointDir`, which
+  *     `checkpoint(eager)` against `spark.checkpoint.dir`, which
   *     must point at storage that survives executor loss (HDFS/object
   *     store on a cluster). Missing checkpoint dir fails fast with an
   *     actionable message rather than Spark's late SparkException.
@@ -50,9 +50,10 @@ object Checkpoints {
       if (reliable(ds)) {
         val sc = ds.sparkSession.sparkContext
         require(sc.getCheckpointDir.isDefined,
-          s"$ReliableConf=true requires a checkpoint directory: call " +
-            "SparkContext.setCheckpointDir(<fault-tolerant path>) before " +
-            "running iterative operators (HDFS/object store on a cluster)")
+          s"$ReliableConf=true requires a checkpoint directory: set " +
+            "spark.checkpoint.dir or call SparkContext.setCheckpointDir(" +
+            "<fault-tolerant path>) before running iterative operators " +
+            "(HDFS/object store on a cluster)")
         ds.checkpoint(eager)
       } else ds.sparkSession.conf.getOption(StorageConf) match {
         case Some(lvl) =>

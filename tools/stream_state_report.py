@@ -1,5 +1,6 @@
 #!/usr/bin/env python3
-"""Digest a Bench stderr log (SPARK_GRAFT_STREAM_STATS=1) into a per-query
+"""Digest a Bench stderr log (run with
+-Dspark.sql.streaming.streamingQueryListeners=graft.StreamStateLog) into a per-query
 state-store table: batches seen, peak state rows, peak state memory, and
 the per-batch row trajectory — the growth curve the wall-clock timings
 cannot see. Attribution: the bench runs queries serially and prints
