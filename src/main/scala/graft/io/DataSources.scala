@@ -46,19 +46,18 @@ object DataSources {
     */
   def retrieveData(spark: SparkSession, ds: DataSource, dt: DestinationType,
       transactional: TransactionalType): DataFrame = {
-    val raw = ds.format match {
-      case "csv"     => DataReaders.readCsv(spark, ds.path, dt)
-      case "parquet" => DataReaders.readParquet(spark, ds.path, dt)
-      case "orc"     => DataReaders.readOrc(spark, ds.path, dt)
-      // The connector plug point: any other format name dispatches straight
-      // to spark.read.format(...) — "json" in tests proves the seam; in a
-      // cluster deployment "bigquery" (connector on the classpath, path =
-      // dataset.table via bqPathFor identity) takes the identical path.
-      // Pruning happens immediately after the scan, so DSv2 sources receive
-      // the column projection through Catalyst as usual.
-      case other =>
-        DestinationSchemas.prune(spark.read.format(other).load(ds.path), dt)
-    }
+    // Every source is one DataFrame scan, pruned right after the read so
+    // Catalyst pushes the column projection into the format reader (parquet
+    // and ORC `ReadSchema`, DSv2 sources alike). Any Spark format name plugs
+    // in here: "json" in tests proves the seam, and in a cluster deployment
+    // "bigquery" (connector on the classpath, path = dataset.table via
+    // bqPathFor) takes the same path. CSV reads with a header and no schema
+    // inference, so every column is a string until the cast below (the
+    // reference's `dtype='string'` pandas read, `file_data_source.py:202-219`);
+    // empty strings read as nulls, like its NaN→None normalization.
+    val reader = spark.read.format(ds.format)
+    val raw = DestinationSchemas.prune(
+      (if (ds.format == "csv") reader.option("header", "true") else reader).load(ds.path), dt)
     val cols = raw.columns.toSeq
     if (!DestinationSchemas.validateDataColumns(cols, dt))
       throw new IllegalArgumentException(DestinationSchemas.errorMessage(cols, dt))

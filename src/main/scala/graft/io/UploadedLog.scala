@@ -1,58 +1,9 @@
 package graft.io
 
-import graft.model.{DestinationType, TransactionalType}
-import graft.schema.DestinationSchemas
+import graft.model.TransactionalType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
-
-/** Data-plane readers (SURVEY §2.2).
-  *
-  * The reference reads sources row-by-row into Python lists
-  * (`/root/reference/megalista_dataflow/data_sources/big_query/
-  * big_query_data_source.py:67-71`); here every source is a DataFrame scan
-  * with column pruning pushed to the format reader (parquet `ReadSchema` /
-  * csv `usecols` equivalent), which is what survives a 100 TB scale-up.
-  */
-object DataReaders {
-
-  /** Parquet scan + schema-regex pruning (reference
-    * `data_sources/file/file_data_source.py:182-200`). The `.select` makes
-    * Catalyst prune the scan to the matched columns only.
-    */
-  def readParquet(spark: SparkSession, path: String, dt: DestinationType): DataFrame =
-    DestinationSchemas.prune(spark.read.parquet(path), dt)
-
-  /** CSV scan with ALL-STRING schema (mirrors the reference's
-    * `dtype='string'` pandas read, `file_data_source.py:202-219`), pruned and
-    * then cast per schema. Empty strings read as nulls, matching the NaN→None
-    * normalization at `file_data_source.py:62,85`.
-    */
-  def readCsv(spark: SparkSession, path: String, dt: DestinationType): DataFrame = {
-    // without inferSchema the csv reader already yields every column as
-    // StringType — one read, no second header-scan to rebuild the schema
-    val df = spark.read.option("header", "true").csv(path)
-    DestinationSchemas.castNonString(DestinationSchemas.prune(df, dt), dt)
-  }
-
-  /** ORC scan + schema-regex pruning. Beyond the reference's csv/parquet
-    * pair (`file_data_source.py:182-219`): ORC is the other columnar
-    * landing format a warehouse hands us; same pruning/pushdown contract as
-    * parquet (Catalyst pushes `ReadSchema`/`PushedFilters` to the ORC
-    * reader).
-    */
-  def readOrc(spark: SparkSession, path: String, dt: DestinationType): DataFrame =
-    DestinationSchemas.prune(spark.read.orc(path), dt)
-
-  /** JSON-lines scan with an explicit schema (schema inference reads the
-    * whole input TWICE — never at 100 TB; callers pass the schema or
-    * sample-derive it once). Pruned per destination schema like the other
-    * formats.
-    */
-  def readJsonLines(spark: SparkSession, path: String, schema: StructType,
-      dt: DestinationType): DataFrame =
-    DestinationSchemas.prune(spark.read.schema(schema).json(path), dt)
-}
 
 /** `_uploaded` control table on parquet (reference keeps it in BigQuery with
   * 15-day partition expiration, `big_query_data_source.py:118-148`, or as a

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.util.Checkpoints._
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.util.Checkpoints._
 
-import org.apache.spark.sql.{DataFrame, Column}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 

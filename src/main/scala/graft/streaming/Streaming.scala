@@ -405,8 +405,8 @@ object Streaming {
     * query's analyzed plan at start, so control rows appended later are
     * invisible to every subsequent micro-batch (and an in-place overwrite
     * breaks the running query outright; writebacks must append, as
-    * [[graft.io.DataReaders]]'s uploaded log does). To pick up a
-    * refreshed control table: restart the query (checkpointed restarts
+    * [[graft.io.UploadedLog]] does). To pick up a refreshed control
+    * table: restart the query (checkpointed restarts
     * resume exactly), or move the anti-join into `foreachBatch`, where the
     * uploaded-side DataFrame is re-created — and its files re-listed — per
     * batch.

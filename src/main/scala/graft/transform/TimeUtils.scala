@@ -1,6 +1,6 @@
 package graft.transform
 
-import java.time.{Instant, LocalDateTime, ZoneId, ZoneOffset}
+import java.time.{LocalDateTime, ZoneId, ZoneOffset}
 import java.time.format.DateTimeFormatter
 
 /** Date/time scalars used by the sink payload renderers.

@@ -227,7 +227,7 @@ class PlanSpec extends SparkTestBase {
   test("runtime bloom filter lands on the fact side when broadcast is off") {
     // the registered q_runtime_filter materializes inside this conf scope
     // (planning-time confs); the plan pin runs under the same conf set
-    graft.util.Sessions.scoped(spark, SparkEntry.RuntimeFilterConfs: _*) { s =>
+    graft.util.Sessions.scoped(spark, graft.registry.QueryRows.RuntimeFilterConfs: _*) { s =>
       val sel = s.read.parquet(s"$dir/orders.parquet")
         .filter(org.apache.spark.sql.functions.col("o_orderpriority") === "1-URGENT")
         .select("o_orderkey")

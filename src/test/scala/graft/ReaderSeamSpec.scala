@@ -44,19 +44,13 @@ class ReaderSeamSpec extends SparkTestBase with BeforeAndAfterEach {
     val dir = java.nio.file.Files.createTempDirectory("graft_fmt").toString
     val src = spark.read.json(writeJsonSource(dir))
     src.write.mode("overwrite").orc(s"$dir/conv_orc")
-    val orc = graft.io.DataReaders.readOrc(spark, s"$dir/conv_orc",
-      DestinationType.AdsOfflineConversion)
-    assert(orc.columns.toSet == Set("gclid", "time", "amount"))
-    assert(orc.count() == 5)
-    val jsonl = graft.io.DataReaders.readJsonLines(spark, s"$dir/conversions.json",
-      src.schema, DestinationType.AdsOfflineConversion)
-    assert(jsonl.columns.toSet == Set("gclid", "time", "amount"))
-    assert(jsonl.count() == 5)
-    // the factory dispatches "orc" natively (not through the seam fallback)
-    val viaFactory = DataSources.retrieveData(spark,
-      DataSource("orc", s"$dir/conv_orc", s"$dir/up.parquet"),
-      DestinationType.AdsOfflineConversion, TransactionalType.NotTransactional)
-    assert(viaFactory.count() == 5)
+    // "orc" and "json" take the same spark.read.format path as parquet
+    for ((format, path) <- Seq("orc" -> s"$dir/conv_orc", "json" -> s"$dir/conversions.json")) {
+      val df = DataSources.retrieveData(spark, DataSource(format, path, s"$dir/up.parquet"),
+        DestinationType.AdsOfflineConversion, TransactionalType.NotTransactional)
+      assert(df.columns.toSet == Set("gclid", "time", "amount"), format)
+      assert(df.count() == 5, format)
+    }
   }
 
   test("BigQuery-typed source runs the full pipeline through an injected format") {
