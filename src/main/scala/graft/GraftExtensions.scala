@@ -20,7 +20,7 @@ import graft.functions.{Bpe, KernelExpressions => K, TrainedBpeMerges, VectorOps
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach(ext.injectFunction)
-    // engine-enforced backstop for oversized explicit broadcast() hints
+    // the one broadcast-size policy: strips oversized explicit broadcast() hints
     ext.injectOptimizerRule(graft.plans.BroadcastGuard)
     // whole-operator plans: native sort-merge as-of join
     ext.injectPlannerStrategy(_ => org.apache.spark.sql.graft.AsofStrategy)

@@ -33,10 +33,7 @@ final case class UploadedLog(spark: SparkSession, path: String, tt: Transactiona
       if (fs.exists(new org.apache.hadoop.fs.Path(path)))
         spark.read.schema(schema).parquet(path)
       else
-        // LocalRelation-backed empty frame: carries ACCURATE zero-size stats,
-        // so the downstream anti-join broadcast gate sees "tiny" (an
-        // emptyRDD-backed frame reports unknown/max size and would force the
-        // first run — no log yet — into a full shuffle of the source).
+        // first run, no log yet: an empty frame with the log's schema
         spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
     graft.transform.Transforms.retentionFilter(raw)
   }

@@ -196,7 +196,7 @@ object Versioned {
   /** Snapshot read with every delete vector of that version applied: the
     * union of delete-key batches anti-joins the base in ONE pass (deletes
     * are per-person-sized, the base is per-event-sized, so the key set
-    * broadcasts under the standard size gate).
+    * broadcasts).
     */
   def readMergeOnRead(spark: SparkSession, path: String, keyCols: Seq[String],
       version: Option[Int] = None): DataFrame = {
@@ -208,11 +208,7 @@ object Versioned {
     else {
       val dels = spark.read.parquet(dvDir(path, v))
         .select(keyCols.map(col): _*).distinct()
-      val hinted =
-        if (dels.queryExecution.optimizedPlan.stats.sizeInBytes <=
-            BigInt(graft.transform.Transforms.BroadcastGateBytes)) broadcast(dels)
-        else dels
-      base.join(hinted, keyCols, "left_anti")
+      base.join(broadcast(dels), keyCols, "left_anti")
     }
   }
 }

@@ -53,8 +53,8 @@ object Dedup {
     * the batch is then deduped internally (keep min id per digest); the
     * survivors' digests append to the log. Exactly the `_uploaded`
     * anti-join shape applied to content: the log carries fixed-width
-    * digests only — never text — and the anti-join broadcast is size-gated
-    * the same way. The result is materialized (localCheckpoint) BEFORE the
+    * digests only — never text — and the anti-join broadcasts the log the
+    * same way. The result is materialized (localCheckpoint) BEFORE the
     * log append, so consuming the returned frame after the append cannot
     * re-read the updated log and filter everything out.
     *

@@ -22,7 +22,7 @@ import graft.functions.KernelExpressions
   * Scale shape (100 TB): the model is ONE map-side-combinable aggregation
   * into `width` buckets (KBs, independent of corpus size — the conditional
   * count rides the same shuffle as the raw count via a `when` sum), the
-  * scoring join is broadcast under the size gate, and the corpus text is
+  * scoring join broadcasts the model, and the corpus text is
   * read once per phase with only (id, bucket) rows ever shuffled.
   */
 object Importance {
@@ -47,16 +47,14 @@ object Importance {
     * @return (id, n_tokens, dsir_score)
     */
   def dsirWeights(docs: DataFrame, idCol: String, textCol: String,
-      isTarget: Column, width: Int = 1024,
-      broadcastGateBytes: Long = graft.transform.Transforms.BroadcastGateBytes): DataFrame = {
+      isTarget: Column, width: Int = 1024): DataFrame = {
     val occ = bucketed(docs, idCol, textCol, isTarget, width)
     val model = occ.groupBy(col("b"))
       .agg(count(lit(1)).as("rc"),
         sum(when(col("tgt"), 1L).otherwise(0L)).as("tc"))
       .select(col("b"), expr(s"(tc + 1) * $Scale div (rc + 1)").as("term"))
-    val m = Similarity.gatedBroadcast(model, broadcastGateBytes)
     // every observed bucket is in the model by construction => inner join
-    val scored = occ.join(m, Seq("b"))
+    val scored = occ.join(broadcast(model), Seq("b"))
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_tokens"), sum(col("term")).as("s"))
       .select(col("id"), col("n_tokens"), expr("s div n_tokens").as("dsir_score"))

@@ -149,9 +149,8 @@ object Marketing {
     * `q_rfm_histogram`) whose only semantic difference is at quintile
     * ties (histogram: tied metric values share a score; ntile: ties
     * split by customer key). The gate is one extra count() action at
-    * customer grain (the same size-gated pattern as
-    * `Similarity.gatedBroadcast`) — cheap next to the global sort it
-    * guards, and above the bound the histogram path dominates anyway.
+    * customer grain — cheap next to the global sort it guards, and above
+    * the bound the histogram path dominates anyway.
     *
     * @return (r_score, f_score, m_score, n_customers, avg_monetary,
     *         total_monetary) — one row per populated RFM cell

@@ -22,7 +22,7 @@ import graft.functions.KernelExpressions
   * over exploded (lang, c1, c2) hashes — the model is bounded by
   * |alphabet|² × languages (KBs, independent of corpus size; train on the
   * full corpus or a [[graft.transform.Transforms]]-style stratified
-  * sample). Scoring is one narrow kernel pass + a broadcast-gated model
+  * sample). Scoring is one narrow kernel pass + a broadcast model
   * join + a per-document aggregate: the corpus text is read once and never
   * shuffled.
   */
@@ -75,18 +75,14 @@ object NgramLm {
     * its bigram terms (unseen bigrams contribute 0 — scoring a corpus
     * against another corpus's model is the decontamination-adjacent use).
     * Docs shorter than two characters score (n_bigrams = 0, lm_score = 0).
-    * The model join is broadcast under the size gate; above it (it never
-    * is, but the gate is uniform policy) the join shuffles on the hash key.
+    * The model join is broadcast; [[graft.plans.BroadcastGuard]] may drop
+    * the hint on an oversized model, and the join then shuffles on the
+    * hash key.
     */
   def lmScore(docs: DataFrame, idCol: String, langCol: String, textCol: String,
-      model: DataFrame,
-      broadcastGateBytes: Long = graft.transform.Transforms.BroadcastGateBytes): DataFrame = {
-    val m =
-      if (model.queryExecution.optimizedPlan.stats.sizeInBytes <=
-          BigInt(broadcastGateBytes)) broadcast(model)
-      else model
+      model: DataFrame): DataFrame = {
     val scored = occurrences(docs, idCol, langCol, textCol)
-      .join(m, Seq("lang", "h1", "h2"), "left")
+      .join(broadcast(model), Seq("lang", "h1", "h2"), "left")
       .groupBy(col("id"), col("lang"))
       .agg(count(lit(1)).as("n_bigrams"),
         sum(coalesce(col("term"), lit(0L))).as("s"))

@@ -68,22 +68,21 @@ object Pq {
     graft.functions.KernelExpressions.pqAdc(codes, qVec, codebooks)
 
   /** Top-k by ADC distance: encode the corpus (narrow scan), broadcast the
-    * query side under the size gate, rank ascending. The flat code scan is
-    * the documented small-query-set shape (the PQ point is that the scan
-    * reads codes, not vectors); corpus-vs-corpus retrieval should gate off
-    * the broadcast and/or add IVF cells.
+    * query side, rank ascending. The flat code scan is the documented
+    * small-query-set shape (the PQ point is that the scan reads codes, not
+    * vectors); an oversized query side loses the hint to
+    * [[graft.plans.BroadcastGuard]], and corpus-vs-corpus retrieval should
+    * add IVF cells.
     */
   def pqTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-      vecCol: String, codebooks: Seq[Seq[Seq[Double]]], k: Int = 10,
-      broadcastGateBytes: Long = graft.transform.Transforms.BroadcastGateBytes): DataFrame = {
+      vecCol: String, codebooks: Seq[Seq[Seq[Double]]], k: Int = 10): DataFrame = {
     val c = corpus.select(col(idCol).as("neighbor_id"),
       encodeExpr(col(vecCol), codebooks).as("codes"))
     val q = queries.select(col(idCol).as("query_id"),
       col(vecCol).cast("array<double>").as("q_vec"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(round(col("adist"), 6).asc, col("neighbor_id"))
-    c.join(Similarity.gatedBroadcast(q, broadcastGateBytes),
-        col("query_id") =!= col("neighbor_id"))
+    c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
       .withColumn("adist", adcDistanceExpr(col("codes"), col("q_vec"), codebooks))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
@@ -103,13 +102,11 @@ object Pq {
     */
   def ivfPqTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, centroids: Seq[Seq[Double]],
-      codebooks: Seq[Seq[Seq[Double]]], k: Int = 10, nprobe: Int = 2,
-      broadcastGateBytes: Long = graft.transform.Transforms.BroadcastGateBytes): DataFrame = {
+      codebooks: Seq[Seq[Seq[Double]]], k: Int = 10, nprobe: Int = 2): DataFrame = {
     val c = corpus.select(col(idCol).as("neighbor_id"),
       element_at(Similarity.nearestCells(col(vecCol), centroids, 1), 1).as("cell"),
       encodeExpr(col(vecCol), codebooks).as("codes"))
-    rankCoded(c, queries, idCol, vecCol, centroids, codebooks, k, nprobe,
-      broadcastGateBytes)
+    rankCoded(c, queries, idCol, vecCol, centroids, codebooks, k, nprobe)
   }
 
   /** Probe + ADC-rank a (neighbor_id, cell, codes) corpus — shared by the
@@ -117,15 +114,14 @@ object Pq {
     */
   private def rankCoded(c: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, centroids: Seq[Seq[Double]],
-      codebooks: Seq[Seq[Seq[Double]]], k: Int, nprobe: Int,
-      broadcastGateBytes: Long): DataFrame = {
+      codebooks: Seq[Seq[Seq[Double]]], k: Int, nprobe: Int): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"),
         col(vecCol).cast("array<double>").as("q_vec"),
         Similarity.nearestCells(col(vecCol), centroids, nprobe).as("cells"))
       .select(col("query_id"), col("q_vec"), explode(col("cells")).as("cell"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(round(col("adist"), 6).asc, col("neighbor_id"))
-    c.join(Similarity.gatedBroadcast(q, broadcastGateBytes), Seq("cell"))
+    c.join(broadcast(q), Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("adist", adcDistanceExpr(col("codes"), col("q_vec"), codebooks))
       .withColumn("rank", row_number().over(w).cast("long"))
@@ -157,8 +153,7 @@ object Pq {
     */
   def ivfPqResidualTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, centroids: Seq[Seq[Double]],
-      codebooks: Seq[Seq[Seq[Double]]], k: Int = 10, nprobe: Int = 2,
-      broadcastGateBytes: Long = graft.transform.Transforms.BroadcastGateBytes): DataFrame = {
+      codebooks: Seq[Seq[Seq[Double]]], k: Int = 10, nprobe: Int = 2): DataFrame = {
     val cen = typedLit(centroids)
     val c = corpus.select(col(idCol).as("neighbor_id"),
       element_at(Similarity.nearestCells(col(vecCol), centroids, 1), 1).as("cell"),
@@ -172,7 +167,7 @@ object Pq {
           (x, ctr) => x - ctr).as("q_res"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(round(col("adist"), 6).asc, col("neighbor_id"))
-    c.join(Similarity.gatedBroadcast(q, broadcastGateBytes), Seq("cell"))
+    c.join(broadcast(q), Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("adist", adcDistanceExpr(col("codes"), col("q_res"), codebooks))
       .withColumn("rank", row_number().over(w).cast("long"))
@@ -207,8 +202,7 @@ object Pq {
   def pqIndexTopK(spark: org.apache.spark.sql.SparkSession, queries: DataFrame,
       idCol: String, vecCol: String, centroids: Seq[Seq[Double]],
       codebooks: Seq[Seq[Seq[Double]]], path: String, k: Int = 10,
-      nprobe: Int = 2,
-      broadcastGateBytes: Long = graft.transform.Transforms.BroadcastGateBytes): DataFrame = {
+      nprobe: Int = 2): DataFrame = {
     // explicit read schema: the writer's sidecar when present, else a
     // 0-row projection of the query frame (see Similarity.ivfIndexTopK) —
     // an empty-corpus index has no data files under partitionBy and
@@ -220,8 +214,7 @@ object Pq {
           lit(0).cast("int").as("cell")).schema)
     val c = spark.read.schema(idxSchema).parquet(path)
       .select(col("neighbor_id"), col("codes"), col("cell").cast("int").as("cell"))
-    rankCoded(c, queries, idCol, vecCol, centroids, codebooks, k, nprobe,
-      broadcastGateBytes)
+    rankCoded(c, queries, idCol, vecCol, centroids, codebooks, k, nprobe)
   }
 
   /** Per-subspace L2 Lloyd training, one aggregation job per iteration for

@@ -18,35 +18,26 @@ import graft.functions.VectorOps
   *    (Hamming ≤ probeRadius on the signature), candidates ranked exactly.
   *    At 100 TB the corpus-side work is one signature projection + a
   *    bucket-keyed shuffle; no cross join.
+  *
+  * Every search hints its query side with a plain `broadcast(...)`.
+  * [[graft.plans.BroadcastGuard]] may drop the hint when that side is
+  * oversized, as in corpus-vs-corpus retrieval, where the "query set" is as
+  * large as the corpus: the join then falls back to a shuffle join on the
+  * signature / cell key instead of an OOM.
   */
 object Similarity {
 
   import graft.functions.KernelExpressions.vecCosine
 
-  /** Broadcast the query side of a candidate join only while its estimated
-    * size is under the gate (default [[graft.transform.Transforms.BroadcastGateBytes]]).
-    * A hardcoded hint OOMs corpus-vs-corpus retrieval, where the "query set"
-    * is as large as the corpus; above the gate the join is left unhinted —
-    * the signature / cell key is a plain equi-join key, so Spark falls back
-    * to a shuffle (hash or sort-merge) join, which is the correct plan for
-    * the large-query regime.
-    */
-  private[operators] def gatedBroadcast(df: DataFrame, gateBytes: Long): DataFrame = {
-    val estimatedBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (estimatedBytes <= BigInt(gateBytes)) broadcast(df) else df
-  }
-
   /** Exact top-k: queries × corpus cosine, rank per query.
-    * The query side is usually small; its broadcast rides the same size
-    * gate as every other operator (the round-3 lesson: a HARDCODED hint
-    * turns corpus-vs-corpus ground-truthing into an OOM, not a slow plan).
+    * The query side is usually small and broadcast; an oversized one loses
+    * the hint to [[graft.plans.BroadcastGuard]].
     */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-      vecCol: String, k: Int = 10,
-      broadcastGateBytes: Long = graft.transform.Transforms.BroadcastGateBytes): DataFrame = {
+      vecCol: String, k: Int = 10): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-    val scored = c.crossJoin(gatedBroadcast(q, broadcastGateBytes))
+    val scored = c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", vecCosine(col("q_vec"), col("c_vec")))
     val w = Window.partitionBy(col("query_id"))
@@ -62,14 +53,13 @@ object Similarity {
     * models, where cosine's normalization destroys the score): queries ×
     * corpus dot product through the codegen'd [[graft.functions
     * .KernelExpressions.vecDot]] kernel, ranked per query. Same
-    * size-gated broadcast and shuffle shape as [[bruteForceTopK]].
+    * query-side broadcast and shuffle shape as [[bruteForceTopK]].
     */
   def mipsTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-      vecCol: String, k: Int = 10,
-      broadcastGateBytes: Long = graft.transform.Transforms.BroadcastGateBytes): DataFrame = {
+      vecCol: String, k: Int = 10): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-    val scored = c.crossJoin(gatedBroadcast(q, broadcastGateBytes))
+    val scored = c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("dot", graft.functions.KernelExpressions.vecDot(col("q_vec"), col("c_vec")))
     val w = Window.partitionBy(col("query_id"))
@@ -141,8 +131,7 @@ object Similarity {
     */
   def srpTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, k: Int = 10, numPlanes: Int = 12, dim: Int = 64,
-      probeRadius: Int = 2,
-      broadcastGateBytes: Long = graft.transform.Transforms.BroadcastGateBytes): DataFrame = {
+      probeRadius: Int = 2): DataFrame = {
     val planes = VectorOps.rademacherPlanes(numPlanes, dim)
     def sig(v: org.apache.spark.sql.Column) = element_at(
       graft.functions.KernelExpressions.srpBucketKeys(v, planes, 1, numPlanes), 1)
@@ -154,7 +143,7 @@ object Similarity {
         explode(transform(typedLit(masks), m => col("q_sig").bitwiseXOR(m))))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
       .withColumn("c_sig", sig(col("c_vec")))
-    val candidates = c.join(gatedBroadcast(q, broadcastGateBytes),
+    val candidates = c.join(broadcast(q),
       col("probe_sig") === col("c_sig") && col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", vecCosine(col("q_vec"), col("c_vec")))
     val w = Window.partitionBy(col("query_id"))
@@ -260,11 +249,10 @@ object Similarity {
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, centroids: Seq[Seq[Double]], k: Int = 10,
-      nprobe: Int = 2,
-      broadcastGateBytes: Long = graft.transform.Transforms.BroadcastGateBytes): DataFrame = {
+      nprobe: Int = 2): DataFrame = {
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
       .withColumn("cell", element_at(nearestCells(col("c_vec"), centroids, 1), 1))
-    rankCells(queries, c, idCol, vecCol, centroids, k, nprobe, broadcastGateBytes)
+    rankCells(queries, c, idCol, vecCol, centroids, k, nprobe)
   }
 
   /** Materialized IVF index: the corpus written ONCE partitioned by coarse
@@ -366,8 +354,7 @@ object Similarity {
     */
   def ivfIndexTopK(spark: org.apache.spark.sql.SparkSession, queries: DataFrame,
       idCol: String, vecCol: String, centroids: Seq[Seq[Double]], path: String,
-      k: Int = 10, nprobe: Int = 2,
-      broadcastGateBytes: Long = graft.transform.Transforms.BroadcastGateBytes): DataFrame = {
+      k: Int = 10, nprobe: Int = 2): DataFrame = {
     assertCentroidManifest(spark, path, centroids)
     // explicit read schema: the writer's sidecar when present (the STORED
     // types — a float corpus stays readable under double queries), else a
@@ -380,7 +367,7 @@ object Similarity {
           lit(0).cast("int").as("cell")).schema)
     val c = spark.read.schema(idxSchema).parquet(path)
       .select(col("neighbor_id"), col("c_vec"), col("cell").cast("int").as("cell"))
-    rankCells(queries, c, idCol, vecCol, centroids, k, nprobe, broadcastGateBytes)
+    rankCells(queries, c, idCol, vecCol, centroids, k, nprobe)
   }
 
   /** Quantized flat search with exact rescore — the int8 compression
@@ -398,8 +385,7 @@ object Similarity {
     * [[ivfTopK]] cells when the corpus outgrows a flat scan.
     */
   def quantizedTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-      vecCol: String, k: Int = 10, candidates: Int = 30,
-      broadcastGateBytes: Long = graft.transform.Transforms.BroadcastGateBytes): DataFrame = {
+      vecCol: String, k: Int = 10, candidates: Int = 30): DataFrame = {
     import graft.functions.KernelExpressions.{dotLong, int8Quantize}
     val q8 = queries.select(col(idCol).as("query_id"),
       int8Quantize(col(vecCol)).as("q8"))
@@ -407,10 +393,8 @@ object Similarity {
       int8Quantize(col(vecCol)).as("c8"))
     val wq = Window.partitionBy(col("query_id"))
       .orderBy(col("qdot").desc, col("neighbor_id"))
-    // the flat scan is inherently a small-query-set operator, but the hint
-    // still size-gates (round-3 lesson: a hardcoded broadcast turns
-    // corpus-vs-corpus retrieval into an OOM, not a slow plan)
-    val cand = c8.crossJoin(gatedBroadcast(q8, broadcastGateBytes))
+    // the flat scan is inherently a small-query-set operator
+    val cand = c8.crossJoin(broadcast(q8))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("qdot", dotLong(col("q8"), col("c8")))
       .withColumn("crank", row_number().over(wq))
@@ -422,7 +406,7 @@ object Similarity {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(round(col("cosine"), 6).desc, col("neighbor_id"))
     cand.join(cv, Seq("neighbor_id"))
-      .join(gatedBroadcast(qv, broadcastGateBytes), Seq("query_id"))
+      .join(broadcast(qv), Seq("query_id"))
       .withColumn("cosine", vecCosine(col("q_vec"), col("c_vec")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -439,12 +423,11 @@ object Similarity {
     * for exact cosine ranking — the RaBitQ/binary-sketch retrieval baseline.
     * At 100 TB the packed corpus is what a flat scan reads (1/32 of the
     * float bytes), and the fetch-on-verify join touches only k·|queries|
-    * full vectors; the query side is size-gated broadcast like every flat
-    * scan in this module.
+    * full vectors; the query side is broadcast like every flat scan in
+    * this module.
     */
   def binaryTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-      vecCol: String, k: Int = 10, candidates: Int = 30,
-      broadcastGateBytes: Long = graft.transform.Transforms.BroadcastGateBytes): DataFrame = {
+      vecCol: String, k: Int = 10, candidates: Int = 30): DataFrame = {
     import graft.functions.KernelExpressions.{hammingLong, signBits}
     val qb = queries.select(col(idCol).as("query_id"),
       signBits(col(vecCol)).as("qb"))
@@ -452,7 +435,7 @@ object Similarity {
       signBits(col(vecCol)).as("cb"))
     val wq = Window.partitionBy(col("query_id"))
       .orderBy(col("hd").asc, col("neighbor_id"))
-    val cand = cb.crossJoin(gatedBroadcast(qb, broadcastGateBytes))
+    val cand = cb.crossJoin(broadcast(qb))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("hd", hammingLong(col("qb"), col("cb")))
       .withColumn("crank", row_number().over(wq))
@@ -463,7 +446,7 @@ object Similarity {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(round(col("cosine"), 6).desc, col("neighbor_id"))
     cand.join(cv, Seq("neighbor_id"))
-      .join(gatedBroadcast(qv, broadcastGateBytes), Seq("query_id"))
+      .join(broadcast(qv), Seq("query_id"))
       .withColumn("cosine", vecCosine(col("q_vec"), col("c_vec")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -483,8 +466,7 @@ object Similarity {
     * bit-stable cross-engine, like every float ranking in this module.
     */
   def truncatedTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-      vecCol: String, prefixDim: Int, k: Int = 10, candidates: Int = 30,
-      broadcastGateBytes: Long = graft.transform.Transforms.BroadcastGateBytes): DataFrame = {
+      vecCol: String, prefixDim: Int, k: Int = 10, candidates: Int = 30): DataFrame = {
     import graft.functions.KernelExpressions.vecDot
     val qp = queries.select(col(idCol).as("query_id"),
       slice(col(vecCol), 1, prefixDim).as("qp"))
@@ -492,7 +474,7 @@ object Similarity {
       slice(col(vecCol), 1, prefixDim).as("cp"))
     val wq = Window.partitionBy(col("query_id"))
       .orderBy(round(col("pdot"), 6).desc, col("neighbor_id"))
-    val cand = cp.crossJoin(gatedBroadcast(qp, broadcastGateBytes))
+    val cand = cp.crossJoin(broadcast(qp))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("pdot", vecDot(col("qp"), col("cp")))
       .withColumn("crank", row_number().over(wq))
@@ -503,7 +485,7 @@ object Similarity {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(round(col("cosine"), 6).desc, col("neighbor_id"))
     cand.join(cv, Seq("neighbor_id"))
-      .join(gatedBroadcast(qv, broadcastGateBytes), Seq("query_id"))
+      .join(broadcast(qv), Seq("query_id"))
       .withColumn("cosine", vecCosine(col("q_vec"), col("c_vec")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -776,11 +758,10 @@ object Similarity {
   }
 
   private def rankCells(queries: DataFrame, cellsCorpus: DataFrame, idCol: String,
-      vecCol: String, centroids: Seq[Seq[Double]], k: Int, nprobe: Int,
-      broadcastGateBytes: Long): DataFrame = {
+      vecCol: String, centroids: Seq[Seq[Double]], k: Int, nprobe: Int): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
       .withColumn("cell", explode(nearestCells(col("q_vec"), centroids, nprobe)))
-    val candidates = cellsCorpus.join(gatedBroadcast(q, broadcastGateBytes), Seq("cell"))
+    val candidates = cellsCorpus.join(broadcast(q), Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", vecCosine(col("q_vec"), col("c_vec")))
     val w = Window.partitionBy(col("query_id"))

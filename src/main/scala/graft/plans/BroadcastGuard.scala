@@ -5,59 +5,59 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, HintInfo, Join, JoinHint, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 
-/** Optimizer guard against oversized EXPLICIT broadcasts — a
-  * `Rule[LogicalPlan]` injected through `SparkSessionExtensions`
-  * ([[graft.GraftExtensions]]).
+/** The engine's one broadcast-size policy: an optimizer guard against
+  * oversized EXPLICIT broadcasts — a `Rule[LogicalPlan]` injected through
+  * `SparkSessionExtensions` ([[graft.GraftExtensions]]).
   *
   * A `broadcast(df)` hint is an unconditional order: Spark ships the whole
   * side to every executor even when it has grown to tens of GB since the
   * hint was written (the classic slow-creep OOM — the dimension table that
-  * was 10 MB at launch and 40 GB two years later). The guard runs in the
-  * operator-optimization batch — after `EliminateResolvedHint` has moved
-  * hints onto the `Join` nodes — and clears a side's BROADCAST hint when
-  * BOTH of two size signals — the plan-level estimate AND the sum of the
-  * side's known leaf sizes (true file bytes) — exceed
-  * `graft.broadcastGuard.maxBytes` (default 1 GiB; see the in-body note
-  * for why either signal alone over-strips), letting the planner
-  * fall back to a shuffle join; AQE can still re-broadcast at runtime if
-  * the TRUE size turns out small. Call sites keep their own size gates
-  * (e.g. the transactional anti-join) — this rule is the backstop for the
-  * ones that forget.
+  * was 10 MB at launch and 40 GB two years later). Call sites therefore
+  * write a plain `broadcast(...)` on the side they expect small and leave
+  * the size decision here. The guard runs in the operator-optimization
+  * batch — after `EliminateResolvedHint` has moved hints onto the `Join`
+  * nodes — and clears a side's BROADCAST hint when BOTH of two size
+  * signals — the plan-level estimate AND the sum of the side's known leaf
+  * sizes (true file bytes) — exceed 128 MiB (see the in-body note for
+  * why either signal alone over-strips), letting the planner fall back to
+  * a shuffle join; AQE can still re-broadcast at runtime if the TRUE size
+  * turns out small. The cap is 128 MiB because hinted sides include logs
+  * that only grow (the pipeline's `_uploaded` control table, the ingest
+  * digest log), and each broadcast copy lands in every executor's memory.
   *
-  * Disable per session with `graft.broadcastGuard.enabled=false`;
-  * stripped hints are logged with both sizes so the regression is
+  * Stripped hints are logged with both sizes so the regression is
   * visible, not silent.
   */
 case class BroadcastGuard(spark: SparkSession) extends Rule[LogicalPlan] with Logging {
 
-  private def conf(key: String, default: String): String =
-    spark.conf.getOption(key).getOrElse(default)
-
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf("graft.broadcastGuard.enabled", "true").toBoolean) return plan
-    val maxBytes = BigInt(conf("graft.broadcastGuard.maxBytes",
-      (1L << 30).toString))
+    val maxBytes = BigInt(128L << 20)
     // Trip-wire size = sum of the KNOWN leaf sizes (true on-disk bytes of
-    // file-backed scans), not `p.stats.sizeInBytes`. The plan-level
-    // estimate is garbage exactly where hints matter: above a Join it is
-    // the PRODUCT of child sizes (a 3-small-table dimension "estimates"
-    // past any cap), and localCheckpoint/LogicalRDD leaves report
-    // spark.sql.defaultSizeInBytes = Long.Max. Measured on the round-13
-    // baseline: 124 stripped hints per bench pass, every one kilobyte-
-    // scale at runtime, each re-rescued by AQE only AFTER the fact side
-    // had paid its planned shuffle WRITE. The guard's actual target — the
-    // dimension table that slow-crept past broadcastable size — shows up
-    // in leaf bytes, which only under-count a broadcast side when a join
-    // EXPLODES it (not the authored-broadcast shape; Spark's 8 GB /
-    // 512M-row broadcast cap still backstops that). Unknown-size leaves
-    // (pinned frames — metadata-scale by this engine's contract) do not
-    // veto the caller's explicit order.
+    // file-backed scans), not the side's own estimate alone. The
+    // plan-level estimate is garbage exactly where hints matter: above a
+    // Join it is the PRODUCT of child sizes (a 3-small-table dimension
+    // "estimates" past any cap). Measured on the round-13 baseline: 124
+    // stripped hints per bench pass, every one kilobyte-scale at runtime,
+    // each re-rescued by AQE only AFTER the fact side had paid its planned
+    // shuffle WRITE. The guard's actual target — the dimension table that
+    // slow-crept past broadcastable size — shows up in leaf bytes, which
+    // only under-count a broadcast side when a join EXPLODES it (not the
+    // authored-broadcast shape; Spark's 8 GB / 512M-row broadcast cap
+    // still backstops that). Only leaves whose size is really unknown
+    // (spark.sql.defaultSizeInBytes) drop out of the sum, so a side whose
+    // leaves are ALL of unknown size sums to 0 and keeps its hint.
+    // A pinned leaf (localCheckpoint → LogicalRDD) is NOT unknown: on
+    // Spark 4.1.2 it carries its pre-pin optimizer estimate, which can be
+    // far above its real size, so a hinted side over such a leaf counts
+    // that estimate on both signals. Registry rows where this strips a
+    // hint today: g_assortativity (sf0.01 and sf0.1) and q_mondrian_anon
+    // (sf0.01), whose pinned leaves report 3.7e10 to 3.1e15 bytes.
     // Each signal alone also over-strips the OTHER corner: leaf bytes
     // over-count a side that AGGREGATES a big table down to scalars
     // (estimate 8 B, leaves 6 TB — five such sides in the registry), the
-    // estimate over-counts multi-join/pinned sides. min(estimate, leaf
-    // bytes) only trips when BOTH say big — which is exactly the creep
-    // case (a single grown dimension: estimate ≈ leaf bytes ≈ big).
+    // estimate over-counts multi-join sides. min(estimate, leaf bytes)
+    // only trips when BOTH say big — which is exactly the creep case (a
+    // single grown dimension: estimate ≈ leaf bytes ≈ big).
     val unknown = BigInt(spark.sessionState.conf.defaultSizeInBytes)
     def guardSize(p: LogicalPlan): BigInt = {
       val leaves = p.collectLeaves().map(_.stats.sizeInBytes).filter(_ < unknown).sum
@@ -67,7 +67,7 @@ case class BroadcastGuard(spark: SparkSession) extends Rule[LogicalPlan] with Lo
       h match {
         case Some(info) if info.strategy.contains(BROADCAST) &&
             guardSize(p) > maxBytes =>
-          logWarning(s"graft.broadcastGuard: clearing BROADCAST hint on the " +
+          logWarning(s"BroadcastGuard: clearing BROADCAST hint on the " +
             s"$side side — min(known leaf bytes, estimate) ${guardSize(p)} " +
             s"> $maxBytes (plan estimate ${p.stats.sizeInBytes})")
           val stripped = info.copy(strategy = None)

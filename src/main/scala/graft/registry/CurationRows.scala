@@ -53,8 +53,8 @@ object CurationRows extends Family {
     * The classic pre-training hygiene pass (real pipelines use 8-13-grams;
     * 3 keeps the planted corpus overlap non-trivial). Scale shape: the eval
     * side explodes to a DISTINCT n-gram hash set — tiny (benchmarks are
-    * MBs, corpora are TBs) so the left-anti join broadcasts under the same
-    * size gate as the `_uploaded` control table; the training side streams
+    * MBs, corpora are TBs) so the left-semi join broadcasts it, like the
+    * `_uploaded` control table; the training side streams
     * through exploded → anti-join → distinct-id, never shuffling text.
     */
   private def cDecontaminate(s: SparkSession, dir: String): DataFrame = {
@@ -62,12 +62,8 @@ object CurationRows extends Family {
       explode(graft.functions.KernelExpressions.wordShingleHashes(col("text"), 3)).as("g"))
     val docs = t(s, dir, "documents")
     val evalGrams = grams(docs.filter(col("doc_id") < 10)).select("g").distinct()
-    val evalHinted =
-      if (evalGrams.queryExecution.optimizedPlan.stats.sizeInBytes <=
-          BigInt(Transforms.BroadcastGateBytes)) broadcast(evalGrams)
-      else evalGrams
     val trainGrams = grams(docs.filter(col("doc_id") >= 10))
-    val contaminated = trainGrams.join(evalHinted, Seq("g"), "left_semi")
+    val contaminated = trainGrams.join(broadcast(evalGrams), Seq("g"), "left_semi")
       .select("doc_id").distinct()
     docs.filter(col("doc_id") >= 10)
       .join(contaminated, Seq("doc_id"), "left_anti")
@@ -98,20 +94,16 @@ object CurationRows extends Family {
     val docs = t(s, dir, "documents")
     val ev = grams(docs.filter(col("doc_id") < 10))
       .withColumnRenamed("doc_id", "eval_id")
-    val evHinted =
-      if (ev.queryExecution.optimizedPlan.stats.sizeInBytes <=
-          BigInt(Transforms.BroadcastGateBytes)) broadcast(ev)
-      else ev
     val tg = grams(docs.filter(col("doc_id") >= 10))
       .withColumnRenamed("doc_id", "train_id")
     val evTotals = ev.groupBy(col("eval_id")).agg(count(lit(1)).as("n_grams"))
     val hit = tg.select(col("g")).distinct()
-      .join(evHinted, Seq("g"))
+      .join(broadcast(ev), Seq("g"))
       .groupBy(col("eval_id")).agg(count(lit(1)).as("n_hit"))
     val rareGrams = tg.groupBy(col("g")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxGramDf).select(col("g"))
     val pair = tg.join(rareGrams, Seq("g"))
-      .join(evHinted, Seq("g"))
+      .join(broadcast(ev), Seq("g"))
       .groupBy(col("eval_id"), col("train_id"))
       .agg(count(lit(1)).as("shared"))
     val worst = pair.groupBy(col("eval_id"))
@@ -560,11 +552,7 @@ object CurationRows extends Family {
     val bloom = evalGrams.stat.bloomFilter("g", 200000L, 0.01)
     val suspects = grams(train)
       .filter(graft.functions.KernelExpressions.bloomMightContain(col("g"), bloom))
-    val evalHinted =
-      if (evalGrams.queryExecution.optimizedPlan.stats.sizeInBytes <=
-          BigInt(Transforms.BroadcastGateBytes)) broadcast(evalGrams)
-      else evalGrams
-    val contaminated = suspects.join(evalHinted, Seq("g"), "left_semi")
+    val contaminated = suspects.join(broadcast(evalGrams), Seq("g"), "left_semi")
       .select("doc_id").distinct()
     train.join(contaminated, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("lang"))

@@ -619,7 +619,7 @@ object GraphRows extends Family {
     val e = coOrderEdgesBoth(s, dir) // deg + nbr join (reads of the pin)
     val deg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
       .pinned(true) // nbr join + the node-grain sums
-    // size-gated broadcast (the Transforms.antiJoinUploaded discipline):
+    // count-gated broadcast (a row count, not a size estimate):
     // while the node-grain degree table is small (≤4M nodes ≈ tens of
     // MB) broadcasting it keeps the edge list — the 100 TB side — from
     // being shuffled AND sorted for this join (measured: the sort-merge

@@ -415,8 +415,8 @@ object Streaming {
       keys: Seq[String]): DataFrame =
     // delegate to the batch implementation: it renames the control-table
     // keys (a same-lineage using-join can silently resolve the condition
-    // to one side) and size-gates the broadcast — both apply verbatim to
-    // the stream-static case
+    // to one side) and broadcasts the control table — both apply verbatim
+    // to the stream-static case
     graft.transform.Transforms.antiJoinUploaded(stream, uploaded, keys)
 
   /** Watermarked stream-stream interval join (click→conversion attribution):

@@ -13,15 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object Transforms {
 
-  /** Broadcast the control table only below this estimated size: "15 days
-    * of uploads" is usually small, but at large-cluster scale it can be
-    * billions of keys, and an unconditional `broadcast()` hint OOMs the
-    * driver/executors. Above the gate the join is left unhinted and AQE
-    * picks the strategy (shuffle anti-join, or a runtime broadcast if the
-    * actual size turns out small).
-    */
-  val BroadcastGateBytes: Long = 128L << 20
-
   /** Transactional dedup: drop rows already present in the `_uploaded`
     * control table, keyed by the transactional key columns.
     *
@@ -30,12 +21,14 @@ object Transforms {
     * big_query/big_query_data_source.py:87-104`) and the pandas outer-merge
     * anti join for files (`data_sources/file/file_data_source.py:71-92`).
     *
-    * Scale: broadcast the control table (so the 100 TB source side never
-    * shuffles) ONLY while its estimated size is under [[BroadcastGateBytes]];
-    * an oversized log falls back to an unhinted left-anti join.
+    * Scale: broadcast the control table, so the 100 TB source side never
+    * shuffles. "15 days of uploads" can still reach billions of keys at
+    * large-cluster scale; [[graft.plans.BroadcastGuard]] may drop the
+    * hint on an oversized log, and AQE then picks the strategy (shuffle
+    * anti-join, or a runtime broadcast if the actual size turns out small).
     */
-  def antiJoinUploaded(source: DataFrame, uploaded: DataFrame, keys: Seq[String],
-      broadcastGateBytes: Long = BroadcastGateBytes): DataFrame = {
+  def antiJoinUploaded(source: DataFrame, uploaded: DataFrame,
+      keys: Seq[String]): DataFrame = {
     // Rename the control-table keys to fresh attributes before joining:
     // `uploaded` is often derived from the SAME scan as `source` (tests,
     // file-backed logs), and a same-lineage using-join can silently resolve
@@ -43,9 +36,7 @@ object Transforms {
     // unambiguous resolution.
     val right = uploaded.select(keys.map(k => col(k).as(s"__uploaded_$k")): _*)
     val cond = keys.map(k => col(k) === col(s"__uploaded_$k")).reduce(_ && _)
-    val estimatedBytes = right.queryExecution.optimizedPlan.stats.sizeInBytes
-    val hinted = if (estimatedBytes <= BigInt(broadcastGateBytes)) broadcast(right) else right
-    source.join(hinted, cond, "left_anti")
+    source.join(broadcast(right), cond, "left_anti")
   }
 
   def antiJoinUploaded(source: DataFrame, uploaded: DataFrame, tt: TransactionalType): DataFrame =

@@ -255,31 +255,47 @@ class PlanSpec extends SparkTestBase {
   test("broadcastGuard: oversized explicit broadcast hints are stripped, small ones kept") {
     import org.apache.spark.sql.functions.{broadcast, col}
     import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint}
+    import graft.util.Checkpoints._
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
       .select("l_orderkey", "l_quantity")
     val ord = spark.read.parquet(s"$dir/orders.parquet")
       .select("o_orderkey", "o_orderpriority")
-    def joinHint(maxBytes: Long): JoinHint = {
-      val prev = spark.conf.getOption("graft.broadcastGuard.maxBytes")
-      spark.conf.set("graft.broadcastGuard.maxBytes", maxBytes.toString)
-      try li.join(broadcast(ord), col("l_orderkey") === col("o_orderkey"))
+    def joinHint(side: DataFrame): JoinHint =
+      li.join(broadcast(side), col("l_orderkey") === col("o_orderkey"))
         .queryExecution.optimizedPlan
         .collect { case j: Join => j.hint }.head
-      finally prev match {
-        case Some(v) => spark.conf.set("graft.broadcastGuard.maxBytes", v)
-        case None => spark.conf.unset("graft.broadcastGuard.maxBytes")
-      }
-    }
-    // generous limit: the hint survives to the join node's right side
-    assert(joinHint(1L << 30).rightHint.exists(
-      _.strategy.exists(_.toString == "broadcast")))
-    // 1-byte limit: the guard strips it and the join reverts to unhinted
-    assert(joinHint(1L) === JoinHint.NONE)
-    // kill switch restores the unguarded behavior
-    spark.conf.set("graft.broadcastGuard.enabled", "false")
-    try assert(joinHint(1L).rightHint.exists(
-      _.strategy.exists(_.toString == "broadcast")))
-    finally spark.conf.unset("graft.broadcastGuard.enabled")
+    def kept(h: JoinHint): Boolean =
+      h.rightHint.exists(_.strategy.exists(_.toString == "broadcast"))
+    def asOrders(df: org.apache.spark.sql.Dataset[_]): DataFrame =
+      df.select(col("id").as("o_orderkey"), col("id").cast("string").as("o_orderpriority"))
+    // a real dimension side, far under the guard's cap: the hint survives to
+    // the join node's right side
+    assert(kept(joinHint(ord)))
+    // 2^40 rows — estimate and leaf bytes both 8 TiB; planned, never
+    // executed: the guard strips the hint and the join reverts to unhinted
+    assert(joinHint(asOrders(spark.range(1L << 40))) === JoinHint.NONE)
+    // a pinned side reports its PRE-pin estimate, not its real size: five
+    // rows out of a filtered cross join of five 10-row ranges carry the
+    // cross join's ~2.5 GB estimate, so the hint on them is stripped today
+    val r = (1 to 5).map(i => spark.range(10).toDF(s"c$i"))
+    val fewRows = asOrders(r.reduce(_.crossJoin(_))
+      .filter(r.indices.map(i => col(s"c${i + 1}")).reduce(_ + _) === 1)
+      .select(col("c1").as("id")))
+      .pinned()
+    assert(fewRows.count() == 5)
+    assert(fewRows.queryExecution.optimizedPlan.stats.sizeInBytes > (1L << 30))
+    assert(joinHint(fewRows) === JoinHint.NONE)
+    // a pinned side with a small pre-pin estimate keeps its hint
+    assert(kept(joinHint(asOrders(spark.range(5)).pinned())))
+    // one policy: no main source but the guard reads a plan size estimate
+    val main = Paths.get("src/main")
+    val readers = Files.walk(main).iterator().asScala
+      .filter(f => Files.isRegularFile(f) &&
+        Files.readString(f).contains("stats.sizeInBytes"))
+      .map(main.relativize(_).toString).toList
+    assert(readers == List("scala/graft/plans/BroadcastGuard.scala"), readers)
   }
 
   test("ngram jaccard plan carries no plan-time broadcast hint (per-doc tables)") {
@@ -294,27 +310,31 @@ class PlanSpec extends SparkTestBase {
 
   test("ANN query-side broadcast is size-gated: oversized query set takes a shuffle join") {
     // Corpus-vs-corpus retrieval makes the "query set" as large as the
-    // corpus; with the gate forced to 0 bytes the plan must carry NO
-    // broadcast hint, so an oversized query side takes a shuffle join. A
-    // plan-time hint would force broadcast regardless of Spark's own
-    // threshold — so with auto-broadcast disabled, any surviving broadcast
-    // in the physical plan can only come from a hint.
+    // corpus; a 2^40-row query set (planned, never executed) is far above
+    // BroadcastGuard's cap, so the plan must carry NO broadcast hint and
+    // the oversized query side takes a shuffle join. A plan-time hint
+    // would force broadcast regardless of Spark's own threshold — so with
+    // auto-broadcast disabled, any surviving broadcast in the physical
+    // plan can only come from a hint.
+    import org.apache.spark.sql.functions.{array_repeat, col}
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(org.apache.spark.sql.functions.col("vec_id"),
-        org.apache.spark.sql.functions.col("embedding").cast("array<double>").as("embedding"))
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
+    val huge = spark.range(1L << 40)
+      .select(col("id").as("vec_id"),
+        array_repeat(col("id").cast("double"), 64).as("embedding"))
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val srp = graft.operators.Similarity.srpTopK(emb, emb, "vec_id", "embedding",
-        broadcastGateBytes = 0L).queryExecution.executedPlan.toString
+      val srp = graft.operators.Similarity.srpTopK(huge, emb, "vec_id", "embedding")
+        .queryExecution.executedPlan.toString
       assert(!srp.contains("BroadcastHashJoin") && !srp.contains("BroadcastExchange"),
         "srpTopK still broadcasts an oversized query set")
       assert(!srp.contains("BroadcastNestedLoopJoin") && !srp.contains("CartesianProduct"))
       assert(srp.contains("SortMergeJoin") || srp.contains("ShuffledHashJoin"),
         "expected a shuffle join on the signature key")
       val centroids = graft.operators.TrainedCentroids.sf001
-      val ivf = graft.operators.Similarity.ivfTopK(emb, emb, "vec_id", "embedding",
-        centroids, broadcastGateBytes = 0L).queryExecution.executedPlan.toString
+      val ivf = graft.operators.Similarity.ivfTopK(huge, emb, "vec_id", "embedding",
+        centroids).queryExecution.executedPlan.toString
       assert(!ivf.contains("BroadcastHashJoin") && !ivf.contains("BroadcastExchange"),
         "ivfTopK still broadcasts an oversized query set")
       assert(!ivf.contains("BroadcastNestedLoopJoin") && !ivf.contains("CartesianProduct"))

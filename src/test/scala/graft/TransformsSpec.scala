@@ -69,17 +69,26 @@ class TransformsSpec extends SparkTestBase {
   }
 
   test("anti join broadcast is size-gated: oversized control tables lose the hint") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint}
+    import graft.util.Checkpoints._
+    val keys = Seq("l_orderkey", "l_linenumber")
     val li = spark.read.parquet(sf("sf0.001") + "/lineitem.parquet")
-    val up = li.filter($"l_returnflag" === "R").select("l_orderkey", "l_linenumber")
-    // under the gate: the broadcast hint is present (control tables are
-    // usually small and the 100 TB source side must not shuffle)
-    val small = Transforms.antiJoinUploaded(li, up, Seq("l_orderkey", "l_linenumber"))
-    assert(small.queryExecution.analyzed.toString.contains("ResolvedHint"))
-    // over the gate (forced with a 1-byte threshold): no hint — AQE decides,
-    // so a billion-key log can never be forced into executor memory
-    val big = Transforms.antiJoinUploaded(li, up, Seq("l_orderkey", "l_linenumber"),
-      broadcastGateBytes = 1L)
-    assert(!big.queryExecution.analyzed.toString.contains("ResolvedHint"))
+    val up = li.filter($"l_returnflag" === "R").select(keys.map(col): _*)
+    def hint(df: org.apache.spark.sql.DataFrame): JoinHint =
+      df.queryExecution.optimizedPlan.collect { case j: Join => j.hint }.head
+    // small control table: the broadcast hint reaches the join (control
+    // tables are usually small and the 100 TB source side must not shuffle)
+    val small = Transforms.antiJoinUploaded(li, up, keys)
+    assert(hint(small).rightHint.exists(_.strategy.exists(_.toString == "broadcast")))
+    // the same keys behind a pinned cross join with a one-row side: the
+    // pinned leaf keeps the cross join's multi-GB pre-pin estimate, so the
+    // log is oversized to BroadcastGuard — no hint, AQE decides, and a
+    // billion-key log can never be forced into executor memory
+    val r = (1 to 5).map(i => spark.range(10).toDF(s"c$i"))
+    val one = r.reduce(_.crossJoin(_)).filter(r.indices.map(i => col(s"c${i + 1}")).reduce(_ + _) === 0)
+    val bigUp = up.crossJoin(one).select(keys.map(col): _*).pinned()
+    val big = Transforms.antiJoinUploaded(li, bigUp, keys)
+    assert(hint(big) === JoinHint.NONE)
     // identical semantics either way
     assert(big.count() == small.count())
   }
