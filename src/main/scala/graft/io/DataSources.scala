@@ -42,10 +42,12 @@ object DataSources {
     * SURVEY §3.2): pruned scan → schema validation → cast → per-destination
     * shaping → LEFT ANTI JOIN against the `_uploaded` log for transactional
     * branches. Throws on validation failure (caller maps it to one error
-    * per execution, like the reference's in-read raise).
+    * per execution, like the reference's in-read raise). The log's 15-day
+    * lookback counts back from `nowMicros`.
     */
   def retrieveData(spark: SparkSession, ds: DataSource, dt: DestinationType,
-      transactional: TransactionalType): DataFrame = {
+      transactional: TransactionalType,
+      nowMicros: Long = System.currentTimeMillis() * 1000L): DataFrame = {
     // Every source is one DataFrame scan, pruned right after the read so
     // Catalyst pushes the column projection into the format reader (parquet
     // and ORC `ReadSchema`, DSv2 sources alike). Any Spark format name plugs
@@ -64,7 +66,7 @@ object DataSources {
     val shaped = DestinationSchemas.processByDestinationType(
       DestinationSchemas.castNonString(raw, dt), dt)
     if (transactional != TransactionalType.NotTransactional) {
-      val log = UploadedLog(spark, ds.uploadedLogPath, transactional)
+      val log = UploadedLog(spark, ds.uploadedLogPath, transactional, nowMicros)
       Transforms.antiJoinUploaded(shaped, log.read(), transactional)
     } else shaped
   }

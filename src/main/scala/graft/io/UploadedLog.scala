@@ -12,17 +12,20 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType, Timestam
   * Semantics preserved:
   *  - read-missing-as-empty (`file_provider.py` can_skip_read)
   *  - 15-day retention applied at read (`file_data_source.py:140-147`)
-  *  - append-only writeback of (key columns, now) for successful rows
+  *  - append-only writeback of (key columns, run timestamp) for successful
+  *    rows
   *  - ORDER_ID_TIME writes ALL key columns (the reference drops `time` on
   *    writeback, `file_data_source.py:109` — a documented reference bug we
   *    do not reproduce).
   */
-final case class UploadedLog(spark: SparkSession, path: String, tt: TransactionalType) {
+final case class UploadedLog(spark: SparkSession, path: String, tt: TransactionalType,
+    nowMicros: Long = System.currentTimeMillis() * 1000L) {
 
   private def schema: StructType =
     StructType(StructField("timestamp", TimestampType) +:
       tt.keyColumns.map(StructField(_, StringType)))
 
+  /** The log's rows of the 15 days before `nowMicros`. */
   def read(): DataFrame = {
     // Path.getFileSystem, not FileSystem.get(new URI(...)): a path with a
     // space or other URI-reserved character would throw URISyntaxException
@@ -35,20 +38,21 @@ final case class UploadedLog(spark: SparkSession, path: String, tt: Transactiona
       else
         // first run, no log yet: an empty frame with the log's schema
         spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    graft.transform.Transforms.retentionFilter(raw)
+    graft.transform.Transforms.retentionFilter(raw, nowMicros)
   }
 
-  /** Append successfully-uploaded keys with the current timestamp.
-    * Serialized per path: two concurrently-running branches can share one
-    * control table (same source, same key type), and concurrent append jobs
-    * to one directory race on the output committer's staging dir.
+  /** Append the key columns of successfully-uploaded rows, stamped with
+    * `nowMicros`. Serialized per path: two concurrently-running branches can
+    * share one control table (same source, same key type), and concurrent
+    * append jobs to one directory race on the output committer's staging
+    * dir.
     */
   def append(successful: DataFrame): Unit = {
     if (tt.keyColumns.nonEmpty) {
       UploadedLog.lockFor(path).synchronized {
         successful
           .select(tt.keyColumns.map(c => col(c).cast(StringType).as(c)): _*)
-          .withColumn("timestamp", current_timestamp())
+          .withColumn("timestamp", timestamp_micros(lit(nowMicros)))
           .select("timestamp", tt.keyColumns: _*)
           .write.mode("append").parquet(path)
       }

@@ -6,8 +6,10 @@ import graft.error.{ErrorHandler, ErrorNotifier, LogNotifier}
 import graft.io.UploadedLog
 import graft.model._
 import graft.sink._
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import scala.collection.immutable.ListMap
@@ -23,9 +25,13 @@ import scala.collection.immutable.ListMap
   * — read → validate → prune → cast → fold → anti-join — reused by every
   * execution of that group (read-once-per-source, upload-once-per-execution,
   * `batches_from_executions.py:169`); the sink upload runs distributed via
-  * `mapPartitions` emitting a per-row outcome Dataset that drives both the
-  * success-filtered transactional writeback and the error report. No rows
-  * are ever materialized on the driver.
+  * `mapPartitions` emitting per-row outcomes into a pinned RDD. The job that
+  * pins them also returns the execution's report (rows attempted and
+  * succeeded, first error), and the success-filtered transactional
+  * writeback reads the pin, so nothing between the sends and the
+  * `_uploaded` append plans a SQL query. A run reads the clock once: the
+  * renderers, the `_uploaded` lookback and the writeback share that
+  * instant. No rows are ever materialized on the driver.
   */
 final case class PipelineOptions(
     transport: Transport,
@@ -52,6 +58,7 @@ final case class PipelineOptions(
       */
     uploadedLogPathFor: (String, DestinationType) => String = (p, dt) =>
       p.replaceAll("\\.parquet$", "") + s"_uploaded_${dt.name}.parquet",
+    /** The run's clock, read once per [[Pipeline.run]]. */
     nowMicros: () => Long = () => System.currentTimeMillis() * 1000L)
 
 final case class ExecutionResult(
@@ -67,7 +74,9 @@ final case class PipelineReport(results: Seq[ExecutionResult], distinctExecution
   def totalUploaded: Long = results.map(_.succeeded).sum
 }
 
-/** Per-row sink outcome: feeds writeback (success-only keys) + report. */
+/** Per-row sink outcome: feeds the report and the writeback (success-only
+  * keys).
+  */
 final case class RowOutcome(
     executionKey: String,
     keys: Map[String, String],
@@ -91,12 +100,13 @@ object Pipeline {
     // (error/error_handling.py semantics; exit code handled by caller).
     // Results are collected per-branch future, preserving branch order —
     // the report is identical to a serial run.
+    val runMicros = opts.nowMicros()
     val pool = java.util.concurrent.Executors.newFixedThreadPool(BranchParallelism)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val futures = Branches.all.map { branch =>
       Future {
         val handler = new ErrorHandler(branch.destinationType, opts.notifier)
-        val branchResults = runBranch(spark, executions, branch, handler, opts)
+        val branchResults = runBranch(spark, executions, branch, handler, opts, runMicros)
         handler.notifyErrors()
         branchResults
       }
@@ -111,7 +121,8 @@ object Pipeline {
   }
 
   private def runBranch(spark: SparkSession, executions: Seq[Execution],
-      branch: BranchSpec, handler: ErrorHandler, opts: PipelineOptions): Seq[ExecutionResult] = {
+      branch: BranchSpec, handler: ErrorHandler, opts: PipelineOptions,
+      runMicros: Long): Seq[ExecutionResult] = {
     val branchResults = Seq.newBuilder[ExecutionResult]
     val dt = branch.destinationType
 
@@ -127,7 +138,7 @@ object Pipeline {
 
       // Read ONCE per (source, branch); schema ops are plan-time.
       val readAttempt = scala.util.Try(
-        graft.io.DataSources.retrieveData(spark, ds, dt, branch.readTransactional))
+        graft.io.DataSources.retrieveData(spark, ds, dt, branch.readTransactional, runMicros))
 
       readAttempt match {
         case scala.util.Failure(e) =>
@@ -149,58 +160,71 @@ object Pipeline {
               d.withColumn(k, col(k).cast("string"))
             else d)
           df.persist(StorageLevel.MEMORY_AND_DISK)
-          try {
-            val outcomesPerExec = branchExecutions.map { ex =>
+          // Driver-side failures past the read (an aborted send job) stay
+          // INSIDE the execution: it reports the error, and the branch's
+          // other executions and the other branches go on ("an error in one
+          // never aborts the others"); only the group's writeback is skipped.
+          val uploads = branchExecutions.map { ex =>
+            ex -> scala.util.Try {
               val hashed = branch.hasher.fold(df)(h => h(df, ex.destination.metadata))
-              ex -> uploadStage(spark, hashed, ex, branch, opts)
+              uploadStage(spark, hashed, ex, branch, opts, runMicros)
             }
-            outcomesPerExec.foreach { case (ex, outcomes) =>
-              val agg = outcomes.groupBy("executionKey").agg(
-                count(lit(1)).as("attempted"),
-                sum(when(col("success"), 1L).otherwise(0L)).as("succeeded"),
-                first(col("error"), ignoreNulls = true).as("firstError"))
-                .collect()
-              val (attempted, succeeded, err) = agg.headOption
-                .map(r => (r.getAs[Long]("attempted"), r.getAs[Long]("succeeded"),
-                  Option(r.getAs[String]("firstError"))))
-                .getOrElse((0L, 0L, None))
-              err.foreach(m => handler.addError(ex, m))
-              branchResults += ExecutionResult(ex.key, dt.name, attempted, succeeded, err)
-            }
+          }
+          val sent = uploads.flatMap(_._2.toOption)
+          val pins = sent.flatMap(_._1)
+          try {
             // Transactional writeback: group successful rows of the whole
             // source, append keys once (transactional_events_results_writer
             // .py:29-78; ALL key cols — reference ORDER_ID_TIME bug fixed).
-            branch.writebackTransactional.foreach { tt =>
-              val successful = outcomesPerExec.map(_._2.filter(col("success"))).reduce(_ union _)
-              if (tt.keyColumns.nonEmpty) {
-                val keyed = successful.select(
-                  tt.keyColumns.map(k => col("keys")(k).as(k)): _*)
-                UploadedLog(spark, ds.uploadedLogPath, tt).append(keyed)
+            // The reports already say whether there is any key to append.
+            // An aborted send job skips the writeback for the whole group:
+            // the log is shared by the group's executions, so keys another
+            // execution sent would make the next run's anti-join drop the
+            // rows the aborted one never delivered.
+            val writebackError = branch.writebackTransactional
+              .filter(_ => uploads.forall(_._2.isSuccess) && sent.exists(_._2.succeeded > 0))
+              .flatMap { tt =>
+                val keyCols = tt.keyColumns
+                val keys = spark.sparkContext.union(pins)
+                  .filter(_.success).map(o => Row.fromSeq(keyCols.map(o.keys)))
+                val keySchema = StructType(keyCols.map(StructField(_, StringType)))
+                scala.util.Try(UploadedLog(spark, ds.uploadedLogPath, tt, runMicros)
+                    .append(spark.createDataFrame(keys, keySchema)))
+                  .failed.toOption
+                  .map(e => s"Error appending to the _uploaded log: ${e.getMessage}")
               }
+            // Results are built after the writeback, so each execution
+            // gets exactly one, carrying its send counts and any error.
+            uploads.foreach { case (ex, upload) =>
+              val result = upload match {
+                case scala.util.Success((_, r)) =>
+                  r.copy(error = (r.error ++ writebackError).reduceOption(_ + "; " + _))
+                case scala.util.Failure(e) =>
+                  ExecutionResult(ex.key, dt.name, 0L, 0L,
+                    Some(s"Error uploading data: ${e.getMessage}"))
+              }
+              result.error.foreach(m => handler.addError(ex, m))
+              branchResults += result
             }
-            outcomesPerExec.foreach(_._2.unpersist())
-          } catch {
-            // Driver-side failures past the read (writeback append, an
-            // aborted send job) must stay INSIDE the branch: record the
-            // error per execution and let the other branches' results and
-            // the exit-code report stand ("an error in one never aborts
-            // the others").
-            case scala.util.control.NonFatal(e) =>
-              branchExecutions.foreach { ex =>
-                handler.addError(ex, s"Error uploading data: ${e.getMessage}")
-                branchResults += ExecutionResult(ex.key, dt.name, 0L, 0L,
-                  Some(s"Error uploading data: ${e.getMessage}"))
-              }
-          } finally df.unpersist()
+          } finally {
+            pins.foreach(_.unpersist())
+            df.unpersist()
+          }
       }
     }
     branchResults.result()
   }
 
-  /** The sink stage: distributed batching + upload, returning the per-row
-    * outcome Dataset (eagerly localCheckpoint'ed — the send side effects run
-    * exactly once across the downstream aggregation and writeback actions,
-    * and the truncated lineage makes silent re-sends impossible).
+  /** The sink stage: distributed batching + upload in ONE Spark job per
+    * phase, returning the pinned per-row outcomes and the execution's
+    * report. The job that sends also stores the outcomes (an RDD pin, see
+    * [[graft.util.Checkpoints.RddPinOps]]) and returns each partition's
+    * rows attempted and succeeded and its first error, so neither the
+    * report nor the writeback runs the sends again: the truncated lineage
+    * makes a silent re-send impossible. Sends run once per successful task
+    * attempt; a retried task of the send job re-sends its partition's
+    * batches. The reported error is the first failing row in (partition,
+    * batch, row) order, the iteration-1 phase first.
     *
     * Batch `iteration` is GLOBAL per execution and 1-based (drives REPLACE
     * remove_all / DV create-vs-edit): partition batch offsets are
@@ -214,8 +238,8 @@ object Pipeline {
     * index its renderer never reads — one pass, not two, per execution.
     */
   private[pipeline] def uploadStage(spark: SparkSession, df: DataFrame,
-      execution: Execution, branch: BranchSpec, opts: PipelineOptions): DataFrame = {
-    import spark.implicits._
+      execution: Execution, branch: BranchSpec, opts: PipelineOptions,
+      runMicros: Long): (Seq[RDD[RowOutcome]], ExecutionResult) = {
     val schema = df.schema
     val batchSize = branch.batchSize
     val keyCols = branch.writebackTransactional.map(_.keyColumns).getOrElse(Seq.empty)
@@ -243,7 +267,7 @@ object Pipeline {
         .scanLeft(0L)(_ + _)).toMap
 
     val transport = opts.transport
-    val renderer = branch.renderer(opts.nowMicros())
+    val renderer = branch.renderer(runMicros)
     // The API rate limit is GLOBAL (AppsFlyer 500 events/s,
     // appsflyer_s2s_uploader_async.py:135-139). Enforcing it verbatim per
     // partition would multiply the aggregate rate by the partition count, so
@@ -316,22 +340,35 @@ object Pipeline {
       out
     }
 
-    def checkpointed(outcomes: org.apache.spark.rdd.RDD[RowOutcome]): DataFrame =
-      // Eager localCheckpoint: runs the send job ONCE, stores the outcomes,
-      // and truncates lineage — executor loss or cache eviction can never
-      // silently re-run the non-idempotent sends (a lost block fails the
-      // read instead, and the `_uploaded` anti-join keeps a retried RUN
-      // idempotent). At cluster scale a durable checkpoint/table takes this
-      // role.
-      spark.createDataset(outcomes).toDF().pinned()
+    // Rows attempted and succeeded and the first error of a run of
+    // outcomes, in their order.
+    def summarise(outcomes: Iterator[RowOutcome]): (Long, Long, Option[String]) = {
+      var attempted, succeeded = 0L
+      var firstError = Option.empty[String]
+      outcomes.foreach { o =>
+        attempted += 1
+        if (o.success) succeeded += 1
+        else if (firstError.isEmpty) firstError = o.error
+      }
+      (attempted, succeeded, firstError)
+    }
+    def report(parts: Iterable[(Long, Long, Option[String])]): ExecutionResult =
+      ExecutionResult(execKey, branch.destinationType.name, parts.map(_._1).sum,
+        parts.map(_._2).sum, parts.flatMap(_._3).headOption)
 
+    // Each pin runs the sends, stores their outcomes and cuts lineage:
+    // executor loss or cache eviction fails a later read instead of
+    // re-sending, and the `_uploaded` anti-join keeps a retried RUN
+    // idempotent. At cluster scale `graft.checkpoint.reliable` makes the pin
+    // durable.
     if (!branch.needsIteration) {
-      checkpointed(rdd.mapPartitionsWithIndex { (pid, it) =>
+      val (outcomes, parts) = rdd.mapPartitionsWithIndex { (pid, it) =>
         val offset = batchOffsets.getOrElse(pid, 0L)
         it.grouped(batchSize).zipWithIndex.flatMap { case (rows, localIdx) =>
           sendBatch(rows, offset + localIdx + 1)
         }
-      })
+      }.pinned(spark)(summarise)
+      (Seq(outcomes), report(parts))
     } else if (counts.values.sum == 0L) {
       // Reference semantics: an EMPTY source still yields ONE empty batch
       // (batches_from_executions.py:113-131), so iteration-1 cleanup
@@ -345,27 +382,27 @@ object Pipeline {
       val synthetic = errs.headOption.toSeq.map(msg =>
         RowOutcome(execKey, Map.empty, success = false,
           Some(s"Error uploading data: $msg")))
-      spark.createDataset(synthetic).toDF().pinned()
+      (Seq(spark.sparkContext.parallelize(synthetic, 1)), report(Seq(summarise(synthetic.iterator))))
     } else {
       // Iteration-1 requests carry SIDE EFFECTS later batches depend on
       // (REPLACE remove_all, job create, data-import erase) — with all
       // partitions sending concurrently, a later batch could reach the API
       // first and be wiped or rejected. Phase A runs ONLY the globally
-      // first batch and the checkpoint action is the ordering BARRIER;
-      // phase B then sends every other batch concurrently as usual.
+      // first batch and its pin job is the ordering BARRIER; phase B then
+      // sends every other batch concurrently as usual.
       val firstPid = sortedPids.find(p => counts(p) > 0L).get
-      val phaseA = checkpointed(rdd.mapPartitionsWithIndex { (pid, it) =>
+      val (phaseA, partsA) = rdd.mapPartitionsWithIndex { (pid, it) =>
         if (pid != firstPid) Iterator.empty
         else it.grouped(batchSize).take(1).flatMap(rows => sendBatch(rows, 1L))
-      })
-      val phaseB = checkpointed(rdd.mapPartitionsWithIndex { (pid, it) =>
+      }.pinned(spark)(summarise)
+      val (phaseB, partsB) = rdd.mapPartitionsWithIndex { (pid, it) =>
         val offset = batchOffsets.getOrElse(pid, 0L)
         it.grouped(batchSize).zipWithIndex.flatMap { case (rows, localIdx) =>
           if (pid == firstPid && localIdx == 0) Iterator.empty
           else sendBatch(rows, offset + localIdx + 1)
         }
-      })
-      phaseA.unionByName(phaseB).pinned()
+      }.pinned(spark)(summarise)
+      (Seq(phaseA, phaseB), report(partsA ++ partsB))
     }
   }
 

@@ -9,9 +9,9 @@ import graft.model.Execution
   * Execution model (Spark-first): the upload stage is the only action on a
   * branch plan. Rows reach the sink via `mapPartitions`; each partition
   * groups rows into `batchSize` batches, renders requests, sends them, and
-  * emits per-row outcomes — the outcome Dataset drives both transactional
-  * writeback (success-only keys) and the error report, with no driver-side
-  * row materialization.
+  * emits per-row outcomes into a pinned RDD — the job that pins them also
+  * returns the error report, and the transactional writeback (success-only
+  * keys) reads the pin, with no driver-side row materialization.
   */
 
 /** One rendered API request. `rowIdx` names the batch-row indices this

@@ -45,11 +45,13 @@ object Transforms {
 
   /** 15-day retention filter applied when reading the `_uploaded` control
     * table (reference `file_data_source.py:140-147`; BigQuery side uses
-    * 15-day partition expiration, `big_query_data_source.py:125`).
+    * 15-day partition expiration, `big_query_data_source.py:125`), counted
+    * back from `nowMicros`: every read of one run shares that instant, so
+    * their plans (and generated classes) are identical.
     */
-  def retentionFilter(uploaded: DataFrame, tsCol: String = "timestamp",
+  def retentionFilter(uploaded: DataFrame, nowMicros: Long, tsCol: String = "timestamp",
       days: Int = 15): DataFrame =
-    uploaded.filter(col(tsCol) >= (current_timestamp() - expr(s"INTERVAL $days DAYS")))
+    uploaded.filter(col(tsCol) >= (timestamp_micros(lit(nowMicros)) - expr(s"INTERVAL $days DAYS")))
 
   /** Batch count for a row-count `n` and batch size `size`, preserving the
     * reference's semantics: the loop yields the in-progress batch after the

@@ -1,6 +1,10 @@
 package graft.util
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.storage.StorageLevel
+
+import scala.reflect.ClassTag
 
 /** Loop-invariant pinning with a cluster-safe escape hatch.
   *
@@ -22,6 +26,9 @@ import org.apache.spark.sql.Dataset
   *     store on a cluster). Missing checkpoint dir fails fast with an
   *     actionable message rather than Spark's late SparkException.
   *
+  * A Dataset pin is eager; an RDD pin (the pipeline's send outcomes) is
+  * materialized by the one job that also summarises it.
+  *
   * Both paths return a plan with identical semantics (same rows, same
   * partitioning for an eager pin), so operators are oblivious to the
   * choice — see `CheckpointsSpec` for the equivalence pin and the
@@ -41,29 +48,50 @@ object Checkpoints {
     */
   val StorageConf = "graft.checkpoint.storage"
 
-  def reliable(ds: Dataset[_]): Boolean =
-    ds.sparkSession.conf.getOption(ReliableConf).exists(_.trim.equalsIgnoreCase("true"))
+  /** True when `spark` pins durably; fails fast when no checkpoint dir
+    * is set for it.
+    */
+  private def reliable(spark: SparkSession): Boolean = {
+    val on = spark.conf.getOption(ReliableConf).exists(_.trim.equalsIgnoreCase("true"))
+    if (on) require(spark.sparkContext.getCheckpointDir.isDefined,
+      s"$ReliableConf=true requires a checkpoint directory: set " +
+        "spark.checkpoint.dir or call SparkContext.setCheckpointDir(" +
+        "<fault-tolerant path>) before running iterative operators " +
+        "(HDFS/object store on a cluster)")
+    on
+  }
+
+  /** The local pin's storage level, when [[StorageConf]] names one. */
+  private def localLevel(spark: SparkSession): Option[StorageLevel] =
+    spark.conf.getOption(StorageConf).map { lvl =>
+      try StorageLevel.fromString(lvl.trim.toUpperCase)
+      catch { case _: IllegalArgumentException => throw new IllegalArgumentException(
+        s"$StorageConf: unknown storage level '$lvl' (expected e.g. " +
+          "MEMORY_AND_DISK, MEMORY_AND_DISK_SER, DISK_ONLY)") }
+    }
 
   implicit class PinOps[T](private val ds: Dataset[T]) extends AnyVal {
     /** Materialize `ds` and cut lineage; reliable or local per the conf. */
     def pinned(eager: Boolean = true): Dataset[T] =
-      if (reliable(ds)) {
-        val sc = ds.sparkSession.sparkContext
-        require(sc.getCheckpointDir.isDefined,
-          s"$ReliableConf=true requires a checkpoint directory: set " +
-            "spark.checkpoint.dir or call SparkContext.setCheckpointDir(" +
-            "<fault-tolerant path>) before running iterative operators " +
-            "(HDFS/object store on a cluster)")
-        ds.checkpoint(eager)
-      } else ds.sparkSession.conf.getOption(StorageConf) match {
-        case Some(lvl) =>
-          val parsed = try org.apache.spark.storage.StorageLevel
-            .fromString(lvl.trim.toUpperCase)
-          catch { case _: IllegalArgumentException => throw new IllegalArgumentException(
-            s"$StorageConf: unknown storage level '$lvl' (expected e.g. " +
-              "MEMORY_AND_DISK, MEMORY_AND_DISK_SER, DISK_ONLY)") }
-          ds.localCheckpoint(eager, parsed)
-        case None => ds.localCheckpoint(eager)
-      }
+      if (reliable(ds.sparkSession)) ds.checkpoint(eager)
+      else localLevel(ds.sparkSession)
+        .fold(ds.localCheckpoint(eager))(ds.localCheckpoint(eager, _))
+  }
+
+  implicit class RddPinOps[T](private val rdd: RDD[T]) extends AnyVal {
+    /** Pin `rdd` under `spark`'s mode, materialized by ONE job that also
+      * returns `summarise` of each partition, in partition order: the pin's
+      * action is the caller's read, so nothing re-runs `rdd` to learn what
+      * it produced. Local mode marks a `localCheckpoint` at the
+      * [[StorageConf]] level; reliable mode persists, then `checkpoint`s,
+      * and writes the checkpoint from the persisted blocks in a second job.
+      */
+    def pinned[U: ClassTag](spark: SparkSession)(summarise: Iterator[T] => U): (RDD[T], Array[U]) = {
+      if (reliable(spark)) {
+        rdd.persist(StorageLevel.MEMORY_AND_DISK)
+        rdd.checkpoint()
+      } else localLevel(spark).fold(rdd.localCheckpoint())(rdd.persist(_).localCheckpoint())
+      (rdd, rdd.mapPartitions(it => Iterator(summarise(it))).collect())
+    }
   }
 }

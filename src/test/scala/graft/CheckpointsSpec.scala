@@ -110,4 +110,23 @@ class CheckpointsSpec extends SparkTestBase {
     val durable = withReliable(Some(ckptDir))(run())
     assert(local === durable) // bit-identical: same plan, same arithmetic
   }
+
+  test("an RDD pin runs its closure once per row, in all three modes") {
+    val sc = spark.sparkContext
+    def once(mode: String): Unit = {
+      val ran = sc.longAccumulator(s"pin closure, $mode")
+      val rdd = sc.parallelize(1 to 1000, 4).map { i => ran.add(1); i * 2L }
+      val (pinned, sums) = rdd.pinned(spark)(_.sum)
+      assert(sums.toSeq.sum == 1001000L, mode)
+      // two reads after the materializing job
+      assert(pinned.count() == 1000L, mode)
+      assert(pinned.reduce(_ + _) == 1001000L, mode)
+      assert(ran.value == 1000L, s"$mode: closure ran ${ran.value} times for 1000 rows")
+    }
+    once("local")
+    spark.conf.set(Checkpoints.StorageConf, "MEMORY_AND_DISK_SER")
+    try once("MEMORY_AND_DISK_SER") finally spark.conf.unset(Checkpoints.StorageConf)
+    val ckptDir = java.nio.file.Files.createTempDirectory("graft-ckpt3").toString
+    withReliable(Some(ckptDir))(once("reliable"))
+  }
 }

@@ -4,6 +4,8 @@ import graft.config.JsonConfigSource
 import graft.model._
 import graft.pipeline.{Pipeline, PipelineOptions}
 import graft.sink.{RecordingTransport, RenderedRequest}
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SaveMode
 import org.scalatest.BeforeAndAfterEach
 
@@ -216,5 +218,170 @@ class PipelineSpec extends SparkTestBase with BeforeAndAfterEach {
     assert(report.results.head.attempted == 0)
     assert(report.results.head.error.exists(_.contains("missing")))
     assert(RecordingTransport.sent.isEmpty)
+  }
+
+  /** Spark jobs `body` starts on its own thread and the threads it creates. */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val tag = s"jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(",").contains(tag))) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    try {
+      val out = body
+      ListenerBusDrain(sc)
+      (out, jobs.get)
+    } finally {
+      sc.removeJobTag(tag)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a failed _uploaded append gives each execution one result with its send counts") {
+    val dir = tmpDir()
+    val src = s"$dir/conversions.parquet"
+    writeOciSource(src, 5)
+    // the log's parent is a regular file, so the append fails
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$dir/blocker"))
+    val report = Pipeline.run(spark,
+      JsonConfigSource.fromString(ociConfig(src)).executions(),
+      PipelineOptions(transport = graft.sink.RecordingTransport(),
+        uploadedLogPathFor = (_, _) => s"$dir/blocker/log.parquet"))
+    assert(report.results.size == 1, report.results)
+    val r = report.results.head
+    assert((r.attempted, r.succeeded) == ((5L, 5L)))
+    assert(r.error.exists(_.startsWith("Error appending to the _uploaded log")), r.error)
+    assert(report.exitCode == 1)
+  }
+
+  test("an aborted send job skips the group's writeback, so the next run re-sends its rows") {
+    val dir = tmpDir()
+    val src = s"$dir/conversions.parquet"
+    writeOciSource(src, 5)
+    val config = s"""{
+      "GoogleAdsAccountId": "1234567890",
+      "Sources": [{"Name": "s", "Type": "FILE", "Dataset": "parquet", "Table": "$src"}],
+      "Destinations": [
+        {"Name": "d1", "Type": "ADS_OFFLINE_CONVERSION", "Metadata": ["Conv1"]},
+        {"Name": "d2", "Type": "ADS_OFFLINE_CONVERSION", "Metadata": ["Conv2"]}
+      ],
+      "Connections": [
+        {"Enabled": true, "Source": "s", "Destination": "d1"},
+        {"Enabled": true, "Source": "s", "Destination": "d2"}
+      ]
+    }"""
+    val executions = JsonConfigSource.fromString(config).executions()
+    val opts = PipelineOptions(transport = graft.sink.RecordingTransport())
+    // an Error is no Exception: it escapes the per-batch catch and aborts
+    // d2's send job
+    RecordingTransport.failWhen = (ex, _) =>
+      if (ex.destination.name == "d2") throw new Error("transport crashed") else None
+    val run1 = Pipeline.run(spark, executions, opts)
+    val byKey = run1.results.map(r => r.executionKey -> r).toMap
+    assert(run1.results.size == 2, run1.results)
+    assert((byKey("s -> d1").succeeded, byKey("s -> d1").error) == ((5L, None)))
+    assert(byKey("s -> d2").succeeded == 0L)
+    assert(byKey("s -> d2").error.exists(_.contains("transport crashed")), byKey("s -> d2"))
+    assert(run1.exitCode == 1)
+    assert(!new java.io.File(s"$dir/conversions_uploaded_ADS_OFFLINE_CONVERSION.parquet").exists())
+
+    RecordingTransport.reset()
+    val run2 = Pipeline.run(spark, executions, opts)
+    assert(run2.exitCode == 0, run2.results)
+    assert(run2.results.map(r => r.executionKey -> r.succeeded).toMap ==
+      Map("s -> d1" -> 5L, "s -> d2" -> 5L))
+    assert(RecordingTransport.sent.toArray(Array.empty[RecordingTransport.Sent])
+      .exists(_.executionKey == "s -> d2"))
+  }
+
+  test("one run timestamp: read once, stamped on every _uploaded row and CM payload") {
+    val dir = tmpDir()
+    val src = s"$dir/cm.parquet"
+    (1 to 6).map(i => (s"u$i", s"g$i")).toDF("uuid", "gclid")
+      .write.mode(SaveMode.Overwrite).parquet(src)
+    val config = s"""{
+      "GoogleAdsAccountId": "1234567890",
+      "CampaignManagerProfileId": "999",
+      "Sources": [{"Name": "s", "Type": "FILE", "Dataset": "parquet", "Table": "$src"}],
+      "Destinations": [
+        {"Name": "d1", "Type": "CM_OFFLINE_CONVERSION", "Metadata": ["act1", "cfg1"]},
+        {"Name": "d2", "Type": "CM_OFFLINE_CONVERSION", "Metadata": ["act2", "cfg2"]}
+      ],
+      "Connections": [
+        {"Enabled": true, "Source": "s", "Destination": "d1"},
+        {"Enabled": true, "Source": "s", "Destination": "d2"}
+      ]
+    }"""
+    val instant = 1717243200123456L // 2024-06-01T12:00:00.123456Z
+    val reads = new java.util.concurrent.atomic.AtomicInteger()
+    val report = Pipeline.run(spark, JsonConfigSource.fromString(config).executions(),
+      PipelineOptions(transport = graft.sink.RecordingTransport(),
+        nowMicros = () => { reads.incrementAndGet(); instant }))
+    assert(report.exitCode == 0 && report.totalUploaded == 12, report.results)
+    assert(reads.get == 1)
+    val logged = spark.read.parquet(s"$dir/cm_uploaded_CM_OFFLINE_CONVERSION.parquet")
+      .selectExpr("unix_micros(timestamp)").as[Long].collect()
+    assert(logged.length == 12)
+    assert(logged.toSet == Set(instant))
+    val bodies = RecordingTransport.sent.toArray(Array.empty[RecordingTransport.Sent])
+      .map(_.req.body)
+    val stamps = bodies.flatMap(b => "\"timestampMicros\": (\\d+)".r.findAllMatchIn(b).map(_.group(1).toLong))
+    assert(stamps.length == 12 && stamps.toSet == Set(instant), bodies.mkString("\n"))
+  }
+
+  test("job budget: one OCI execution runs 3 jobs, one REPLACE execution 4") {
+    val dir = tmpDir()
+    val ociSrc = s"$dir/conversions.parquet"
+    writeOciSource(ociSrc, 25)
+    val (oci, ociJobs) = jobsDuring(Pipeline.run(spark,
+      JsonConfigSource.fromString(ociConfig(ociSrc)).executions(),
+      PipelineOptions(transport = graft.sink.RecordingTransport())))
+    assert(oci.exitCode == 0 && oci.totalUploaded == 25)
+    // footer read, send, writeback
+    assert(ociJobs <= 3, s"OCI execution ran $ociJobs jobs")
+
+    val cmSrc = s"$dir/users.parquet"
+    (1 to 20).map(i => (s"user$i@x.com", s"$i")).toDF("email", "phone").repartition(2)
+      .write.mode(SaveMode.Overwrite).parquet(cmSrc)
+    val config = s"""{
+      "GoogleAdsAccountId": "1234567890",
+      "Sources": [{"Name": "cm src", "Type": "FILE", "Dataset": "parquet", "Table": "$cmSrc"}],
+      "Destinations": [{"Name": "cm dst", "Type": "ADS_CUSTOMER_MATCH_CONTACT_INFO_UPLOAD", "Metadata": ["list1", "REPLACE"]}],
+      "Connections": [{"Enabled": true, "Source": "cm src", "Destination": "cm dst"}]
+    }"""
+    val (cm, cmJobs) = jobsDuring(Pipeline.run(spark,
+      JsonConfigSource.fromString(config).executions(),
+      PipelineOptions(transport = graft.sink.RecordingTransport())))
+    assert(cm.exitCode == 0 && cm.totalUploaded == 20)
+    // footer read, count pass, phase A, phase B
+    assert(cmJobs <= 4, s"REPLACE execution ran $cmJobs jobs")
+  }
+
+  test("the reported error is the first failing batch's, run after run") {
+    val dir = tmpDir()
+    val src = s"$dir/conversions.parquet"
+    // two files read as two partitions, one batch each
+    (1 to 6).map(i => (s"gclid_$i", "2024-05-01T10:00:00.000000", s"$i.5"))
+      .toDF("gclid", "time", "amount").repartition(2)
+      .write.mode(SaveMode.Overwrite).parquet(src)
+    val firstRows = spark.read.parquet(src).select("gclid").as[String].rdd
+      .mapPartitions(it => it.take(1)).collect()
+    assert(firstRows.length == 2, firstRows.toSeq)
+    val gclid = "\"gclid\": \"([^\"]+)\"".r
+    RecordingTransport.failWhen = (_, req) =>
+      Some(s"rejected batch from ${gclid.findFirstMatchIn(req.body).get.group(1)}")
+    val errors = (1 to 3).map { _ =>
+      val report = Pipeline.run(spark,
+        JsonConfigSource.fromString(ociConfig(src)).executions(),
+        PipelineOptions(transport = graft.sink.RecordingTransport()))
+      assert(report.results.map(r => (r.attempted, r.succeeded)) == Seq((6L, 0L)))
+      report.results.head.error
+    }
+    assert(errors.distinct == Seq(Some(s"rejected batch from ${firstRows.head}")), errors)
   }
 }

@@ -298,6 +298,18 @@ class PlanSpec extends SparkTestBase {
     assert(readers == List("scala/graft/plans/BroadcastGuard.scala"), readers)
   }
 
+  test("one conf writer: only Sessions writes a runtime conf, on a clone") {
+    // the pipeline's branch threads share one session; a runtime conf
+    // write anywhere else in the program would leak into their plans
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val main = Paths.get("src/main")
+    val writers = Files.walk(main).iterator().asScala
+      .filter(f => Files.isRegularFile(f) && Files.readString(f).contains("conf.set"))
+      .map(main.relativize(_).toString).toList
+    assert(writers == List("scala/graft/util/Sessions.scala"), writers)
+  }
+
   test("ngram jaccard plan carries no plan-time broadcast hint (per-doc tables)") {
     // The sizes table is one row per DOCUMENT — a forced broadcast() of it
     // OOMs at corpus scale. The plan must carry no hint at all; AQE may

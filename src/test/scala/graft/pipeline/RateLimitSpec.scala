@@ -2,7 +2,6 @@ package graft.pipeline
 
 import graft.model._
 import graft.sink.RecordingTransport
-import org.apache.spark.sql.functions.col
 
 /** The API rate limit is a GLOBAL budget (AppsFlyer: 500 events/s). The
   * sink enforces it by dividing the budget across the partitions that hold
@@ -26,8 +25,8 @@ class RateLimitSpec extends graft.SparkTestBase {
       .repartition(4)
     val opts = PipelineOptions(transport = RecordingTransport())
     val t0 = System.nanoTime()
-    val outcomes = Pipeline.uploadStage(spark, df, execution, branch, opts)
-    val ok = outcomes.filter(col("success")).count()
+    val (_, sent) = Pipeline.uploadStage(spark, df, execution, branch, opts, opts.nowMicros())
+    val ok = sent.succeeded
     val elapsedSec = (System.nanoTime() - t0) / 1e9
     assert(ok == n)
     // 1000 rows at a global 500/s may not finish under ~2 s even with 4

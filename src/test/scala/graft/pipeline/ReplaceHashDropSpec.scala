@@ -38,9 +38,9 @@ class ReplaceHashDropSpec extends graft.SparkTestBase with BeforeAndAfterEach {
     val postCounts = hashed.rdd.mapPartitionsWithIndex((pid, it) =>
       Iterator((pid, it.size))).collect().toMap
     assert(postCounts(0) == 0 && postCounts(1) == 2, s"counts: $postCounts")
-    val outcomes = Pipeline.uploadStage(spark, hashed, execution, branch,
-      PipelineOptions(transport = RecordingTransport()))
-    assert(outcomes.count() == 2)
+    val (_, result) = Pipeline.uploadStage(spark, hashed, execution, branch,
+      PipelineOptions(transport = RecordingTransport()), 0L)
+    assert(result.attempted == 2)
     val sent = RecordingTransport.sent.toArray(Array.empty[RecordingTransport.Sent])
     val opsBodies = sent.filter(_.req.kind == "add_offline_user_data_job_operations").map(_.req.body)
     assert(opsBodies.count(_.contains(""""remove_all": true""")) == 1,
@@ -64,7 +64,7 @@ class ReplaceHashDropSpec extends graft.SparkTestBase with BeforeAndAfterEach {
       Seq[Row](Row(null, null), Row(null, null)), 2), schema)
     val hashed = branch.hasher.get(df, execution.destination.metadata)
     Pipeline.uploadStage(spark, hashed, execution, branch,
-      PipelineOptions(transport = RecordingTransport())).count()
+      PipelineOptions(transport = RecordingTransport()), 0L)
     val sent = RecordingTransport.sent.toArray(Array.empty[RecordingTransport.Sent])
     // non-empty pre-hash, empty post-hash → the ONE-empty-batch cleanup
     // must still clear the stale audience
