@@ -2,9 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.sketch.BloomFilter
 
-/** Scalar kernels behind the custom Catalyst expressions
-  * ([[KernelExpressions]]). Each is a tight JIT-compilable loop invoked once
+/** Scalar kernels behind the rows of [[KernelExpressions]], one row per
+  * public method. Each is a tight JIT-compilable loop invoked once
   * per row from generated code — replacing thousand-term unrolled expression
   * trees (which blow janino's 64 KB method limit and fall back to
   * interpreted eval) and interpreted higher-order-function folds.
@@ -956,6 +957,9 @@ object Kernels {
     }
     z
   }
+
+  /** Bloom-filter membership probe of one long key. */
+  def bloomMightContain(h: Long, bloom: BloomFilter): Boolean = bloom.mightContainLong(h)
 
   /** 60-bit SimHash over whitespace tokens of lower(text): token hash =
     * ph1*2^30 + ph2 (Dedup.tokenHash60); bit j of the signature set when

@@ -38,12 +38,6 @@ object Multimodal {
       .otherwise(lit("application/octet-stream"))
   }
 
-  /** JPEG dimensions from the SOF marker walk (kernel expression — the
-    * segment list is variable-length, so this is a bounded loop, not fixed
-    * offsets like PNG/GIF). Packed `(width << 16) | height`, -1 if absent.
-    */
-  def jpegDimsPacked(bin: Column): Column = KernelExpressions.jpegDims(bin)
-
   /** Dimensions dispatched by container magic; null for non-images and for
     * images with truncated/absent headers. One packed kernel call
     * ([[Kernels.imageDims]], `width << 32 | height`) — the previous
@@ -58,14 +52,6 @@ object Multimodal {
         packed.bitwiseAND(lit(0xFFFFFFFFL)).as("height")))
       .otherwise(lit(null).cast("struct<width:bigint,height:bigint>"))
   }
-
-  /** Resize seam ([[KernelExpressions.resizeStub]]): header dims become
-    * floor(d/factor), the body keeps every factor-th byte; non-images pass
-    * through. The deterministic stand-in for the decode→resample→encode
-    * hop a codec library plugs into (see the module scaladoc on seams).
-    */
-  def resizeStub(bin: Column, factor: Int): Column =
-    KernelExpressions.resizeStub(bin, factor)
 
   /** WAV `fmt ` chunk metadata (sample rate / channels / bits per sample)
     * via the RIFF chunk walk (kernel expression — chunks are variable-

@@ -97,7 +97,7 @@ object TextAnalysis {
     "pt" -> Seq("o", "a", "os", "de", "que", "e", "do", "da", "em", "um"))
 
   def languageId(text: Column): Column =
-    // One codegen'd pass over the token array (KernelExpressions.LangIdPick)
+    // One codegen'd pass over the token array (KernelExpressions.langIdPick)
     // replacing the interpreted per-language filter-lambda formulation; the
     // kernel reproduces array_max over (score, lang) structs exactly — ties
     // resolve to the later language code, deterministically.

@@ -1,6 +1,7 @@
 package graft.io
 
 import graft.model.TransactionalType
+import org.apache.hadoop.fs.{ParentNotDirectoryException, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
@@ -25,19 +26,28 @@ final case class UploadedLog(spark: SparkSession, path: String, tt: Transactiona
     StructType(StructField("timestamp", TimestampType) +:
       tt.keyColumns.map(StructField(_, StringType)))
 
-  /** The log's rows of the 15 days before `nowMicros`. */
+  /** The log's rows of the 15 days before `nowMicros`. Fails, naming the
+    * path, when no log exists and none can be created there (the nearest
+    * existing ancestor is not a directory): read as empty, every row would
+    * be sent before the append failed.
+    */
   def read(): DataFrame = {
     // Path.getFileSystem, not FileSystem.get(new URI(...)): a path with a
     // space or other URI-reserved character would throw URISyntaxException
     // even though Spark itself reads it fine
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val raw =
-      if (fs.exists(new org.apache.hadoop.fs.Path(path)))
-        spark.read.schema(schema).parquet(path)
-      else
+      if (fs.exists(p)) spark.read.schema(schema).parquet(path)
+      else {
+        Iterator.iterate(fs.makeQualified(p).getParent)(_.getParent).takeWhile(_ != null)
+          .find(fs.exists)
+          .filterNot(fs.getFileStatus(_).isDirectory)
+          .foreach(a => throw new ParentNotDirectoryException(
+            s"the _uploaded log $path cannot be created: $a is not a directory"))
         // first run, no log yet: an empty frame with the log's schema
         spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
+      }
     graft.transform.Transforms.retentionFilter(raw, nowMicros)
   }
 

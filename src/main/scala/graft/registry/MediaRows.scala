@@ -75,7 +75,7 @@ object MediaRows extends Family {
     */
   private def mResizeStub(s: SparkSession, dir: String): DataFrame =
     mediaPayloads(s, dir)
-      .withColumn("rz", Multimodal.resizeStub(col("payload"), 2))
+      .withColumn("rz", graft.functions.KernelExpressions.resizeStub(col("payload"), 2))
       .withColumn("dims", Multimodal.imageDims(col("rz")))
       .filter(col("dims").isNotNull)
       .select(col("doc_id"), col("dims.width").as("width"),

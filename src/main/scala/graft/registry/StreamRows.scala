@@ -433,7 +433,7 @@ object StreamRows extends Family {
          FROM k WHERE rn = 1 GROUP BY lang""")
 
   /** Stream-static ANTI-JOIN under the oracle gate
-    * ([[graft.streaming.Streaming.antiJoinUploaded]]): the transactional
+    * ([[graft.transform.Transforms.antiJoinUploaded]]): the transactional
     * activation dedup as a stream — events whose ids are already in the
     * static uploaded set are dropped per micro-batch, state-free. The
     * drained output must equal the batch NOT-EXISTS the oracle runs.
@@ -443,7 +443,7 @@ object StreamRows extends Family {
     drainToMemory(s, dir, "s_anti_join", OutputMode.Append()) { c =>
       val uploaded = t(c, dir, "events")
         .filter(col("event_id") % 3 === 0).select(col("event_id"))
-      graft.streaming.Streaming
+      graft.transform.Transforms
         .antiJoinUploaded(graft.streaming.Streaming.readParquetStream(c, landing),
           uploaded, Seq("event_id"))
         .select(col("event_id"), col("event_type"))

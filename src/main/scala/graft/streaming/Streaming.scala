@@ -394,31 +394,6 @@ object Streaming {
       .groupBy(col("covered_ts"))
       .agg(count(lit(1)).as("n_distinct"))
 
-  /** Stream-static anti-join: the activation-side transactional dedup
-    * ([[graft.transform.Transforms.antiJoinUploaded]]) as a stream — each
-    * micro-batch drops rows whose keys already sit in the static uploaded /
-    * control table. State-FREE (no watermark, no join state): the lookup
-    * is a broadcast or hash join sized by the control table alone.
-    *
-    * Refresh contract (spec-pinned): the static side is a SNAPSHOT for the
-    * lifetime of the streaming query — its file listing is captured in the
-    * query's analyzed plan at start, so control rows appended later are
-    * invisible to every subsequent micro-batch (and an in-place overwrite
-    * breaks the running query outright; writebacks must append, as
-    * [[graft.io.UploadedLog]] does). To pick up a refreshed control
-    * table: restart the query (checkpointed restarts
-    * resume exactly), or move the anti-join into `foreachBatch`, where the
-    * uploaded-side DataFrame is re-created — and its files re-listed — per
-    * batch.
-    */
-  def antiJoinUploaded(stream: DataFrame, uploaded: DataFrame,
-      keys: Seq[String]): DataFrame =
-    // delegate to the batch implementation: it renames the control-table
-    // keys (a same-lineage using-join can silently resolve the condition
-    // to one side) and broadcasts the control table — both apply verbatim
-    // to the stream-static case
-    graft.transform.Transforms.antiJoinUploaded(stream, uploaded, keys)
-
   /** Watermarked stream-stream interval join (click→conversion attribution):
     * left rows match right rows of the same key whose event time falls in
     * [left.ts, left.ts + windowSeconds]. Both sides carry watermarks and the

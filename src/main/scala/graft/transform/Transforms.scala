@@ -26,6 +26,19 @@ object Transforms {
     * large-cluster scale; [[graft.plans.BroadcastGuard]] may drop the
     * hint on an oversized log, and AQE then picks the strategy (shuffle
     * anti-join, or a runtime broadcast if the actual size turns out small).
+    *
+    * `source` may be a stream: a stream-static anti-join drops, per
+    * micro-batch, rows whose keys already sit in the static uploaded table,
+    * state-free (no watermark, no join state). Refresh contract
+    * (spec-pinned): the static side is a SNAPSHOT for the lifetime of the
+    * streaming query — its file listing is captured in the query's
+    * analyzed plan at start, so control rows appended later are invisible
+    * to every subsequent micro-batch (and an in-place overwrite breaks the
+    * running query outright; writebacks must append, as
+    * [[graft.io.UploadedLog]] does). To pick up a refreshed control table:
+    * restart the query (checkpointed restarts resume exactly), or move the
+    * anti-join into `foreachBatch`, where the uploaded-side DataFrame is
+    * re-created — and its files re-listed — per batch.
     */
   def antiJoinUploaded(source: DataFrame, uploaded: DataFrame,
       keys: Seq[String]): DataFrame = {

@@ -141,7 +141,7 @@ class MultimodalSpec extends SparkTestBase {
     val jpg = "FFD8" + "FFC0" + "000B" + "08" + "0004" + "0006" + "01" + "011100" +
       "FFDA" + "0008" + "01" + "0100" + "003F00" + "0102030405"
     val rows = Seq(png, gif, wav, jpg).toDF("hx")
-      .select(Multimodal.resizeStub(unhex(col("hx")), 2).as("rz"))
+      .select(graft.functions.KernelExpressions.resizeStub(unhex(col("hx")), 2).as("rz"))
       .withColumn("dims", Multimodal.imageDims(col("rz")))
       .select(col("dims.width"), col("dims.height"), length(col("rz")))
       .collect()

@@ -246,7 +246,29 @@ class PipelineSpec extends SparkTestBase with BeforeAndAfterEach {
     val dir = tmpDir()
     val src = s"$dir/conversions.parquet"
     writeOciSource(src, 5)
-    // the log's parent is a regular file, so the append fails
+    // the log is one parquet FILE with the log's schema: it reads as 0 rows,
+    // and the append, which writes a file under it, fails
+    val empty = s"$dir/empty_log"
+    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+        org.apache.spark.sql.types.StructType.fromDDL("timestamp TIMESTAMP, gclid STRING, time STRING"))
+      .coalesce(1).write.parquet(empty)
+    val part = new java.io.File(empty).listFiles().filter(_.getName.endsWith(".parquet")).head
+    java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(s"$dir/log.parquet"))
+    val report = Pipeline.run(spark,
+      JsonConfigSource.fromString(ociConfig(src)).executions(),
+      PipelineOptions(transport = graft.sink.RecordingTransport(),
+        uploadedLogPathFor = (_, _) => s"$dir/log.parquet"))
+    assert(report.results.size == 1, report.results)
+    val r = report.results.head
+    assert((r.attempted, r.succeeded) == ((5L, 5L)))
+    assert(r.error.exists(_.startsWith("Error appending to the _uploaded log")), r.error)
+    assert(report.exitCode == 1)
+  }
+
+  test("an _uploaded log path under a regular file fails the read, so nothing is sent") {
+    val dir = tmpDir()
+    val src = s"$dir/conversions.parquet"
+    writeOciSource(src, 5)
     java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$dir/blocker"))
     val report = Pipeline.run(spark,
       JsonConfigSource.fromString(ociConfig(src)).executions(),
@@ -254,8 +276,9 @@ class PipelineSpec extends SparkTestBase with BeforeAndAfterEach {
         uploadedLogPathFor = (_, _) => s"$dir/blocker/log.parquet"))
     assert(report.results.size == 1, report.results)
     val r = report.results.head
-    assert((r.attempted, r.succeeded) == ((5L, 5L)))
-    assert(r.error.exists(_.startsWith("Error appending to the _uploaded log")), r.error)
+    assert((r.attempted, r.succeeded) == ((0L, 0L)))
+    assert(r.error.exists(_.contains(s"$dir/blocker/log.parquet")), r.error)
+    assert(RecordingTransport.sent.isEmpty, RecordingTransport.sent)
     assert(report.exitCode == 1)
   }
 

@@ -221,6 +221,8 @@ class SqlFunctionsSpec extends SparkTestBase {
     assert(missing.isEmpty,
       s"no sweep vector for: ${missing.mkString(", ")} — add literal args " +
         "to SqlFunctionsSpec's drift sweep when registering a SQL function")
+    assert((argsFor.keySet -- registered).isEmpty,
+      s"sweep vectors for unregistered functions: ${argsFor.keySet -- registered}")
     for (name <- registered) {
       // executes and returns a value on a well-formed vector...
       val row = spark.sql(s"SELECT $name(${argsFor(name)}) AS r").head()
@@ -230,6 +232,34 @@ class SqlFunctionsSpec extends SparkTestBase {
       assert(e.getMessage.contains("argument"),
         s"$name arity error lost its actionable message: ${e.getMessage.take(200)}")
     }
+  }
+
+  test("vector kernels reject arrays of other element types at analysis") {
+    val ints = Seq((Seq(1, 2), Seq(3, 4))).toDF("a", "b")
+    val viaColumn = intercept[org.apache.spark.sql.AnalysisException](
+      ints.select(graft.functions.KernelExpressions.vecCosine(col("a"), col("b"))))
+    assert(viaColumn.getMessage.contains("must be array<float|double>"), viaColumn.getMessage)
+    val viaSql = intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT graft_vec_dot(array(1, 2), array(3, 4))"))
+    assert(viaSql.getMessage.contains("must be array<float|double>"), viaSql.getMessage)
+  }
+
+  test("every public Kernels method is named by exactly one kernel row, with its arity") {
+    import graft.functions.{KernelExpressions, Kernels}
+    val methods = Kernels.getClass.getDeclaredMethods.toSeq.filter(m =>
+      java.lang.reflect.Modifier.isPublic(m.getModifiers) && m.getParameterCount > 0 &&
+        !m.getName.contains("$"))
+    val rows = KernelExpressions.all
+    assert(rows.map(_.method).sorted == methods.map(_.getName).sorted,
+      s"methods without a row: ${methods.map(_.getName).diff(rows.map(_.method))}; " +
+        s"rows without a method: ${rows.map(_.method).diff(methods.map(_.getName))}")
+    for (r <- rows)
+      assert(methods.find(_.getName == r.method).get.getParameterCount == r.arity,
+        s"${r.name}: row arity ${r.arity} differs from Kernels.${r.method}")
+    assert(rows.map(_.name).distinct.size == rows.size)
+    val sqlNames = rows.flatMap(_.sql.map(_.name))
+    assert(sqlNames.distinct.size == sqlNames.size, sqlNames.diff(sqlNames.distinct))
+    assert(GraftFunctions.all.map(_._1.funcName).sorted == (sqlNames :+ "graft_topk").sorted)
   }
 
   test("tokenCount pins the empty-filtered whitespace definition on adversarial text") {

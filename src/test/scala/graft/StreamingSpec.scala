@@ -339,7 +339,7 @@ class StreamingSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Long]
     val qn = s"anti_refresh_${System.nanoTime()}"
-    val query = Streaming.antiJoinUploaded(
+    val query = graft.transform.Transforms.antiJoinUploaded(
         input.toDF.withColumnRenamed("value", "event_id"), uploaded, Seq("event_id"))
       .writeStream.format("memory").queryName(qn)
       .outputMode("append").start()
@@ -359,7 +359,7 @@ class StreamingSpec extends SparkTestBase {
     // a RESTARTED query (fresh static DataFrame) sees the appended row
     val input2 = MemoryStream[Long]
     val qn2 = s"anti_refresh2_${System.nanoTime()}"
-    val q2 = Streaming.antiJoinUploaded(
+    val q2 = graft.transform.Transforms.antiJoinUploaded(
         input2.toDF.withColumnRenamed("value", "event_id"),
         spark.read.parquet(dir), Seq("event_id"))
       .writeStream.format("memory").queryName(qn2)
