@@ -22,6 +22,10 @@ object ExplainDump {
       else (args, false)
     val spark = graft.util.Sessions.start("graft-explain", graft.io.EventTs.NanosAsLong)
     spark.sparkContext.setLogLevel("ERROR")
+    // ...but each hint BroadcastGuard strips stays on stderr as one
+    // `BroadcastGuard:` line, next to the dumps it changed
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "graft.plans.BroadcastGuard", org.apache.logging.log4j.Level.WARN)
     Files.createDirectories(Paths.get(outDir))
     // A typo'd query name or a planning failure must fail the RUN, not
     // produce a "successful" dump with silently missing evidence files.

@@ -200,7 +200,7 @@ object Versioned {
     */
   def readMergeOnRead(spark: SparkSession, path: String, keyCols: Seq[String],
       version: Option[Int] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
+    import org.apache.spark.sql.functions.col
     val v = version.orElse(latestVersion(spark, path)).getOrElse(
       throw new IllegalStateException(s"no published version under $path"))
     val base = spark.read.parquet(s"$path/v=$v")
@@ -208,7 +208,7 @@ object Versioned {
     else {
       val dels = spark.read.parquet(dvDir(path, v))
         .select(keyCols.map(col): _*).distinct()
-      base.join(broadcast(dels), keyCols, "left_anti")
+      base.join(dels, keyCols, "left_anti")
     }
   }
 }

@@ -235,7 +235,7 @@ object Dedup {
       // arrays for the RARE candidate pairs only — there the pin is
       // storage without amortization (measured 1.2-1.4x worse at sf0.1),
       // so it fetches the candidate slice instead.
-      .pinned(true)
+      .pinned()
     val exploded = shingled.select(col("id"), size(col("shingles")).as("sz"),
       explode(col("shingles")).as("shingle"))
     val dfs = exploded.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
@@ -303,7 +303,7 @@ object Dedup {
         .as("shingles"))
       // pinned for the same reason as [[shingleCandidates]]: df counts,
       // prefix window, and both exact-verify sides all consume it
-      .pinned(true)
+      .pinned()
     val exploded = shingled.select(col("id"), size(col("shingles")).as("sz"),
       explode(col("shingles")).as("shingle"))
     val dfs = exploded.groupBy(col("shingle")).agg(count(lit(1)).as("sdf"))
@@ -457,7 +457,7 @@ object Dedup {
       .dropDuplicates("id_a", "id_b")
       // pinned: consumed by the candidate-id semi-join below AND the
       // verify join — unpinned, the whole banding chain would run twice
-      .pinned(true)
+      .pinned()
     // Exact-verify shingles for CANDIDATE ids only (opt guide §8: decide
     // with small rows, fetch the heavy payload once): near-dup candidates
     // are rare by definition, so a broadcast semi-join restricts the text
@@ -472,7 +472,7 @@ object Dedup {
       .join(candIds, Seq("id"), "left_semi")
       .select(col("id"),
         graft.functions.KernelExpressions.charShingleHashes(col("__text"), shingleSize).as("shingles"))
-      .pinned(true) // candidate-scale; both verify sides read it
+      .pinned() // candidate-scale; both verify sides read it
     verifyJaccard(candidates, shingledCand, threshold)
   }
 
@@ -492,17 +492,9 @@ object Dedup {
   private def minhashLshPairsFromShingles(shingled: DataFrame,
       numHashes: Int, numBands: Int, threshold: Double,
       maxBucket: Int): DataFrame = {
-    require(numBands > 0 && numHashes % numBands == 0,
-      s"numHashes ($numHashes) must be a positive multiple of numBands ($numBands)")
-    val rowsPerBand = numHashes / numBands
-    val banded = shingled
-      .select(col("id"), minhashSignature(col("shingles"), numHashes).as("sig"))
-      .filter(element_at(col("sig"), 1) =!= MinhashP)
-      .select(col("id"),
-        explode(array((0 until numBands).map(b =>
-          struct(lit(b).as("band"),
-            slice(col("sig"), b * rowsPerBand + 1, rowsPerBand).as("key"))): _*))
-          .as("bk"))
+    val banded = bandRows(
+      shingled.select(col("id"), minhashSignature(col("shingles"), numHashes).as("sig")),
+      numHashes, numBands)
     val capped = capBuckets(banded, "bk", maxBucket)
     val a = capped.select(col("bk").as("bk"), col("id").as("id_a"))
     val b = capped.select(col("bk").as("bk2"), col("id").as("id_b"))
@@ -532,7 +524,7 @@ object Dedup {
       // sides) would otherwise each re-run the shingle kernel over the
       // evaluation slice (opt guide §2.4 — share one materialization);
       // the slice is bounded by the caller's contract, so the pin is small
-      .pinned(true)
+      .pinned()
     // AllPairs-style size filter, LOSSLESS at the threshold: jac(A,B) <=
     // min(|A|,|B|) / max(|A|,|B|), so any pair clearing `threshold` must
     // have size ratio >= threshold — candidate volume drops before a
@@ -561,29 +553,38 @@ object Dedup {
         round(col("n_lsh") / col("n_exact"), 6).as("recall"))
   }
 
-  /** Banded minhash signatures — (id, bk = struct(band, key)) rows, the
-    * LSH blocking unit shared by the self-join pairs path and the
+  /** (id, sig) minhash signatures → (id, bk = struct(band, key)) rows, the
+    * LSH blocking unit shared by the self-join pairs paths and the
     * materialized index. Shingle-less docs (sentinel signature) are
     * excluded: they can never clear a threshold > 0 and would otherwise
-    * all collide in one bucket.
+    * all collide in one bucket. The check runs on the band rows, because a
+    * filter on `sig` is pushed below the projection that names it and the
+    * signature is then computed twice per row. It is exact there: a real
+    * hash is always < [[MinhashP]], and only an empty shingle set keeps the
+    * [[MinhashP]] fill, so a band starts with the sentinel exactly when its
+    * doc has no shingle.
     */
-  private def bandSignatures(df: DataFrame, idCol: String, textCol: String,
-      numHashes: Int, numBands: Int, shingleSize: Int): DataFrame = {
+  private def bandRows(sigs: DataFrame, numHashes: Int, numBands: Int): DataFrame = {
     // numBands > numHashes would silently produce EMPTY band keys (every
     // doc in one bucket -> capBuckets drops the corpus, zero pairs, no
     // error); non-divisible values would silently ignore trailing hashes
     require(numBands > 0 && numHashes % numBands == 0,
       s"numHashes ($numHashes) must be a positive multiple of numBands ($numBands)")
     val rowsPerBand = numHashes / numBands
-    df.select(col(idCol).as("id"),
-      graft.functions.KernelExpressions.minhashSig(col(textCol), shingleSize, numHashes).as("sig"))
-      .filter(element_at(col("sig"), 1) =!= MinhashP)
-      .select(col("id"),
+    sigs.select(col("id"),
         explode(array((0 until numBands).map(b =>
           struct(lit(b).as("band"),
             slice(col("sig"), b * rowsPerBand + 1, rowsPerBand).as("key"))): _*))
           .as("bk"))
+      .filter(element_at(col("bk.key"), 1) =!= MinhashP)
   }
+
+  /** [[bandRows]] of `df`'s text, signed by the fused minhash kernel. */
+  private def bandSignatures(df: DataFrame, idCol: String, textCol: String,
+      numHashes: Int, numBands: Int, shingleSize: Int): DataFrame =
+    bandRows(df.select(col(idCol).as("id"),
+        graft.functions.KernelExpressions.minhashSig(col(textCol), shingleSize, numHashes).as("sig")),
+      numHashes, numBands)
 
   /** Materialize an LSH index for a corpus: the banded signatures (written
     * partitioned by band — each band's buckets co-group into their own

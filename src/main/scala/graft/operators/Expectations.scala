@@ -80,7 +80,7 @@ object Expectations {
         val orphans = df.select(col(c)).filter(col(c).isNotNull)
           .join(dim.select(col(dc).as(c)), Seq(c), "left_anti")
           .agg(count(lit(1)).as(s"__o$i"))
-        metrics = metrics.crossJoin(broadcast(orphans))
+        metrics = metrics.crossJoin(orphans)
       case _ => ()
     }
     // `div`, not `/`: Spark's Column./ is true division (double) — the

@@ -45,7 +45,7 @@ object Graph {
     // iteration's plan re-derives the node set and the normalized
     // transition table from source (ReuseExchange may or may not
     // collapse the copies; at 5+ rounds the rebuild dominates)
-    val n = nodes.select(col(idCol).as("id")).distinct().pinned(true)
+    val n = nodes.select(col(idCol).as("id")).distinct().pinned()
     // driver-side scalar: node count is metadata (like the centroid
     // collects in Similarity), not row data
     val nCount = n.count().toDouble
@@ -60,7 +60,7 @@ object Graph {
       .withColumn("p", col("w") / when(col("_wtot") === 0.0, lit(null))
         .otherwise(col("_wtot")))
       .select(col("src"), col("dst"), col("p"))
-      .pinned(true)
+      .pinned()
     var r = n.select(col("id"), lit(1.0 / nCount).as("r"))
     var i = 0
     while (i < iterations) {
@@ -73,7 +73,7 @@ object Graph {
             lit(damping) * coalesce(col("c"), lit(0.0))).as("r"))
       i += 1
       if (i % checkpointEvery == 0 && i < iterations)
-        r = r.pinned(true)
+        r = r.pinned()
     }
     r.select(col("id"), col("r").as("rank"))
   }
@@ -103,13 +103,13 @@ object Graph {
       checkpointEvery: Int = 5): DataFrame = {
     require(iterations >= 0, "iterations must be non-negative")
     require(checkpointEvery > 0, "checkpointEvery must be positive")
-    val n = nodes.select(col(idCol).as("id")).distinct().pinned(true)
+    val n = nodes.select(col(idCol).as("id")).distinct().pinned()
     // restrict seeds to the node set BEFORE sizing the teleport: a seed id
     // absent from `nodes` would otherwise keep its 1/|S| share of restart
     // mass while the join drops it — silently deflating every rank
     val sd = seeds.select(col(seedIdCol).as("id")).distinct()
       .join(n, Seq("id"), "left_semi")
-      .pinned(true)
+      .pinned()
     val sCount = sd.count().toDouble
     // An empty (or node-disjoint) seed set means no restart mass exists:
     // the natural result is NO ranked nodes, not a failed job — an empty
@@ -119,7 +119,7 @@ object Graph {
     val tele = n.join(sd.withColumn("t", lit(1.0 / sCount)), Seq("id"),
         "left_outer")
       .select(col("id"), coalesce(col("t"), lit(0.0)).as("t"))
-      .pinned(true)
+      .pinned()
     val trans = edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"),
         col(wCol).cast("double").as("w"))
@@ -131,7 +131,7 @@ object Graph {
       .withColumn("p", col("w") / when(col("_wtot") === 0.0, lit(null))
         .otherwise(col("_wtot")))
       .select(col("src"), col("dst"), col("p"))
-      .pinned(true)
+      .pinned()
     var r = tele.select(col("id"), col("t").as("r"))
     var i = 0
     while (i < iterations) {
@@ -144,7 +144,7 @@ object Graph {
             lit(damping) * coalesce(col("c"), lit(0.0))).as("r"))
       i += 1
       if (i % checkpointEvery == 0 && i < iterations)
-        r = r.pinned(true)
+        r = r.pinned()
     }
     r.select(col("id"), col("r").as("rank"))
   }
@@ -171,7 +171,7 @@ object Graph {
     // lookup all consume it (tree-shaped reuse would re-dedup per consumer)
     val und = edges.select(least(a, b).as("a"), greatest(a, b).as("b"))
       .where(col("a") =!= col("b")).distinct()
-      .pinned(true)
+      .pinned()
     val deg = und.select(col("a").as("id")).union(und.select(col("b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("deg"))
     // orient each edge toward the higher (deg, id) endpoint
@@ -183,7 +183,7 @@ object Graph {
         struct(col("a").as("lo"), col("b").as("hi")))
         .otherwise(struct(col("b").as("lo"), col("a").as("hi"))).as("e"))
       .select(col("e.lo").as("lo"), col("e.hi").as("hi"))
-      .pinned(true) // self-joined below — two consumers
+      .pinned() // self-joined below — two consumers
     // wedges at the lowest apex; y < z by id, so the closing edge can be
     // looked up in the CANONICAL (a < b) list with a plain two-column
     // equi-join — an OR over the oriented list would plan as a nested loop
@@ -221,7 +221,7 @@ object Graph {
     require(!canonicalInput || symmetric,
       "canonicalInput implies symmetric: canonical a<b edges are the " +
         "undirected encoding, votes must count both endpoints")
-    val n = nodes.select(col(idCol).as("id")).distinct().pinned(true)
+    val n = nodes.select(col(idCol).as("id")).distinct().pinned()
     val und = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .where(col("a") =!= col("b"))
     // `symmetric = true`: the caller guarantees every edge already appears
@@ -252,7 +252,7 @@ object Graph {
          else und.union(und.select(col("b").as("a"), col("a").as("b"))))
         .distinct()
         .select(col("a").as("src"), col("b").as("dst"))
-        .pinned(true)
+        .pinned()
     var lab = n.select(col("id"), col("id").as("label"))
     var i = 0
     while (i < rounds) {
@@ -278,12 +278,12 @@ object Graph {
         .select(col("id"), coalesce(col("newLabel"), col("id")).as("label"))
       i += 1
       if (i % checkpointEvery == 0 && i < rounds)
-        lab = lab.pinned(true)
+        lab = lab.pinned()
     }
     // the RESULT is checkpointed too (V rows — cheap): callers compose it
     // into further joins/aggregations, and without this every downstream
     // reference replays the whole round chain
-    if (rounds > 0) lab.pinned(true) else lab
+    if (rounds > 0) lab.pinned() else lab
   }
 
   /** Deterministic hash-seeded random walks — the DeepWalk/node2vec corpus
@@ -319,7 +319,7 @@ object Graph {
     val adj = base
       .withColumn("idx", row_number().over(
         Window.partitionBy(col("src")).orderBy(col("dst"))).cast("long") - 1L)
-      .pinned(true)
+      .pinned()
     val deg = adj.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     var out = seeds.select(col(idCol).as("walk")).distinct()
       .select(col("walk"), lit(0L).as("step"), col("walk").as("node"))
@@ -376,10 +376,10 @@ object Graph {
       iterations: Int = 4, checkpointEvery: Int = 2): DataFrame = {
     require(iterations >= 1, "iterations must be positive")
     require(checkpointEvery > 0, "checkpointEvery must be positive")
-    val n = nodes.select(col(idCol).as("id")).distinct().pinned(true)
+    val n = nodes.select(col(idCol).as("id")).distinct().pinned()
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
         col(wCol).cast("double").as("w"))
-      .pinned(true)
+      .pinned()
     // BATCHED normalization (opt round 13; guide §1.2 "fewer actions"):
     // in exact arithmetic a_k = â_k/‖â_k‖₁ where â_k is the UNNORMALIZED
     // recursion â_k = Σ w·ĥ_{k-1}, ĥ_k = Σ w·â_k — dividing by the L1
@@ -408,8 +408,8 @@ object Graph {
         .agg(sum(col("w") * col("a")).as("h"))
       i += 1
       if (i % checkpointEvery == 0 && i < iterations) {
-        aRaw = aRaw.pinned(true)
-        hRaw = hRaw.pinned(true)
+        aRaw = aRaw.pinned()
+        hRaw = hRaw.pinned()
       }
     }
     // z = 0 (empty edge set / zero-weight round) degrades to all-zero
@@ -420,8 +420,8 @@ object Graph {
     val zh = hRaw.agg(coalesce(sum(abs(col("h"))), lit(0.0)).as("zh"))
     n.join(hRaw, Seq("id"), "left_outer")
       .join(aRaw, Seq("id"), "left_outer")
-      .crossJoin(broadcast(zh))
-      .crossJoin(broadcast(za))
+      .crossJoin(zh)
+      .crossJoin(za)
       .select(col("id"),
         when(col("zh") === 0.0, lit(0.0))
           .otherwise(coalesce(col("h"), lit(0.0)) / col("zh")).as("hub"),
@@ -453,7 +453,7 @@ object Graph {
       symmetric: Boolean = false,
       canonicalInput: Boolean = false): DataFrame = {
     val lab = labels.select(col(idCol).as("id"), col(labelCol).as("community"))
-      .pinned(true) // three consumers: degrees join, both intra endpoints
+      .pinned() // three consumers: degrees join, both intra endpoints
     val und = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .where(col("a") =!= col("b"))
     // `canonicalInput = true`: caller passes the canonical a<b DISTINCT
@@ -466,7 +466,7 @@ object Graph {
         else und.select(least(col("a"), col("b")).as("a"),
           greatest(col("a"), col("b")).as("b")))
       .distinct()
-      .pinned(true) // feeds m, degrees, and the intra count
+      .pinned() // feeds m, degrees, and the intra count
     val mRow = canon.agg(count(lit(1)).as("m"))
     val deg = canon.select(explode(array(col("a"), col("b"))).as("id"))
       .groupBy(col("id")).agg(count(lit(1)).as("deg"))
@@ -481,7 +481,7 @@ object Graph {
       .groupBy(col("ca").as("community")).agg(count(lit(1)).as("intra_edges"))
     val ie = coalesce(col("intra_edges"), lit(0L))
     nodeStats.join(intra, Seq("community"), "left_outer")
-      .crossJoin(broadcast(mRow))
+      .crossJoin(mRow)
       .select(col("community"), col("n_nodes"), ie.as("intra_edges"),
         col("degree_sum"),
         // m = 0 (empty edge set) would make every q_term 0/0 = NaN —
@@ -522,7 +522,7 @@ object Graph {
         val c = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
         c.union(c.select(col("dst").as("src"), col("src").as("dst")))
       } else edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
-        .pinned(true)
+        .pinned()
     var settled = sources.select(col(sourceIdCol).as("id")).distinct()
       .withColumn("hops", lit(0))
     var frontier = settled
@@ -533,7 +533,7 @@ object Graph {
         .select(e("dst").as("id")).distinct()
         .join(settled, Seq("id"), "left_anti")
         .withColumn("hops", lit(h))
-      settled = settled.union(next).pinned(true)
+      settled = settled.union(next).pinned()
       // re-derive the frontier from the checkpointed set so BOTH loop
       // variables have flat lineage; an empty frontier ends the walk —
       // graphs of diameter d pay d rounds, not maxHops (the emptiness
@@ -579,10 +579,10 @@ object Graph {
         c.union(c.select(col("dst").as("src"), col("src").as("dst")))
       } else edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
         .distinct())
-        .pinned(true)
+        .pinned()
     var settled = seeds.select(col(seedIdCol).as("seed")).distinct()
       .select(col("seed"), col("seed").as("id"), lit(0).as("hops"))
-      .pinned(true)
+      .pinned()
     var h = 1
     var exhausted = false
     while (h <= maxHops && !exhausted) {
@@ -591,7 +591,7 @@ object Graph {
         .select(frontier("seed").as("seed"), e("dst").as("id")).distinct()
         .join(settled, Seq("seed", "id"), "left_anti")
         .withColumn("hops", lit(h))
-      settled = settled.union(next).pinned(true)
+      settled = settled.union(next).pinned()
       exhausted = settled.where(col("hops") === h).isEmpty
       h += 1
     }
@@ -631,7 +631,7 @@ object Graph {
     require(rounds >= 0, "rounds must be non-negative")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
         col(tsCol).cast("long").as("ts")).distinct()
-      .pinned(true)
+      .pinned()
     var arr = sources.select(col(idCol).as("id"),
         col(t0Col).cast("long").as("arrival"))
       .groupBy(col("id")).agg(min(col("arrival")).as("arrival"))
@@ -641,7 +641,7 @@ object Graph {
         .select(e("dst").as("id"), e("ts").as("arrival"))
       arr = arr.unionByName(relax)
         .groupBy(col("id")).agg(min(col("arrival")).as("arrival"))
-        .pinned(true)
+        .pinned()
       r += 1
     }
     arr
@@ -681,13 +681,13 @@ object Graph {
         val m = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
             col(wCol).cast("long").as("w"))
           .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
-          .pinned(true)
+          .pinned()
         m.union(m.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-          .pinned(true)
+          .pinned()
       } else edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
           col(wCol).cast("long").as("w"))
         .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
-        .pinned(true)
+        .pinned()
     var dist = sources.select(col(idCol).as("id")).distinct()
       .select(col("id"), lit(0L).as("dist"))
     var r = 0
@@ -696,7 +696,7 @@ object Graph {
         .select(e("dst").as("id"), (dist("dist") + e("w")).as("dist"))
       dist = dist.unionByName(relax)
         .groupBy(col("id")).agg(min(col("dist")).as("dist"))
-        .pinned(true)
+        .pinned()
       r += 1
     }
     dist
@@ -743,7 +743,7 @@ object Graph {
       else edges.select(a.as("id"), b.as("nb"))
         .union(edges.select(b.as("id"), a.as("nb")))
         .where(col("id") =!= col("nb")).distinct())
-      .pinned(true) // feeds degrees, candidates, and the cap
+      .pinned() // feeds degrees, candidates, and the cap
     val deg = adj.groupBy(col("id")).agg(count(lit(1)).as("deg"))
     // skew guard: hub NEIGHBORS above the cap leave candidate generation
     val hubs = deg.where(col("deg") > maxDegree)
@@ -782,7 +782,7 @@ object Graph {
       symmetric: Boolean = false,
       canonicalInput: Boolean = false): DataFrame = {
     require(k >= 1 && rounds >= 1, s"need k >= 1 and rounds >= 1, got k=$k rounds=$rounds")
-    val n = nodes.select(col(idCol).as("id")).distinct().pinned(true)
+    val n = nodes.select(col(idCol).as("id")).distinct().pinned()
     val und = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .where(col("a") =!= col("b"))
     // `symmetric = true`: caller guarantees the edge list already carries
@@ -803,7 +803,7 @@ object Graph {
         else und.union(und.select(col("b").as("a"), col("a").as("b"))))
         .distinct()
         .select(col("a").as("src"), col("b").as("dst")))
-        .pinned(true)
+        .pinned()
     var alive = n
     var removed = n.limit(0).select(col("id"), lit(0L).as("removed_round"))
     var r = 1
@@ -820,8 +820,8 @@ object Graph {
       removed = removed.unionByName(doomed)
       alive = alive.join(doomed.select(col("id")), Seq("id"), "left_anti")
       if (r % checkpointEvery == 0 && r < rounds) {
-        alive = alive.pinned(true)
-        removed = removed.pinned(true)
+        alive = alive.pinned()
+        removed = removed.pinned()
       }
       r += 1
     }

@@ -54,7 +54,7 @@ object Importance {
         sum(when(col("tgt"), 1L).otherwise(0L)).as("tc"))
       .select(col("b"), expr(s"(tc + 1) * $Scale div (rc + 1)").as("term"))
     // every observed bucket is in the model by construction => inner join
-    val scored = occ.join(broadcast(model), Seq("b"))
+    val scored = occ.join(model, Seq("b"))
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_tokens"), sum(col("term")).as("s"))
       .select(col("id"), col("n_tokens"), expr("s div n_tokens").as("dsir_score"))

@@ -365,7 +365,7 @@ object Marketing {
     // coalitions no observed mask fits into simply produce no row and
     // default to v = 0 at lookup. v9 = round-half-up(k/nu) in integer
     // 1e9ths, the same ratio arithmetic as exact.
-    val v9 = masks.join(broadcast(coals.toDF("s")),
+    val v9 = masks.join(coals.toDF("s"),
         col("mask").bitwiseAND(col("s")) === col("mask"))
       .groupBy(col("s"))
       .agg(sum(col("nu")).as("nu"), sum(col("k")).as("k"))
@@ -412,7 +412,7 @@ object Marketing {
     val wPrev = Window.orderBy(col("t")).rowsBetween(Window.unboundedPreceding, -1)
     val wCum = Window.orderBy(col("t")).rowsBetween(Window.unboundedPreceding, 0)
     val total = lt.agg(count(lit(1)).as("total"))
-    g.crossJoin(broadcast(total))
+    g.crossJoin(total)
       .withColumn("at_risk",
         col("total") - coalesce(sum(col("n_all")).over(wPrev), lit(0L)))
       .filter(col("n_deaths") > 0)
@@ -463,12 +463,12 @@ object Marketing {
       col(idCol).as("eid"), col(typeCol).as("ch"))
     val w = Window.partitionBy(col("u")).orderBy(col("t"), col("eid"))
     val pos = base.withColumn("pos", row_number().over(w))
-      .pinned(true) // feeds first-purchase, journeys, and starts
+      .pinned() // feeds first-purchase, journeys, and starts
     val fp = pos.filter(col("ch") === convType)
       .groupBy(col("u")).agg(min(col("pos")).as("fp"))
     val journey = pos.join(fp, Seq("u"), "left")
       .filter(col("fp").isNull || col("pos") < col("fp"))
-      .pinned(true) // two window passes below share one build
+      .pinned() // two window passes below share one build
     val wj = Window.partitionBy(col("u")).orderBy(col("pos"))
     val tr = journey
       .withColumn("dst", coalesce(lead(col("ch"), 1).over(wj),

@@ -82,7 +82,7 @@ object NgramLm {
   def lmScore(docs: DataFrame, idCol: String, langCol: String, textCol: String,
       model: DataFrame): DataFrame = {
     val scored = occurrences(docs, idCol, langCol, textCol)
-      .join(broadcast(model), Seq("lang", "h1", "h2"), "left")
+      .join(model, Seq("lang", "h1", "h2"), "left")
       .groupBy(col("id"), col("lang"))
       .agg(count(lit(1)).as("n_bigrams"),
         sum(coalesce(col("term"), lit(0L))).as("s"))
@@ -132,7 +132,7 @@ object NgramLm {
           .as("__t_head"),
         max(when(col("__cum") * 3 >= col("__total") * 2, col(scoreCol)))
           .as("__t_mid"))
-    scored.join(broadcast(th), Seq(groupCol))
+    scored.join(th, Seq(groupCol))
       .withColumn("bucket",
         when(col(scoreCol) >= col("__t_head"), lit("head"))
           .when(col(scoreCol) >= col("__t_mid"), lit("middle"))

@@ -82,7 +82,7 @@ object Pq {
       col(vecCol).cast("array<double>").as("q_vec"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(round(col("adist"), 6).asc, col("neighbor_id"))
-    c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
+    c.join(q, col("query_id") =!= col("neighbor_id"))
       .withColumn("adist", adcDistanceExpr(col("codes"), col("q_vec"), codebooks))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
@@ -249,7 +249,7 @@ object Pq {
     val subs = corpus.select(explode(array((0 until numSub).map(m =>
         struct(lit(m).as("m"), sub(col(vecCol), m, dsub).as("sub"))): _*)).as("s"))
       .select(col("s.m").as("m"), col("s.sub").as("sub"))
-      .pinned(true)
+      .pinned()
     var books: Seq[Seq[Seq[Double]]] =
       Seq.fill(numSub)(VectorOps.rademacherPlanes(ksub, dsub))
     for (_ <- 0 until iters) {

@@ -41,7 +41,7 @@ object Retrieval {
       explode(graft.functions.KernelExpressions.wordNgramStrings(col(textCol), 1))
         .as("term"))
       .groupBy(col("id"), col("grp"), col("term")).agg(count(lit(1)).as("c"))
-      .pinned(true)
+      .pinned()
     val nDocs = docs.filter(trim(col(textCol)) =!= "")
       .agg(count(lit(1)).as("n_docs"))
     val tf = perDoc.groupBy(col("grp"), col("term")).agg(sum(col("c")).as("tf"))
@@ -51,7 +51,7 @@ object Retrieval {
     // map-side append of constants; Catalyst folds literal join keys, so
     // a constant-key equi-join degrades to the same nested-loop node).
     tf.join(dfreq, Seq("term"))
-      .crossJoin(broadcast(nDocs))
+      .crossJoin(nDocs)
       .withColumn("score",
         round(col("tf") * log(col("n_docs").cast("double") / col("df")), 6))
       .withColumn("rank", row_number().over(w).cast("long"))
@@ -84,16 +84,16 @@ object Retrieval {
       explode(graft.functions.KernelExpressions.wordNgramStrings(col(textCol), 1))
         .as("term"))
       .groupBy(col("id"), col("term")).agg(count(lit(1)).as("c"))
-      .pinned(true)
+      .pinned()
     val hits = perDoc.filter(col("term").isin(queryTerms: _*))
     val dl = perDoc.groupBy(col("id")).agg(sum(col("c")).as("dl"))
     val stats = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_len"))
     val dfreq = hits.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val tf = hits.select(col("id"), col("term"), col("c").as("tf"))
     val contrib = tf
-      .join(broadcast(dfreq), Seq("term"))
+      .join(dfreq, Seq("term"))
       .join(dl, Seq("id"))
-      .crossJoin(broadcast(stats))
+      .crossJoin(stats)
       .withColumn("avgdl", col("total_len").cast("double") / col("n_docs"))
       .withColumn("idf", log(lit(1.0) +
         (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))))
@@ -178,8 +178,8 @@ object Retrieval {
     val outw = edges.groupBy(col("u")).agg(sum(col("w")).as("ow"))
     val p = edges.join(outw, "u")
       .select(col("u"), col("v"), expr("w * 1000000L div ow").as("p_e6"))
-      .pinned(true) // the loop invariant: every round joins it
-    val nodes = p.select(col("u")).distinct().pinned(true)
+      .pinned() // the loop invariant: every round joins it
+    val nodes = p.select(col("u")).distinct().pinned()
     val n = nodes.count()
     // an empty co-occurrence graph (empty corpus, or no document with two
     // consecutive tokens) has no keywords: return the empty top-k frame
@@ -199,7 +199,7 @@ object Retrieval {
       // depth-2 join/agg chain plans fine, and each pin is an eager job —
       // 5 pins instead of 10 halves the loop's fixed action cost
       // (opt guide §1.2: per-task/els-per-action overhead after shape)
-      if (i % 2 == 0 || i == iters) r = r.pinned(true)
+      if (i % 2 == 0 || i == iters) r = r.pinned()
     }
     r.orderBy(col("r").desc, col("node")).limit(k)
       .withColumn("rank",

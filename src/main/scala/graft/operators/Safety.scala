@@ -212,14 +212,14 @@ object Safety {
       // left_outer: a cell whose rows are ALL null on `dim` has no median
       // row — its rows must survive with med = NULL (side 1, split never
       // ok) exactly as the percentile() form kept them.
-      val sided = cur.join(broadcast(med), Seq("cell"), "left_outer")
+      val sided = cur.join(med, Seq("cell"), "left_outer")
         .withColumn("side", when(col(dim) <= col("med"), 0L).otherwise(1L))
       val ok = sided.groupBy(col("cell"))
         .agg(sum(when(col("side") === 0L, 1L).otherwise(0L)).as("nl"),
           sum(when(col("side") === 1L, 1L).otherwise(0L)).as("nr"))
         .select(col("cell"),
           (col("nl") >= k && col("nr") >= k).as("split_ok"))
-      cur = sided.join(broadcast(ok), "cell")
+      cur = sided.join(ok, "cell")
         .withColumn("cell",
           when(col("split_ok"), col("cell") * 2L + col("side"))
             .otherwise(col("cell") * 2L))
@@ -228,7 +228,7 @@ object Safety {
         // broadcast-agg subqueries (med, ok) each hang off `cur` — without
         // the pin every round re-executes the whole prior chain inside
         // each subquery, a ~3^rounds subtree blowup (opt guide §2.4)
-        .pinned(true)
+        .pinned()
       r += 1
     }
     val aggs = count(lit(1)).as("n") +:

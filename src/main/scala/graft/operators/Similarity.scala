@@ -37,7 +37,7 @@ object Similarity {
       vecCol: String, k: Int = 10): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-    val scored = c.crossJoin(broadcast(q))
+    val scored = c.crossJoin(q)
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", vecCosine(col("q_vec"), col("c_vec")))
     val w = Window.partitionBy(col("query_id"))
@@ -59,7 +59,7 @@ object Similarity {
       vecCol: String, k: Int = 10): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-    val scored = c.crossJoin(broadcast(q))
+    val scored = c.crossJoin(q)
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("dot", graft.functions.KernelExpressions.vecDot(col("q_vec"), col("c_vec")))
     val w = Window.partitionBy(col("query_id"))
@@ -143,7 +143,7 @@ object Similarity {
         explode(transform(typedLit(masks), m => col("q_sig").bitwiseXOR(m))))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
       .withColumn("c_sig", sig(col("c_vec")))
-    val candidates = c.join(broadcast(q),
+    val candidates = c.join(q,
       col("probe_sig") === col("c_sig") && col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", vecCosine(col("q_vec"), col("c_vec")))
     val w = Window.partitionBy(col("query_id"))
@@ -205,7 +205,7 @@ object Similarity {
         df.sample(withReplacement = false,
           math.min(1.0, maxRows.toDouble * 1.1 / total), seed).limit(n)
       }
-    sampled.pinned(true)
+    sampled.pinned()
   }
 
   /** [[trainCentroids]] behind an EXECUTABLE sample-first contract: the
@@ -394,7 +394,7 @@ object Similarity {
     val wq = Window.partitionBy(col("query_id"))
       .orderBy(col("qdot").desc, col("neighbor_id"))
     // the flat scan is inherently a small-query-set operator
-    val cand = c8.crossJoin(broadcast(q8))
+    val cand = c8.crossJoin(q8)
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("qdot", dotLong(col("q8"), col("c8")))
       .withColumn("crank", row_number().over(wq))
@@ -406,7 +406,7 @@ object Similarity {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(round(col("cosine"), 6).desc, col("neighbor_id"))
     cand.join(cv, Seq("neighbor_id"))
-      .join(broadcast(qv), Seq("query_id"))
+      .join(qv, Seq("query_id"))
       .withColumn("cosine", vecCosine(col("q_vec"), col("c_vec")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -435,7 +435,7 @@ object Similarity {
       signBits(col(vecCol)).as("cb"))
     val wq = Window.partitionBy(col("query_id"))
       .orderBy(col("hd").asc, col("neighbor_id"))
-    val cand = cb.crossJoin(broadcast(qb))
+    val cand = cb.crossJoin(qb)
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("hd", hammingLong(col("qb"), col("cb")))
       .withColumn("crank", row_number().over(wq))
@@ -446,7 +446,7 @@ object Similarity {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(round(col("cosine"), 6).desc, col("neighbor_id"))
     cand.join(cv, Seq("neighbor_id"))
-      .join(broadcast(qv), Seq("query_id"))
+      .join(qv, Seq("query_id"))
       .withColumn("cosine", vecCosine(col("q_vec"), col("c_vec")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -474,7 +474,7 @@ object Similarity {
       slice(col(vecCol), 1, prefixDim).as("cp"))
     val wq = Window.partitionBy(col("query_id"))
       .orderBy(round(col("pdot"), 6).desc, col("neighbor_id"))
-    val cand = cp.crossJoin(broadcast(qp))
+    val cand = cp.crossJoin(qp)
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("pdot", vecDot(col("qp"), col("cp")))
       .withColumn("crank", row_number().over(wq))
@@ -485,7 +485,7 @@ object Similarity {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(round(col("cosine"), 6).desc, col("neighbor_id"))
     cand.join(cv, Seq("neighbor_id"))
-      .join(broadcast(qv), Seq("query_id"))
+      .join(qv, Seq("query_id"))
       .withColumn("cosine", vecCosine(col("q_vec"), col("c_vec")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -736,7 +736,7 @@ object Similarity {
       .select(col("id"), col("best").getField("cell").cast("long").as("cell"),
         round(col("best").getField("negCos") * -1, 6).as("cos"))
       .withColumn("cos_e6", round(col("cos") * 1000000, 0).cast("long"))
-      .pinned(true) // read by the cell stats AND the scoring pass
+      .pinned() // read by the cell stats AND the scoring pass
     val stats = assigned.groupBy(col("cell"))
       .agg(count(lit(1)).as("n_cell"),
         sum(col("cos_e6")).as("s1"),
@@ -748,7 +748,7 @@ object Similarity {
             (col("s1").cast("double") / col("n_cell")) *
             (col("s1").cast("double") / col("n_cell")),
           lit(0.0))).as("sigma"))
-    assigned.join(broadcast(stats), "cell")
+    assigned.join(stats, "cell")
       .filter(col("sigma") > 0.0) // a constant cell has no outliers
       .select(col("id"), col("cell"), col("cos"),
         round((col("mu") - col("cos_e6").cast("double")) / col("sigma"), 4)

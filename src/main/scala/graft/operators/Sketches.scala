@@ -158,7 +158,7 @@ object Sketches {
     val mixed = pmod(lit(ca) * hashCol + lit(cb), lit(Dedup.MinhashP))
     val d = df.select(col(groupCol).cast("string").as("scope"), mixed.as("__h"))
       .filter(col("__h").isNotNull).distinct()
-      .pinned(true) // feeds per-group sketches AND the global exact
+      .pinned() // feeds per-group sketches AND the global exact
     def estimate(g: org.apache.spark.sql.RelationalGroupedDataset): DataFrame = g
       .agg(count(lit(1)).as("exact_distinct"),
         graft.functions.TopKAggregate.topKByScore(
@@ -206,7 +206,7 @@ object Sketches {
     val mixed = pmod(lit(ca) * hashCol + lit(cb), lit(Dedup.MinhashP))
     val d = df.select(col(groupCol).cast("string").as("g"), mixed.as("__h"))
       .filter(col("__h").isNotNull).distinct()
-      .pinned(true) // feeds sketches, sizes, and the exact join
+      .pinned() // feeds sketches, sizes, and the exact join
     val sk = d.groupBy(col("g"))
       .agg(graft.functions.TopKAggregate.topKByScore(
         col("__h").cast("double") * -1, col("__h"), k).as("__mins"))
@@ -230,8 +230,8 @@ object Sketches {
       .groupBy(col("g_a"), col("g_b")).agg(count(lit(1)).as("ni"))
     est
       .join(inter, Seq("g_a", "g_b"), "left_outer")
-      .join(broadcast(sizes.select(col("g").as("g_a"), col("n").as("na"))), "g_a")
-      .join(broadcast(sizes.select(col("g").as("g_b"), col("n").as("nb"))), "g_b")
+      .join(sizes.select(col("g").as("g_a"), col("n").as("na")), "g_a")
+      .join(sizes.select(col("g").as("g_b"), col("n").as("nb")), "g_b")
       .select(col("g_a"), col("g_b"),
         expr("coalesce(ni, 0L) * 1000000L div (na + nb - coalesce(ni, 0L))")
           .as("exact_jac_e6"),
@@ -337,11 +337,11 @@ object Sketches {
     require(p >= 7 && p <= 16, s"p in [7,16], got $p")
     val d = df.select(col(groupCol).cast("string").as("scope"), hashCol.as("__h"))
       .filter(col("__h").isNotNull).distinct()
-      .pinned(true) // feeds registers AND both exact counts
+      .pinned() // feeds registers AND both exact counts
     val regs = d.select(col("scope"), hllRegister(col("__h"), p).as("__reg"),
         hllRank(col("__h")).as("__rho"))
       .groupBy(col("scope"), col("__reg")).agg(max(col("__rho")).as("rho"))
-      .pinned(true) // feeds per-scope AND the '__all__' merge
+      .pinned() // feeds per-scope AND the '__all__' merge
     val perScope = hllEstimate(regs, Seq("scope"), p)
       .join(d.groupBy(col("scope")).agg(count(lit(1)).as("exact_distinct")),
         Seq("scope"))

@@ -126,7 +126,7 @@ object Temporal {
         new java.util.ArrayList(scala.jdk.CollectionConverters
           .SeqHasAsJava(hotRows).asJava), keySchema)
       .withColumn("__is_hot", lit(true))
-    val l2 = left.join(broadcast(hot), leftKeys, "left")
+    val l2 = left.join(hot, leftKeys, "left")
       .withColumn("__salt",
         when(col("__is_hot"), pmod(hash(col(leftTs)), lit(numSalts)))
           .otherwise(lit(0)).cast("int"))
@@ -134,7 +134,7 @@ object Temporal {
     val hotR = leftKeys.zip(rightKeys).foldLeft(hot.drop("__is_hot")) {
       case (d, (l, r)) => d.withColumnRenamed(l, r)
     }.withColumn("__is_hot", lit(true))
-    val r2 = right.join(broadcast(hotR), rightKeys, "left")
+    val r2 = right.join(hotR, rightKeys, "left")
       .withColumn("__rsalt", explode(
         when(col("__is_hot"), sequence(lit(0), lit(numSalts - 1)))
           .otherwise(array(lit(0)))))

@@ -18,7 +18,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * batch — after `EliminateResolvedHint` has moved hints onto the `Join`
   * nodes — and clears a side's BROADCAST hint when BOTH of two size
   * signals — the plan-level estimate AND the sum of the side's known leaf
-  * sizes (true file bytes) — exceed 128 MiB (see the in-body note for
+  * sizes (true file bytes, or the bytes a pin stores) — exceed 128 MiB (see the in-body note for
   * why either signal alone over-strips), letting the planner fall back to
   * a shuffle join; AQE can still re-broadcast at runtime if the TRUE size
   * turns out small. The cap is 128 MiB because hinted sides include logs
@@ -33,7 +33,7 @@ case class BroadcastGuard(spark: SparkSession) extends Rule[LogicalPlan] with Lo
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val maxBytes = BigInt(128L << 20)
     // Trip-wire size = sum of the KNOWN leaf sizes (true on-disk bytes of
-    // file-backed scans), not the side's own estimate alone. The
+    // file-backed scans, stored bytes of pins), not the side's own estimate alone. The
     // plan-level estimate is garbage exactly where hints matter: above a
     // Join it is the PRODUCT of child sizes (a 3-small-table dimension
     // "estimates" past any cap). Measured on the round-13 baseline: 124
@@ -46,12 +46,6 @@ case class BroadcastGuard(spark: SparkSession) extends Rule[LogicalPlan] with Lo
     // still backstops that). Only leaves whose size is really unknown
     // (spark.sql.defaultSizeInBytes) drop out of the sum, so a side whose
     // leaves are ALL of unknown size sums to 0 and keeps its hint.
-    // A pinned leaf (localCheckpoint → LogicalRDD) is NOT unknown: on
-    // Spark 4.1.2 it carries its pre-pin optimizer estimate, which can be
-    // far above its real size, so a hinted side over such a leaf counts
-    // that estimate on both signals. Registry rows where this strips a
-    // hint today: g_assortativity (sf0.01 and sf0.1) and q_mondrian_anon
-    // (sf0.01), whose pinned leaves report 3.7e10 to 3.1e15 bytes.
     // Each signal alone also over-strips the OTHER corner: leaf bytes
     // over-count a side that AGGREGATES a big table down to scalars
     // (estimate 8 B, leaves 6 TB — five such sides in the registry), the

@@ -63,7 +63,7 @@ object CurationRows extends Family {
     val docs = t(s, dir, "documents")
     val evalGrams = grams(docs.filter(col("doc_id") < 10)).select("g").distinct()
     val trainGrams = grams(docs.filter(col("doc_id") >= 10))
-    val contaminated = trainGrams.join(broadcast(evalGrams), Seq("g"), "left_semi")
+    val contaminated = trainGrams.join(evalGrams, Seq("g"), "left_semi")
       .select("doc_id").distinct()
     docs.filter(col("doc_id") >= 10)
       .join(contaminated, Seq("doc_id"), "left_anti")
@@ -312,7 +312,7 @@ object CurationRows extends Family {
   private def cTemperatureMix(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents").select(col("doc_id"), col("source"),
       TextAnalysis.tokenCount(col("text")).cast("long").as("n_tok"))
-      .pinned(true) // read by the weight pass + twice in selection
+      .pinned() // read by the weight pass + twice in selection
     val tok = col("n_tok")
     val w = graft.operators.Importance.temperatureWeights(docs, "source", tok, 0.5)
     // empty corpus → no sources → empty mixture (mixtureSample's weights
@@ -552,7 +552,7 @@ object CurationRows extends Family {
     val bloom = evalGrams.stat.bloomFilter("g", 200000L, 0.01)
     val suspects = grams(train)
       .filter(graft.functions.KernelExpressions.bloomMightContain(col("g"), bloom))
-    val contaminated = suspects.join(broadcast(evalGrams), Seq("g"), "left_semi")
+    val contaminated = suspects.join(evalGrams, Seq("g"), "left_semi")
       .select("doc_id").distinct()
     train.join(contaminated, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("lang"))
@@ -611,8 +611,8 @@ object CurationRows extends Family {
     a.join(b, col("g") === col("g2") && col("src_a") < col("src_b"))
       .groupBy(col("src_a"), col("src_b"))
       .agg(count(lit(1)).as("shared_grams"))
-      .join(broadcast(sizes.select(col("source").as("src_a"), col("n").as("na"))), "src_a")
-      .join(broadcast(sizes.select(col("source").as("src_b"), col("n").as("nb"))), "src_b")
+      .join(sizes.select(col("source").as("src_a"), col("n").as("na")), "src_a")
+      .join(sizes.select(col("source").as("src_b"), col("n").as("nb")), "src_b")
       .select(col("src_a"), col("src_b"), col("shared_grams"),
         expr("shared_grams * 1000000 div least(na, nb)").as("overlap_e6"))
   }
@@ -786,7 +786,7 @@ object CurationRows extends Family {
     val offsets = counts
       .withColumn("off", sum(col("cnt")).over(woff) - col("cnt"))
       .select(col("stage"), col("lang"), col("off"))
-    pos.join(broadcast(offsets), Seq("lang", "stage"))
+    pos.join(offsets, Seq("lang", "stage"))
       .select(col("doc_id"), col("lang"), col("stage"), col("pos"),
         (col("off") + col("pos")).as("global_pos"))
   }
@@ -873,7 +873,7 @@ object CurationRows extends Family {
       .agg(entropy(col("cnt")).as("lang_entropy"))
       .select(lit(3).as("egid"), lit(null).cast("string").as("esource"),
         col("lang_entropy"))
-    card.join(broadcast(entBySource.unionAll(entGlobal)),
+    card.join(entBySource.unionAll(entGlobal),
         card("gid") === col("egid") && card("source") <=> col("esource"), "left")
       .select(card.columns.map(col) :+
         coalesce(col("lang_entropy"), lit(0.0)).as("lang_entropy"): _*)
@@ -932,7 +932,7 @@ object CurationRows extends Family {
         countDistinct(col("id")).as("n_neardup_docs"))
       .select((col("pair_ends") / 2).cast("long").as("n_lsh_pairs"),
         col("n_neardup_docs"))
-    nDocs.crossJoin(broadcast(ex)).crossJoin(broadcast(nd))
+    nDocs.crossJoin(ex).crossJoin(nd)
   }
   row("c_dedup_report", cDedupReport)(
     s"""WITH $sqlMinhashCtes,

@@ -20,7 +20,7 @@ object GraphRows extends Family {
     t(s, dir, "lineitem")
       .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
       .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(t(s, dir, "supplier")), col("l_suppkey") === col("s_suppkey"))
+      .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
       .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
       .agg(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("w"))
 
@@ -36,7 +36,7 @@ object GraphRows extends Family {
     val pr = graft.operators.Graph.pageRank(
       nat.select(col("n_nationkey")), "n_nationkey",
       nationTradeEdges(s, dir), "src", "dst", "w", iterations = 5)
-    pr.join(broadcast(nat), pr("id") === nat("n_nationkey"))
+    pr.join(nat, pr("id") === nat("n_nationkey"))
       .select(col("n_name"), round(col("rank"), 8).as("pr"))
   }
   row("g_pagerank", qPagerank) {
@@ -80,7 +80,7 @@ object GraphRows extends Family {
     val ha = graft.operators.Graph.hits(
       nat.select(col("n_nationkey")), "n_nationkey",
       nationTradeEdges(s, dir), "src", "dst", "w", iterations = 4)
-    ha.join(broadcast(nat), ha("id") === nat("n_nationkey"))
+    ha.join(nat, ha("id") === nat("n_nationkey"))
       .select(col("n_name"), round(col("hub"), 7).as("hub"),
         round(col("authority"), 7).as("authority"))
   }
@@ -137,7 +137,7 @@ object GraphRows extends Family {
     val e = nationTradeEdges(s, dir).where(col("w") >= 1500000.0)
     val nat = t(s, dir, "nation")
     val tc = graft.operators.Graph.triangleCounts(e, "src", "dst")
-    tc.join(broadcast(nat), tc("id") === nat("n_nationkey"))
+    tc.join(nat, tc("id") === nat("n_nationkey"))
       .select(col("n_name"), col("n_triangles"))
   }
   row("g_triangles", qTriangles)(
@@ -177,7 +177,7 @@ object GraphRows extends Family {
   }
 
   private def coOrderEdgesCanon(s: SparkSession, dir: String): DataFrame =
-    coOrderEdgesCanonRaw(s, dir).distinct().pinned(true)
+    coOrderEdgesCanonRaw(s, dir).distinct().pinned()
 
   /** Both directions of [[coOrderEdgesCanon]] — the narrow mirror union
     * over the pinned canonical half (identical edge set to
@@ -254,7 +254,7 @@ object GraphRows extends Family {
       // pinned BEFORE the mirror union: both branches read the aggregated
       // half — unpinned, the basket self-join + count can execute twice
       // when AQE exchange reuse misses (the ssspWeighted discipline)
-      .pinned(true)
+      .pinned()
     val e = half.union(
       half.select(col("dst").as("src"), col("src").as("dst"), col("w")))
     graft.operators.Graph.personalizedPageRank(
@@ -618,23 +618,23 @@ object GraphRows extends Family {
     // — the dedup shuffle carried half the bytes (guide §2.3)
     val e = coOrderEdgesBoth(s, dir) // deg + nbr join (reads of the pin)
     val deg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-      .pinned(true) // nbr join + the node-grain sums
-    // count-gated broadcast (a row count, not a size estimate):
-    // while the node-grain degree table is small (≤4M nodes ≈ tens of
-    // MB) broadcasting it keeps the edge list — the 100 TB side — from
-    // being shuffled AND sorted for this join (measured: the sort-merge
-    // path added ~150 s at the sf10 decade). Beyond the gate the
-    // fallback is a SHUFFLE_HASH hint on the NODE side, not the default
-    // sort-merge: hash-building the node-grain table per partition keeps
-    // the edge list — the 100 TB side — from ever being SORTED. This
-    // gate flip was the real fourth-decade discontinuity: sf10 (2M
-    // nodes) rode the broadcast, sf30 (6M nodes) fell into a 1.9B-row
-    // edge sort that read as "2.5x above edge-linear" in the round-11
-    // probe before its GC drag was even counted. The count is a
+      .pinned() // nbr join + the node-grain sums
+    // count-gated join strategy (a row count, not a size estimate):
+    // while the node-grain degree table is small (≤4M nodes) the planner
+    // sizes it from the pin's stored bytes and broadcasts it when it fits,
+    // which keeps the edge list — the 100 TB side — from being shuffled
+    // AND sorted for this join (measured: the sort-merge path added ~150 s
+    // at the sf10 decade). Beyond the gate the node side takes a
+    // SHUFFLE_HASH hint, not the default sort-merge: hash-building the
+    // node-grain table per partition keeps the edge list from ever being
+    // SORTED. This gate flip was the real fourth-decade discontinuity:
+    // sf10 (2M nodes) rode the broadcast, sf30 (6M nodes) fell into a
+    // 1.9B-row edge sort that read as "2.5x above edge-linear" in the
+    // round-11 probe before its GC drag was even counted. The count is a
     // metadata-cheap scan of the just-checkpointed table (the pageRank
     // nCount precedent).
     val degSmall = deg.select(col("id").as("nid"), col("deg").as("nd"))
-    val degHinted = if (deg.count() <= 4000000L) broadcast(degSmall)
+    val degHinted = if (deg.count() <= 4000000L) degSmall
       else degSmall.hint("SHUFFLE_HASH")
     val nbr = e.join(degHinted, col("dst") === col("nid"))
       .groupBy(col("src").as("id")).agg(sum(col("nd")).as("tnbr"))
@@ -689,7 +689,7 @@ object GraphRows extends Family {
   private def gDegreeDist(s: SparkSession, dir: String): DataFrame = {
     val deg = coOrderEdgesBoth(s, dir)
       .groupBy(col("src").as("id")).agg(count(lit(1)).as("degree"))
-      .pinned(true) // histogram + tail scalar
+      .pinned() // histogram + tail scalar
     val dmin = 64
     val tail = deg.where(col("degree") >= dmin)
       .agg(count(lit(1)).as("n_tail"),
@@ -699,7 +699,7 @@ object GraphRows extends Family {
         round(lit(1.0) + col("n_tail").cast("double") / col("sum_ln"), 4))
         .otherwise(lit(null).cast("double")).as("alpha_hill"))
     deg.groupBy(col("degree")).agg(count(lit(1)).as("n_nodes"))
-      .crossJoin(broadcast(alphaRow))
+      .crossJoin(alphaRow)
   }
   row("g_degree_dist", gDegreeDist)(
     """WITH e AS (SELECT DISTINCT a.l_partkey AS id, b.l_partkey AS nb
@@ -728,7 +728,7 @@ object GraphRows extends Family {
     // pinned: `e` feeds the wedge count AND triangleCounts — without the
     // pin the 4-way lineitem⋈orders⋈customer⋈supplier derivation ran
     // TWICE (≤|nations|² rows, a trivial pin; guide §2.4)
-    val e = nationTradeEdges(s, dir).where(col("w") >= 1500000.0).pinned(true)
+    val e = nationTradeEdges(s, dir).where(col("w") >= 1500000.0).pinned()
     val und = e.select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .where(col("a") =!= col("b")).distinct()
@@ -738,7 +738,7 @@ object GraphRows extends Family {
       .as("n_wedges"))
     val tri = graft.operators.Graph.triangleCounts(e, "src", "dst")
       .agg((sum(col("n_triangles")) / 3).cast("long").as("n_triangles"))
-    tri.crossJoin(broadcast(wedges))
+    tri.crossJoin(wedges)
       .select(col("n_triangles"), col("n_wedges"),
         round(lit(3.0) * col("n_triangles") / col("n_wedges"), 6).as("global_cc"))
   }

@@ -18,7 +18,7 @@ object QueryRows extends Family {
 
   private def qPartAgg(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "lineitem")
-      .join(broadcast(t(s, dir, "part")), col("l_partkey") === col("p_partkey"))
+      .join(t(s, dir, "part"), col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_brand"))
       .agg(count(lit(1)).as("n_items"),
         round(sum(col("l_quantity")), 2).as("sum_qty"),
@@ -294,7 +294,7 @@ object QueryRows extends Family {
   private def qRetentionFilter(s: SparkSession, dir: String): DataFrame = {
     val ev = t(s, dir, "events").withColumn("ts_us", tsUs)
     val maxTs = ev.agg(max(col("ts_us")).as("max_ts_us"))
-    ev.crossJoin(broadcast(maxTs))
+    ev.crossJoin(maxTs)
       .filter(col("ts_us") >= col("max_ts_us") - lit(15L * 86400L * 1000000L))
       .select(col("event_id"), col("user_id"), col("event_type"))
   }
@@ -863,7 +863,7 @@ object QueryRows extends Family {
     val requests = t(s, dir, "customer")
       .filter(col("c_custkey") % 97 === 0).select(col("c_custkey"))
     val purged = graft.io.Versioned.read(s, path, Some(1))
-      .join(broadcast(requests), Seq("c_custkey"), "left_anti")
+      .join(requests, Seq("c_custkey"), "left_anti")
     graft.io.Versioned.write(purged, path)
     def snap(df: DataFrame, v: Long) = df.agg(
       count(lit(1)).as("n_rows"),
@@ -1369,14 +1369,14 @@ object QueryRows extends Family {
     val daily = t(s, dir, "orders")
       .groupBy(col("o_orderdate").cast("date").as("day"))
       .agg(sum(col("o_totalprice")).as("x"))
-      .pinned(true) // three consumers: stats row, pair-left, pair-right
+      .pinned() // three consumers: stats row, pair-left, pair-right
     val stats = daily.agg(avg(col("x")).as("mu"),
       (var_pop(col("x")) * count(lit(1))).as("denom"))
     val a = daily.select(col("day"), col("x").as("xa"),
       explode(array((1 to 7).map(lit(_)): _*)).as("lag"))
     val b = daily.select(col("day").as("b_day"), col("x").as("xb"))
     a.join(b, date_add(col("day"), col("lag")) === col("b_day"))
-      .crossJoin(broadcast(stats))
+      .crossJoin(stats)
       .groupBy(col("lag").cast("long").as("lag"))
       .agg(count(lit(1)).as("n_pairs"),
         // nullif-guard: a constant series has var_pop 0, and ANSI-mode
@@ -1420,16 +1420,16 @@ object QueryRows extends Family {
       .agg(sum(col("o_totalprice")).as("x"))
       .withColumn("dn",
         datediff(col("day"), lit("1970-01-01").cast("date")).cast("long"))
-      .pinned(true)
+      .pinned()
     val wTrend = Window.orderBy(col("dn")).rangeBetween(-3, 3)
     val trended = daily
       .withColumn("trend", avg(col("x")).over(wTrend))
       .withColumn("dow_idx", pmod(col("dn"), lit(7L)))
-      .pinned(true) // feeds the seasonal means and the final join
+      .pinned() // feeds the seasonal means and the final join
     val seas = trended.groupBy(col("dow_idx"))
       .agg(avg(col("x") - col("trend")).as("s_raw"))
     val seasC = seas
-      .crossJoin(broadcast(seas.agg(avg(col("s_raw")).as("s_mean"))))
+      .crossJoin(seas.agg(avg(col("s_raw")).as("s_mean")))
       .select(col("dow_idx"), (col("s_raw") - col("s_mean")).as("seasonal"))
     trended.join(broadcast(seasC), Seq("dow_idx"))
       .select(col("day"), col("x"), col("trend"), col("seasonal"))
@@ -1469,9 +1469,9 @@ object QueryRows extends Family {
     val withResid = stlDaily(s, dir)
       .select(col("day"), col("x"),
         (col("x") - col("trend") - col("seasonal")).as("resid"))
-      .pinned(true) // stats row + the filtered output
+      .pinned() // stats row + the filtered output
     val stats = withResid.agg(stddev_pop(col("resid")).as("sd"))
-    withResid.crossJoin(broadcast(stats))
+    withResid.crossJoin(stats)
       .select(col("day"), round(col("x"), 2).as("x"),
         // sd = 0 (constant remainder) → NULL z → filtered out below;
         // ANSI-mode double division by zero would otherwise ERROR
@@ -1516,11 +1516,11 @@ object QueryRows extends Family {
     val counts = t(s, dir, "orders")
       .select(col("o_orderpriority").as("grp"), bucket.as("bucket"))
       .groupBy(col("grp"), col("bucket")).agg(count(lit(1)).as("c"))
-      .pinned(true) // feeds group totals, global totals, and the grid
+      .pinned() // feeds group totals, global totals, and the grid
     val gTot = counts.groupBy(col("grp")).agg(sum(col("c")).as("gn"))
     val tot = counts.agg(sum(col("c")).as("n"), count_distinct(col("bucket")).as("m"))
     val q = counts.groupBy(col("bucket")).agg(sum(col("c")).as("bc"))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .select(col("bucket"), (col("bc").cast("double") / col("n")).as("q"),
         col("m"))
     // dense (grp × observed bucket) grid WITHOUT a cross join: explode
@@ -1579,7 +1579,7 @@ object QueryRows extends Family {
       .select(col("user_id"), col("event_type"), tsUs.as("us"))
       .groupBy(col("user_id"), col("event_type"))
       .agg(min(col("us")).as("first_us"), max(col("us")).as("last_us"))
-      .pinned(true) // both sides of the pair join + the user total
+      .pinned() // both sides of the pair join + the user total
     val tot = byType.select(col("user_id")).distinct()
       .agg(count(lit(1)).as("nu"))
     val a = byType.select(col("user_id"), col("event_type").as("seq_a"),
@@ -1591,7 +1591,7 @@ object QueryRows extends Family {
         col("first_us") < col("last_us"))
       .groupBy(col("seq_a"), col("seq_b"))
       .agg(count(lit(1)).as("n_users"))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .where(col("n_users") >= lit(0.05) * col("nu"))
       .select(col("seq_a"), col("seq_b"), col("n_users"),
         round(col("n_users").cast("double") / col("nu"), 6).as("support"))
@@ -1880,7 +1880,7 @@ object QueryRows extends Family {
     pairs
       .join(item.select(col("l_partkey").as("part_a"), col("n_item").as("n_a")), "part_a")
       .join(item.select(col("l_partkey").as("part_b"), col("n_item").as("n_b")), "part_b")
-      .crossJoin(broadcast(nOrders))
+      .crossJoin(nOrders)
       .select(col("part_a"), col("part_b"), col("n_ab"),
         round(col("n_ab") / col("n_a"), 6).as("confidence"),
         round(col("n_ab") * col("n_orders") / (col("n_a") * col("n_b")), 6).as("lift"))
@@ -1932,7 +1932,7 @@ object QueryRows extends Family {
     val arr = t(s, dir, "lineitem")
       .groupBy(col("l_orderkey").as("o"))
       .agg(sort_array(collect_set(col("l_partkey"))).as("items"))
-      .pinned(true) // two consumers: the triple mine + the order count
+      .pinned() // two consumers: the triple mine + the order count
     val nOrders = arr.agg(count(lit(1)).as("n_orders"))
     arr.where(size(col("items")) >= 3)
       // ascending index triples i<j<k over the SORTED distinct array, so
@@ -1949,7 +1949,7 @@ object QueryRows extends Family {
         col("t.c").as("part_c"))
       .agg(count(lit(1)).as("n_abc"))
       .where(col("n_abc") >= 2)
-      .crossJoin(broadcast(nOrders))
+      .crossJoin(nOrders)
       .select(col("part_a"), col("part_b"), col("part_c"), col("n_abc"),
         round(col("n_abc").cast("double") / col("n_orders"), 6).as("support"))
   }
@@ -2370,10 +2370,10 @@ object QueryRows extends Family {
     t(s, dir, "lineitem")
       .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
       .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(t(s, dir, "supplier")), col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(nat.select(col("n_nationkey").as("sk"), col("n_name").as("supp_nation"))),
+      .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
+      .join(nat.select(col("n_nationkey").as("sk"), col("n_name").as("supp_nation")),
         col("s_nationkey") === col("sk"))
-      .join(broadcast(nat.select(col("n_nationkey").as("ck"), col("n_name").as("cust_nation"))),
+      .join(nat.select(col("n_nationkey").as("ck"), col("n_name").as("cust_nation")),
         col("c_nationkey") === col("ck"))
       .groupBy(col("supp_nation"), col("cust_nation"),
         year(col("l_shipdate")).as("ship_year"))
@@ -2455,7 +2455,7 @@ object QueryRows extends Family {
       .groupBy(col("c_nationkey"))
       .agg(sum(revE4).as("revenue_e4"))
     val total = byNation.agg(sum(col("revenue_e4")).as("total_e4"))
-    byNation.crossJoin(broadcast(total))
+    byNation.crossJoin(total)
       .select(col("c_nationkey"), col("revenue_e4"),
         // nz: an all-zero-price corpus zeroes the total — NULL share
         round(col("revenue_e4") / nz(col("total_e4")), 6).as("share"))
@@ -2591,7 +2591,7 @@ object QueryRows extends Family {
       .rangeBetween(Window.unboundedPreceding, -1)
     base
       .withColumn("same_d", max(col("d")).over(sameBucket))
-      .join(broadcast(bmax), Seq("bucket"), "left_outer")
+      .join(bmax, Seq("bucket"), "left_outer")
       .where((col("same_d").isNull || col("same_d") <= col("d")) &&
         (col("hi_d").isNull || col("hi_d") <= col("d")))
       .select(col("o_orderkey"), col("price_e2"), col("d"))
@@ -2961,7 +2961,7 @@ object QueryRows extends Family {
       .prefixSum(perVal, "val_e2", "n1", "c1", Seq("n2"))
     // totals from the distinct-value frame — never a second row-scale scan
     val tot = perVal.agg(sum(col("n1")).as("tot1"), sum(col("n2")).as("tot2"))
-    cum.crossJoin(broadcast(tot))
+    cum.crossJoin(tot)
       .select(
         abs(col("c1") * col("tot2") - col("cum_n2") * col("tot1")).as("adiff"),
         (-col("val_e2")).as("negv"), col("tot1"), col("tot2"))
@@ -3064,7 +3064,7 @@ object QueryRows extends Family {
     // ranks cum_n−nv+1 … cum_n belong to this value block; a rank r sits
     // in decile ((r−1)·10) div n_tot — explode each block into the (≤10)
     // deciles it spans, allocating its per-rank revenue exactly
-    cum.crossJoin(broadcast(tot))
+    cum.crossJoin(tot)
       .select(col("v_e2"), col("nv"), col("cum_n"), col("n_tot"),
         explode(sequence(
           expr("((cum_n - nv) * 10) div n_tot"),
@@ -3143,7 +3143,7 @@ object QueryRows extends Family {
       .prefixSum(perVal, "v_e2", "block_rev", "cum_rev")
       .pinned() // totals agg + the classed rollup
     val tot = cum.agg(max(col("cum_rev")).as("t_rev"))
-    cum.crossJoin(broadcast(tot))
+    cum.crossJoin(tot)
       .withColumn("desc_excl", col("t_rev") - col("cum_rev"))
       .withColumn("abc_class",
         when(col("desc_excl") * 100 < col("t_rev") * 80, "A")
@@ -3186,7 +3186,7 @@ object QueryRows extends Family {
     */
   private def qPriceElasticity(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem")
-      .join(broadcast(t(s, dir, "part")), col("l_partkey") === col("p_partkey"))
+      .join(t(s, dir, "part"), col("l_partkey") === col("p_partkey"))
       .select(col("p_brand"),
         log(col("l_extendedprice") / col("l_quantity")).as("lnp"),
         log(col("l_quantity")).as("lnq"))
@@ -3226,7 +3226,7 @@ object QueryRows extends Family {
     val agg = t(s, dir, "lineitem")
       .where(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
         col("l_shipdate") < lit("1998-01-01").cast("timestamp"))
-      .join(broadcast(t(s, dir, "part")), col("l_partkey") === col("p_partkey"))
+      .join(t(s, dir, "part"), col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_brand"))
       .agg(sum(when(y === 1996, rev).otherwise(0.0)).as("rev0"),
         sum(when(y === 1996, col("l_quantity")).otherwise(0.0)).as("q0"),
@@ -3540,7 +3540,7 @@ object QueryRows extends Family {
     val varYN = col("pn").cast("double") * col("psyy") -
       col("psy").cast("double") * col("psy")
     val theta = covN / nz(varXN)
-    arms.crossJoin(broadcast(pooled))
+    arms.crossJoin(pooled)
       .select(col("arm"), col("n"),
         round(col("sy").cast("double") / col("n") / 100.0, 4).as("mean_y"),
         round((col("sy").cast("double") / col("n") -
@@ -3805,7 +3805,7 @@ object QueryRows extends Family {
       .groupBy(col("cust"))
       .agg(min(col("day")).as("first_day"), max(col("day")).as("last_day"))
     val maxd = per.agg(max(col("last_day")).as("max_day"))
-    val lifetimes = per.crossJoin(broadcast(maxd))
+    val lifetimes = per.crossJoin(maxd)
       .select((col("last_day") - col("first_day")).as("dur"),
         (col("last_day") > col("max_day") - 90).as("cens"))
     graft.operators.Marketing.kaplanMeier(lifetimes, "dur", "cens")
@@ -4110,7 +4110,7 @@ object QueryRows extends Family {
       .groupBy(col("event_type"))
       .agg(count(when(col("ts") < SplitNs, lit(1))).as("na"),
         count(when(col("ts") >= SplitNs, lit(1))).as("nb"))
-      .pinned(true) // feeds the scalar totals and the PSI rows
+      .pinned() // feeds the scalar totals and the PSI rows
     val tot = counts.agg(sum(col("na")).as("ta"), sum(col("nb")).as("tb"))
     val pa = col("na").cast("double") / nz(col("ta").cast("double"))
     val pb = col("nb").cast("double") / nz(col("tb").cast("double"))
@@ -4121,7 +4121,7 @@ object QueryRows extends Family {
       // zero division, an ANSI runtime error) — drop it BEFORE the
       // arithmetic, exactly as the oracle's `WHERE na > 0 AND nb > 0`
       .where(col("na") > 0L && col("nb") > 0L)
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .select(col("event_type"), col("na"), col("nb"),
         round(term * 1000000.0, 0).cast("long").as("psi_e6"))
       .withColumn("total_psi_e6", sum(col("psi_e6")).over(w))
@@ -4154,7 +4154,7 @@ object QueryRows extends Family {
   private def qF2SelfJoin(s: SparkSession, dir: String): DataFrame = {
     val keys = t(s, dir, "lineitem")
       .select(Dedup.shingleHash(col("l_orderkey").cast("string")).as("h"))
-      .pinned(true) // one key scan feeds the sketch AND exact F2
+      .pinned() // one key scan feeds the sketch AND exact F2
     val est = graft.operators.Sketches.amsF2(keys, col("h"))
     val exact = keys.groupBy(col("h")).agg(count(lit(1)).as("n"))
       .agg(sum(col("n") * col("n")).as("exact_f2"))

@@ -157,7 +157,7 @@ private[graft] object Shared {
         when(col("k") === 0L, col("rev_e2")).otherwise(0L).as("rev_part"))
       .groupBy(col("day_id"))
       .agg(sum(col("num_part")).as("num"), sum(col("rev_part")).as("rev_e2"))
-      .crossJoin(broadcast(span))
+      .crossJoin(span)
       .filter(col("day_id") <= col("max_day"))
       .withColumn("m", least(lit(13L), col("day_id") - col("min_day")))
       .withColumn("wsum", expr("16384L - shiftleft(1L, cast(13 - m AS INT))"))

@@ -158,7 +158,7 @@ object TextRows extends Family {
       (length(col("text")).cast("double") / size(words)).as("f3"),
       (size(array_distinct(words)).cast("double") / size(words)).as("f4"),
       when(size(words) >= 40, 1.0).otherwise(0.0).as("y"))
-      .pinned(true) // read by stats + 5 gradient jobs + scoring
+      .pinned() // read by stats + 5 gradient jobs + scoring
     val fcols = Seq("f1", "f2", "f3", "f4")
     // standardize (all-positive raw features would saturate the sigmoid
     // before GD can discriminate): one agg job -> 2k driver doubles
@@ -186,7 +186,7 @@ object TextRows extends Family {
     // (the Similarity.boundedTrainingSample precedent).
     val m = math.max(1L, raw.count() / 4000L)
     val train = if (m == 1L) feats
-      else feats.filter(col("doc_id") % m === 0).pinned(true)
+      else feats.filter(col("doc_id") % m === 0).pinned()
     val w = graft.operators.Classifier.trainLogistic(train, fcols, "y",
       iterations = 5, learningRate = 0.5)
     feats.select(col("doc_id"), col("y").as("label"),
@@ -339,7 +339,7 @@ object TextRows extends Family {
       .filter(col("cum") >= k)
       .agg(coalesce(min(col("s")), lit(Double.PositiveInfinity)).as("qhat"))
     scored.filter(col("doc_id") % 5 =!= 0)
-      .crossJoin(broadcast(qh))
+      .crossJoin(qh)
       .select(col("label"),
         ((lit(1.0) - col("score")) <= col("qhat")).as("has1"),
         (col("score") <= col("qhat")).as("has0"), col("qhat"))
@@ -1238,7 +1238,7 @@ object TextRows extends Family {
     // q/2 each; folded in closed form as (1 − Σ_present q)/2 so no
     // source×lang grid (and no cross join) is ever built
     cnt.join(bySource, "source").join(byLang, "lang")
-      .crossJoin(broadcast(total))
+      .crossJoin(total)
       .select(col("source"),
         (p * log2(p / m) / 2 + q * log2(q / m) / 2).as("term"),
         q.as("q"))
@@ -1472,13 +1472,13 @@ object TextRows extends Family {
     val uni = docs
       .select(explode(TextAnalysis.tokens(col("text"))).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
-      .pinned(true) // feeds the N total and both term joins
+      .pinned() // feeds the N total and both term joins
     val bi = docs
       .select(explode(
         graft.functions.KernelExpressions.wordNgramStrings(col("text"), 2)).as("ngram"))
       .groupBy(col("ngram")).agg(count(lit(1)).as("n"))
       .filter(col("n") >= 5)
-      .pinned(true) // feeds the B total and the PMI join
+      .pinned() // feeds the B total and the PMI join
     val totals = uni.agg(sum(col("cnt")).as("tot_uni"))
       .crossJoin(
         docs.select(greatest(size(TextAnalysis.tokens(col("text"))) - 1, lit(0))
@@ -1488,9 +1488,9 @@ object TextRows extends Family {
     bi
       .withColumn("w1", element_at(split(col("ngram"), " "), 1))
       .withColumn("w2", element_at(split(col("ngram"), " "), 2))
-      .join(broadcast(uni.select(col("term").as("w1"), col("cnt").as("ca"))), "w1")
-      .join(broadcast(uni.select(col("term").as("w2"), col("cnt").as("cb"))), "w2")
-      .crossJoin(broadcast(totals))
+      .join(uni.select(col("term").as("w1"), col("cnt").as("ca")), "w1")
+      .join(uni.select(col("term").as("w2"), col("cnt").as("cb")), "w2")
+      .crossJoin(totals)
       .select(col("ngram"), col("n"),
         round(log((col("n").cast("double") / col("tot_bi")) /
           ((col("ca").cast("double") / col("tot_uni")) *
@@ -1590,7 +1590,7 @@ object TextRows extends Family {
       .groupBy(col("ngram")).agg(count(lit(1)).as("k11"))
       .withColumn("w1", element_at(split(col("ngram"), " "), 1))
       .withColumn("w2", element_at(split(col("ngram"), " "), 2))
-      .pinned(true) // feeds marginals, the total, and the scored rows
+      .pinned() // feeds marginals, the total, and the scored rows
     val r = bi.groupBy(col("w1")).agg(sum(col("k11")).as("r1"))
     val c = bi.groupBy(col("w2")).agg(sum(col("k11")).as("c1"))
     val tot = bi.agg(sum(col("k11")).as("nn"))
@@ -1607,9 +1607,9 @@ object TextRows extends Family {
         term(c1 - k11, nn - r1, c1) +
         term(nn - r1 - c1 + k11, nn - r1, nn - c1)), 4)
     bi.filter(col("k11") >= 5)
-      .join(broadcast(r), "w1")
-      .join(broadcast(c), "w2")
-      .crossJoin(broadcast(tot))
+      .join(r, "w1")
+      .join(c, "w2")
+      .crossJoin(tot)
       .select(col("ngram"), col("k11").as("n"), llr.as("llr"))
       .orderBy(col("llr").desc, col("ngram")).limit(50)
   }

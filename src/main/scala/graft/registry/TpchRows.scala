@@ -36,8 +36,8 @@ object TpchRows extends Family {
     val cust = t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
     val ord = t(s, dir, "orders").filter(col("o_orderdate") < lit("1998-01-01").cast("date"))
     val li = t(s, dir, "lineitem")
-    li.join(broadcast(ord), col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
+    li.join(ord, col("l_orderkey") === col("o_orderkey"))
+      .join(cust, col("o_custkey") === col("c_custkey"))
       .groupBy(col("o_orderkey"))
       .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
       .orderBy(col("revenue").desc, col("o_orderkey"))
@@ -386,7 +386,7 @@ object TpchRows extends Family {
         col("l_shipdate") < lit("1996-04-01").cast("date"))
       .groupBy(col("l_suppkey")).agg(sum(revE4).as("rev_e4"))
     val top = rev.agg(max(col("rev_e4")).as("max_e4"))
-    rev.crossJoin(broadcast(top))
+    rev.crossJoin(top)
       .filter(col("rev_e4") === col("max_e4"))
       .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
       .select(col("s_suppkey"), col("s_name"),
@@ -524,7 +524,7 @@ object TpchRows extends Family {
         round(col("c_acctbal") * 100.0, 0).cast("long").as("bal_e2"))
     val thr = cust.filter(col("bal_e2") > 0)
       .agg(sum(col("bal_e2")).as("sum_pos"), count(lit(1)).as("n_pos"))
-    cust.crossJoin(broadcast(thr))
+    cust.crossJoin(thr)
       .filter(col("bal_e2") * col("n_pos") > col("sum_pos"))
       .join(t(s, dir, "orders")
           .filter(col("o_orderdate") >= lit("2000-01-01").cast("date"))
@@ -685,16 +685,16 @@ object TpchRows extends Family {
     */
   private def q11ImportantStock(s: SparkSession, dir: String): DataFrame = {
     val n1 = t(s, dir, "supplier")
-      .join(broadcast(t(s, dir, "nation").filter(col("n_name") === "NATION_1")),
+      .join(t(s, dir, "nation").filter(col("n_name") === "NATION_1"),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"))
     val v = partSupp(
-        t(s, dir, "lineitem").join(broadcast(n1),
+        t(s, dir, "lineitem").join(n1,
           col("l_suppkey") === col("s_suppkey"), "left_semi"))
       .groupBy(col("ps_partkey"))
       .agg(sum(col("ps_cost_e2") * col("ps_availqty")).as("value_e2"))
     val tot = v.agg(sum(col("value_e2")).as("total_e2"))
-    v.crossJoin(broadcast(tot))
+    v.crossJoin(tot)
       .filter(col("value_e2") * 500L > col("total_e2"))
       .select(col("ps_partkey"),
         (col("value_e2").cast("double") / 100.0).as("value"))
@@ -733,7 +733,7 @@ object TpchRows extends Family {
     partSupp(
         t(s, dir, "lineitem").join(pslice.select(col("p_partkey")),
           col("l_partkey") === col("p_partkey"), "left_semi"))
-      .join(broadcast(excl), col("ps_suppkey") === col("s_suppkey"), "left_anti")
+      .join(excl, col("ps_suppkey") === col("s_suppkey"), "left_anti")
       .join(pslice, col("ps_partkey") === col("p_partkey"))
       .groupBy(col("p_brand"), col("p_type"), col("p_size"))
       .agg(countDistinct(col("ps_suppkey")).as("supplier_cnt"))
@@ -775,7 +775,7 @@ object TpchRows extends Family {
       .filter(col("ps_availqty") > col("qty96") * 2L)
       .select(col("ps_suppkey")).distinct()
     t(s, dir, "supplier")
-      .join(broadcast(t(s, dir, "nation").filter(col("n_name") === "NATION_2")),
+      .join(t(s, dir, "nation").filter(col("n_name") === "NATION_2"),
         col("s_nationkey") === col("n_nationkey"))
       .join(excess, col("s_suppkey") === col("ps_suppkey"), "left_semi")
       .select(col("s_name"),

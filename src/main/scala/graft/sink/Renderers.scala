@@ -10,15 +10,7 @@ import graft.transform.TimeUtils
   * API lookups that require a live endpoint (GAQL conversion-action lookup,
   * audience find-by-name) are rendered as deterministic resource
   * descriptors; the REQUEST PAYLOADS are the contract.
-  *
-  * `RenderContext.iteration` is the 1-based global batch index within the
-  * execution (drives REPLACE `remove_all` on the first batch only,
-  * `customer_match/abstract_uploader.py:244-249`, and DV360's skip-edit on
-  * the creating batch, `display_video/.../abstract_uploader.py:188-206`);
-  * `nowMicros` replaces the reference's wall-clock reads for deterministic
-  * tests.
   */
-final case class RenderContext(iteration: Long, nowMicros: Long)
 
 object Renderers {
 

@@ -183,11 +183,11 @@ final case class RecordingTransport() extends Transport {
   * `render` sees the batch rows as ordered field maps (insertion order =
   * pruned schema order, like the reference's row dicts) plus the 1-based
   * global batch iteration (drives REPLACE `remove_all` on iteration 1,
-  * `customer_match/abstract_uploader.py:244-249`).
+  * `customer_match/abstract_uploader.py:244-249`, and DV360's skip-edit on
+  * the creating batch, `display_video/.../abstract_uploader.py:188-206`).
+  * A renderer that stamps a time takes the run's `nowMicros` in place of
+  * the reference's wall-clock reads, so its payloads are deterministic.
   */
 trait PayloadRenderer extends Serializable {
   def render(execution: Execution, rows: Seq[Map[String, Any]], iteration: Long): Seq[RenderedRequest]
-
-  /** Key of the row used for success filtering in log/report output. */
-  def describe: String = getClass.getSimpleName
 }

@@ -1,7 +1,7 @@
 package graft.util
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, GraftExpressionBridge, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 import scala.reflect.ClassTag
@@ -18,19 +18,22 @@ import scala.reflect.ClassTag
   * instead of a recompute.
   *
   * `pinned` routes between the two:
-  *   - default: `localCheckpoint(eager)` — single-JVM / reliable-executor
+  *   - default: `localCheckpoint()` — single-JVM / reliable-executor
   *     clusters, zero I/O;
   *   - `graft.checkpoint.reliable=true` (SQL conf, settable per session):
-  *     `checkpoint(eager)` against `spark.checkpoint.dir`, which
+  *     `checkpoint()` against `spark.checkpoint.dir`, which
   *     must point at storage that survives executor loss (HDFS/object
   *     store on a cluster). Missing checkpoint dir fails fast with an
   *     actionable message rather than Spark's late SparkException.
   *
-  * A Dataset pin is eager; an RDD pin (the pipeline's send outcomes) is
-  * materialized by the one job that also summarises it.
+  * A Dataset pin is eager, so its leaf can report the bytes the pin
+  * stores (block bytes, or checkpoint file bytes when reliable) in place of
+  * Spark's pre-pin estimate, and the planner sizes joins over it from that.
+  * An RDD pin (the pipeline's send outcomes) is materialized by the one job
+  * that also summarises it.
   *
   * Both paths return a plan with identical semantics (same rows, same
-  * partitioning for an eager pin), so operators are oblivious to the
+  * partitioning), so operators are oblivious to the
   * choice — see `CheckpointsSpec` for the equivalence pin and the
   * local-cluster note in SCALING.md.
   */
@@ -71,11 +74,13 @@ object Checkpoints {
     }
 
   implicit class PinOps[T](private val ds: Dataset[T]) extends AnyVal {
-    /** Materialize `ds` and cut lineage; reliable or local per the conf. */
-    def pinned(eager: Boolean = true): Dataset[T] =
-      if (reliable(ds.sparkSession)) ds.checkpoint(eager)
+    /** Materialize `ds` and cut lineage, reliable or local per the conf;
+      * the pinned leaf reports the bytes the pin stores as its size.
+      */
+    def pinned(): Dataset[T] = GraftExpressionBridge.withMeasuredSize(
+      if (reliable(ds.sparkSession)) ds.checkpoint()
       else localLevel(ds.sparkSession)
-        .fold(ds.localCheckpoint(eager))(ds.localCheckpoint(eager, _))
+        .fold(ds.localCheckpoint())(ds.localCheckpoint(true, _)))
   }
 
   implicit class RddPinOps[T](private val rdd: RDD[T]) extends AnyVal {

@@ -111,6 +111,65 @@ class CheckpointsSpec extends SparkTestBase {
     assert(local === durable) // bit-identical: same plan, same arithmetic
   }
 
+  test("a pinned leaf reports the bytes it stores, in all three modes, with no extra job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.LogicalRDD
+    val sc = spark.sparkContext
+    def leaves(df: DataFrame): Seq[LogicalRDD] =
+      df.queryExecution.optimizedPlan.collect { case l: LogicalRDD => l }
+    def size(df: DataFrame): BigInt = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    def jobs(body: => Unit): Int = {
+      val started = new java.util.concurrent.atomic.AtomicInteger
+      val count = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+      }
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.addSparkListener(count)
+      try { body; org.apache.spark.ListenerBusDrain(sc) }
+      finally sc.removeSparkListener(count)
+      started.get
+    }
+    // five rows out of a filtered cross join of five 10-row ranges: Spark's
+    // pre-pin estimate is the cross join's ~1 GB
+    val r = (1 to 5).map(i => spark.range(10).toDF(s"c$i"))
+    val fiveRows = r.reduce(_.crossJoin(_))
+      .filter(r.indices.map(i => col(s"c${i + 1}")).reduce(_ + _) === 1)
+    assert(size(fiveRows) > (1L << 30))
+    // 600k rows of two longs: Spark's pre-pin estimate is 16 B a row. The
+    // values are hashes, so checkpoint files, which Spark may compress,
+    // cannot store them in fewer bytes than that
+    val longs = spark.range(600000).select(xxhash64(col("id")).as("id"),
+      xxhash64(col("id") * 3).as("v"))
+    def check(mode: String): Unit = {
+      val few = fiveRows.pinned()
+      assert(few.count() == 5, mode)
+      assert(size(few) < (64L << 10), s"$mode: five pinned rows report ${size(few)} B")
+      val many = longs.pinned()
+      assert(size(many) >= BigInt(600000L * 16), s"$mode: 600k pinned rows report ${size(many)} B")
+      // a self-join re-instances the leaf (LogicalRDD.newInstance): both
+      // sides keep the measured size
+      val self = many.as("a").join(many.as("b"), col("a.id") === col("b.v"))
+      val sides = leaves(self)
+      assert(sides.size == 2 && sides.map(_.output.head.exprId).distinct.size == 2, mode)
+      assert(sides.forall(_.stats.sizeInBytes == size(many)), s"$mode: ${sides.map(_.stats)}")
+      // measuring runs no job: a pin runs as many jobs as Spark's own pin
+      val ours = jobs(longs.pinned())
+      val sparks = jobs {
+        if (mode == "reliable") longs.checkpoint()
+        else if (mode == "MEMORY_AND_DISK_SER")
+          longs.localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        else longs.localCheckpoint()
+      }
+      assert(ours == sparks && ours >= 1, s"$mode: pinned ran $ours jobs, Spark's pin $sparks")
+    }
+    check("local")
+    spark.conf.set(Checkpoints.StorageConf, "MEMORY_AND_DISK_SER")
+    try check("MEMORY_AND_DISK_SER") finally spark.conf.unset(Checkpoints.StorageConf)
+    val ckptDir = java.nio.file.Files.createTempDirectory("graft-ckpt4").toString
+    withReliable(Some(ckptDir))(check("reliable"))
+  }
+
   test("an RDD pin runs its closure once per row, in all three modes") {
     val sc = spark.sparkContext
     def once(mode: String): Unit = {

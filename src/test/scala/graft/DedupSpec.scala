@@ -354,6 +354,31 @@ class DedupSpec extends SparkTestBase {
     assert(incr.nonEmpty)
   }
 
+  test("LSH banding computes each doc's minhash signature once") {
+    // the sentinel check must not be pushed below the projection that
+    // computes the signature: the written band frame's plan calls the
+    // signature kernel exactly once
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val capture = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.optimizedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(capture)
+    try {
+      // a file scan: a local relation's signatures fold at planning time
+      val scanned = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
+      val path = java.nio.file.Files.createTempDirectory("graft_lsh_plan").toString
+      Dedup.writeLshIndex(scanned, "doc_id", "text", path)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(capture)
+    import scala.jdk.CollectionConverters._
+    val calls = plans.asScala.toSeq.map("minhashSignature".r.findAllMatchIn(_).size).filter(_ > 0)
+    assert(calls == Seq(1), plans.asScala.mkString("\n\n"))
+  }
+
   test("winnowing pairs docs sharing a planted passage, ignores disjoint docs") {
     val passage = "an identical paragraph that was copied between documents verbatim"
     val docs = Seq(

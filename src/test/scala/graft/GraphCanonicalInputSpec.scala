@@ -27,7 +27,7 @@ class GraphCanonicalInputSpec extends SparkTestBase {
   }
 
   private lazy val canonEdges: DataFrame =
-    rawEdges.where(col("src") < col("dst")).distinct().pinned(true)
+    rawEdges.where(col("src") < col("dst")).distinct().pinned()
 
   private lazy val nodes: DataFrame = {
     import spark.implicits._

@@ -276,17 +276,19 @@ class PlanSpec extends SparkTestBase {
     // 2^40 rows — estimate and leaf bytes both 8 TiB; planned, never
     // executed: the guard strips the hint and the join reverts to unhinted
     assert(joinHint(asOrders(spark.range(1L << 40))) === JoinHint.NONE)
-    // a pinned side reports its PRE-pin estimate, not its real size: five
-    // rows out of a filtered cross join of five 10-row ranges carry the
-    // cross join's ~2.5 GB estimate, so the hint on them is stripped today
+    // a pinned side reports the bytes it stores, not its pre-pin estimate:
+    // five rows out of a filtered cross join of five 10-row ranges estimate
+    // the cross join's ~1 GB before the pin and a few hundred bytes after,
+    // so the hint on them is kept
     val r = (1 to 5).map(i => spark.range(10).toDF(s"c$i"))
     val fewRows = asOrders(r.reduce(_.crossJoin(_))
       .filter(r.indices.map(i => col(s"c${i + 1}")).reduce(_ + _) === 1)
       .select(col("c1").as("id")))
-      .pinned()
-    assert(fewRows.count() == 5)
     assert(fewRows.queryExecution.optimizedPlan.stats.sizeInBytes > (1L << 30))
-    assert(joinHint(fewRows) === JoinHint.NONE)
+    val fewPinned = fewRows.pinned()
+    assert(fewPinned.count() == 5)
+    assert(fewPinned.queryExecution.optimizedPlan.stats.sizeInBytes < (64L << 10))
+    assert(kept(joinHint(fewPinned)))
     // a pinned side with a small pre-pin estimate keeps its hint
     assert(kept(joinHint(asOrders(spark.range(5)).pinned())))
     // one policy: no main source but the guard reads a plan size estimate

@@ -70,7 +70,6 @@ class TransformsSpec extends SparkTestBase {
 
   test("anti join broadcast is size-gated: oversized control tables lose the hint") {
     import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint}
-    import graft.util.Checkpoints._
     val keys = Seq("l_orderkey", "l_linenumber")
     val li = spark.read.parquet(sf("sf0.001") + "/lineitem.parquet")
     val up = li.filter($"l_returnflag" === "R").select(keys.map(col): _*)
@@ -80,13 +79,10 @@ class TransformsSpec extends SparkTestBase {
     // tables are usually small and the 100 TB source side must not shuffle)
     val small = Transforms.antiJoinUploaded(li, up, keys)
     assert(hint(small).rightHint.exists(_.strategy.exists(_.toString == "broadcast")))
-    // the same keys behind a pinned cross join with a one-row side: the
-    // pinned leaf keeps the cross join's multi-GB pre-pin estimate, so the
-    // log is oversized to BroadcastGuard — no hint, AQE decides, and a
-    // billion-key log can never be forced into executor memory
-    val r = (1 to 5).map(i => spark.range(10).toDF(s"c$i"))
-    val one = r.reduce(_.crossJoin(_)).filter(r.indices.map(i => col(s"c${i + 1}")).reduce(_ + _) === 0)
-    val bigUp = up.crossJoin(one).select(keys.map(col): _*).pinned()
+    // the same keys behind a leaf that reports 1 TiB: the log is oversized
+    // to BroadcastGuard — no hint, AQE decides, and a billion-key log can
+    // never be forced into executor memory
+    val bigUp = org.apache.spark.sql.SizeStamp(up, BigInt(1L << 40))
     val big = Transforms.antiJoinUploaded(li, bigUp, keys)
     assert(hint(big) === JoinHint.NONE)
     // identical semantics either way
