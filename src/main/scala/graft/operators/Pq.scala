@@ -82,7 +82,7 @@ object Pq {
       col(vecCol).cast("array<double>").as("q_vec"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(round(col("adist"), 6).asc, col("neighbor_id"))
-    c.join(q, col("query_id") =!= col("neighbor_id"))
+    c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
       .withColumn("adist", adcDistanceExpr(col("codes"), col("q_vec"), codebooks))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)

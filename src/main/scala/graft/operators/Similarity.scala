@@ -19,11 +19,14 @@ import graft.functions.VectorOps
   *    At 100 TB the corpus-side work is one signature projection + a
   *    bucket-keyed shuffle; no cross join.
   *
-  * Every search hints its query side with a plain `broadcast(...)`.
-  * [[graft.plans.BroadcastGuard]] may drop the hint when that side is
-  * oversized, as in corpus-vs-corpus retrieval, where the "query set" is as
-  * large as the corpus: the join then falls back to a shuffle join on the
-  * signature / cell key instead of an OOM.
+  * The flat scans (a cross join with a non-equi filter) hint their query
+  * side with a plain `broadcast(...)`: unhinted, a query side the planner
+  * sizes above the auto-broadcast threshold plans as a CartesianProduct
+  * against the whole corpus, which AQE cannot turn back into a broadcast.
+  * [[graft.plans.BroadcastGuard]] drops the hint when that side is
+  * oversized, as in corpus-vs-corpus retrieval. The equi-joins on a
+  * signature or cell key carry no hint: the planner sizes them, and an
+  * oversized query side shuffles on the key instead of an OOM.
   */
 object Similarity {
 
@@ -37,7 +40,7 @@ object Similarity {
       vecCol: String, k: Int = 10): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-    val scored = c.crossJoin(q)
+    val scored = c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", vecCosine(col("q_vec"), col("c_vec")))
     val w = Window.partitionBy(col("query_id"))
@@ -59,7 +62,7 @@ object Similarity {
       vecCol: String, k: Int = 10): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-    val scored = c.crossJoin(q)
+    val scored = c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("dot", graft.functions.KernelExpressions.vecDot(col("q_vec"), col("c_vec")))
     val w = Window.partitionBy(col("query_id"))
@@ -394,7 +397,7 @@ object Similarity {
     val wq = Window.partitionBy(col("query_id"))
       .orderBy(col("qdot").desc, col("neighbor_id"))
     // the flat scan is inherently a small-query-set operator
-    val cand = c8.crossJoin(q8)
+    val cand = c8.crossJoin(broadcast(q8))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("qdot", dotLong(col("q8"), col("c8")))
       .withColumn("crank", row_number().over(wq))
@@ -435,7 +438,7 @@ object Similarity {
       signBits(col(vecCol)).as("cb"))
     val wq = Window.partitionBy(col("query_id"))
       .orderBy(col("hd").asc, col("neighbor_id"))
-    val cand = cb.crossJoin(qb)
+    val cand = cb.crossJoin(broadcast(qb))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("hd", hammingLong(col("qb"), col("cb")))
       .withColumn("crank", row_number().over(wq))
@@ -474,7 +477,7 @@ object Similarity {
       slice(col(vecCol), 1, prefixDim).as("cp"))
     val wq = Window.partitionBy(col("query_id"))
       .orderBy(round(col("pdot"), 6).desc, col("neighbor_id"))
-    val cand = cp.crossJoin(qp)
+    val cand = cp.crossJoin(broadcast(qp))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("pdot", vecDot(col("qp"), col("cp")))
       .withColumn("crank", row_number().over(wq))

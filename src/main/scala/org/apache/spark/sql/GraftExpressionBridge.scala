@@ -49,9 +49,10 @@ object GraftExpressionBridge {
         val path = new Path(dir)
         path.getFileSystem(sc.hadoopConfiguration).getContentSummary(path).getLength
       case None =>
-        sc.env.blockManager.master.getStorageStatus.iterator.flatMap(_.rddBlocks).collect {
-          case (RDDBlockId(id, _), block) if id == leaf.rdd.id => block.memSize + block.diskSize
-        }.sum
+        val blocks = leaf.rdd.partitions.indices.map(RDDBlockId(leaf.rdd.id, _))
+        sc.env.blockManager.master.getStorageStatus.iterator
+          .flatMap(st => blocks.flatMap(st.getBlock))
+          .map(b => b.memSize + b.diskSize).sum
     }
     classic.Dataset(ds.sparkSession, leaf.copy()(ds.sparkSession,
       Some(Statistics(sizeInBytes = bytes)), Some(leaf.constraints)))(ds.encoder)
