@@ -24,9 +24,10 @@ import graft.functions.VectorOps
   * sizes above the auto-broadcast threshold plans as a CartesianProduct
   * against the whole corpus, which AQE cannot turn back into a broadcast.
   * [[graft.plans.BroadcastGuard]] drops the hint when that side is
-  * oversized, as in corpus-vs-corpus retrieval. The equi-joins on a
-  * signature or cell key carry no hint: the planner sizes them, and an
-  * oversized query side shuffles on the key instead of an OOM.
+  * oversized, as in corpus-vs-corpus retrieval; the IVF cell join is
+  * hinted too, or the planner builds the corpus side. The SRP signature
+  * equi-join carries no hint: the planner sizes it, and an oversized query
+  * side shuffles on the signature instead of an OOM.
   */
 object Similarity {
 
