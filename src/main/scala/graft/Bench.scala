@@ -96,8 +96,6 @@ object Bench {
           }
         }
       }
-    val qs = retried.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
     val total = retried.map(_._2).sum
     // Honesty: the min-of-N de-noising can only LOWER a number, so the raw
     // pass-1 timings of every re-timed query are emitted alongside — a
@@ -107,9 +105,15 @@ object Bench {
     val retimed: Set[String] =
       if (passes >= 2) names.toSet
       else results.sortBy(-_._2).take(15).map(_._1).toSet
-    val firstPass = results.filter { case (k, _) => retimed(k) }
-      .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"first_pass":$firstPass,"sf":"$sfDir"}"""
+    val mapper = com.fasterxml.jackson.databind.json.JsonMapper.builder().build()
+    val json = mapper.createObjectNode()
+      .put("metric", "total").put("value", total).put("unit", "sec")
+    val qs = json.putObject("queries")
+    retried.foreach { case (k, v) => qs.put(k, v) }
+    val firstPass = json.putObject("first_pass")
+    results.foreach { case (k, v) => if (retimed(k)) firstPass.put(k, v) }
+    json.put("sf", sfDir)
+    val line = mapper.writeValueAsString(json)
     // Repo artifact: the driver's tail capture truncates long output, so
     // cross-round per-query comparison needs the FULL json somewhere
     // stable. One file per (sf, day), host metadata included so a noisy
@@ -120,8 +124,13 @@ object Bench {
       val outDir = java.nio.file.Paths.get(
         sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench"))
       java.nio.file.Files.createDirectories(outDir)
-      val host = s""""host":{"master":"${spark.sparkContext.master}","cpus":"${spark.sparkContext.defaultParallelism}","jvm_max_mem_mb":${Runtime.getRuntime.maxMemory / (1024 * 1024)},"available_processors":${Runtime.getRuntime.availableProcessors()},"date":"$day","passes":$passes}"""
-      val full = line.dropRight(1) + "," + host + "}\n"
+      json.putObject("host")
+        .put("master", spark.sparkContext.master)
+        .put("cpus", spark.sparkContext.defaultParallelism.toString)
+        .put("jvm_max_mem_mb", Runtime.getRuntime.maxMemory / (1024 * 1024))
+        .put("available_processors", Runtime.getRuntime.availableProcessors())
+        .put("date", day).put("passes", passes)
+      val full = mapper.writeValueAsString(json) + "\n"
       // SPARK_GRAFT_BENCH_TAG names an artifact of record (e.g.
       // `r12_closing`) — deterministic path, overwrite allowed (re-running
       // a closing pass is explicit intent). Untagged runs never clobber an

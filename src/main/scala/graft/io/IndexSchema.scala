@@ -20,34 +20,12 @@ import org.apache.spark.sql.types.{DataType, StructType}
   */
 object IndexSchema {
 
-  private def sidecar(dir: String) =
-    new org.apache.hadoop.fs.Path(s"$dir/_graft_schema.json")
+  private def sidecar(dir: String) = s"$dir/_graft_schema.json"
 
-  def write(spark: SparkSession, dir: String, schema: StructType): Unit = {
-    val p = sidecar(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  def write(spark: SparkSession, dir: String, schema: StructType): Unit =
+    Fs.writeString(spark, sidecar(dir), schema.json)
 
-  def read(spark: SparkSession, dir: String): Option[StructType] = {
-    val p = sidecar(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val bytes =
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          val chunk = new Array[Byte](8192)
-          Iterator.continually(in.read(chunk)).takeWhile(_ >= 0)
-            .foreach(n => buf.write(chunk, 0, n))
-          buf.toByteArray
-        } finally in.close()
-      Some(DataType
-        .fromJson(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
-        .asInstanceOf[StructType])
-    }
-  }
+  def read(spark: SparkSession, dir: String): Option[StructType] =
+    Fs.readString(spark, sidecar(dir))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
 }

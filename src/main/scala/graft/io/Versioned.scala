@@ -28,16 +28,8 @@ object Versioned {
     manifest(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** The currently-published version, if any. */
-  def latestVersion(spark: SparkSession, path: String): Option[Int] = {
-    val f = fs(spark, path)
-    if (!f.exists(manifest(path))) None
-    else {
-      val in = f.open(manifest(path))
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-      Some(s.toInt)
-    }
-  }
+  def latestVersion(spark: SparkSession, path: String): Option[Int] =
+    Fs.readString(spark, manifest(path).toString).map(_.trim.toInt)
 
   /** Highest `v=N` directory on disk — the version AUTHORITY for writers.
     * The manifest only publishes; deriving `next` from it would let a lost
@@ -105,10 +97,8 @@ object Versioned {
     // remain best-effort-monotonic as documented above
     publishLock.synchronized {
       if (latestVersion(spark, path).forall(_ < next)) {
-        val tmp = new org.apache.hadoop.fs.Path(manifest(path).toString + ".tmp." + next)
-        val out = f.create(tmp, true)
-        try out.write(next.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
+        val tmp = new Path(manifest(path).toString + ".tmp." + next)
+        Fs.writeString(spark, tmp.toString, next.toString)
         if (f.exists(manifest(path))) f.delete(manifest(path), false)
         require(f.rename(tmp, manifest(path)),
           s"failed to publish ${manifest(path)}")

@@ -613,30 +613,22 @@ object Dedup {
     * they are persisted alongside the data and asserted at query time.
     */
   private def manifestPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/lsh_params.json")
+    new org.apache.hadoop.fs.Path(s"$path/lsh_params.json").toString
 
   private def writeLshManifest(spark: org.apache.spark.sql.SparkSession,
-      path: String, numHashes: Int, numBands: Int, shingleSize: Int): Unit = {
-    val p = manifestPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(
-      s"""{"numHashes":$numHashes,"numBands":$numBands,"shingleSize":$shingleSize}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+      path: String, numHashes: Int, numBands: Int, shingleSize: Int): Unit =
+    graft.io.Fs.writeString(spark, manifestPath(path),
+      s"""{"numHashes":$numHashes,"numBands":$numBands,"shingleSize":$shingleSize}""")
 
   private def assertLshManifest(spark: org.apache.spark.sql.SparkSession,
       path: String, numHashes: Int, numBands: Int, shingleSize: Int): Unit = {
     val p = manifestPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"no LSH params manifest at $p — index not written by writeLshIndex?")
-    val in = fs.open(p)
-    val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    val stored = graft.io.Fs.readString(spark, p)
+    require(stored.isDefined, s"no LSH params manifest at $p — index not written by writeLshIndex?")
     val expected =
       s"""{"numHashes":$numHashes,"numBands":$numBands,"shingleSize":$shingleSize}"""
-    require(json == expected,
-      s"LSH index at $path was written with $json but queried with $expected")
+    require(stored.contains(expected),
+      s"LSH index at $path was written with ${stored.get} but queried with $expected")
   }
 
   /** Near-dup pairs of NEW documents against a corpus indexed by

@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions._
   *
   *  1. range-partition by the sort key and pre-aggregate per-partition
   *     totals — at most `numPartitions` rows ever leave the executors;
-  *  2. broadcast each partition's starting offset (the exclusive scan of
-  *     the totals, computed on ≤ numPartitions rows) back and add it to a
+  *  2. add each partition's starting offset (the exclusive scan of the
+  *     totals, computed on the driver from ≤ numPartitions rows and put
+  *     back into the plan as a literal map keyed by partition id) to a
   *     partition-LOCAL running sum.
   *
   * The per-partition window never crosses partition boundaries, so no
@@ -99,20 +100,11 @@ object Scan {
       case ((_, acc), (pid, t)) => pid -> acc.lazyZip(t).map(_ + _)
     }.sliding(2).collect { case Array((_, acc), (pid, _)) => pid -> acc }
       .toSeq
-    val offDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        offsets.map { case (pid, os) => org.apache.spark.sql.Row.fromSeq(pid +: os) }, 1),
-      org.apache.spark.sql.types.StructType(
-        org.apache.spark.sql.types.StructField("_scan_pid_o",
-          org.apache.spark.sql.types.IntegerType, nullable = false) +:
-        vals.map(v => org.apache.spark.sql.types.StructField(s"_off_$v",
-          org.apache.spark.sql.types.LongType, nullable = false))))
-    // Pass 2: partition-local running sum + the broadcast offset. The
-    // join is LEFT so a missing offsets row cannot silently DROP the
-    // partition's rows; the offset expression itself raises on the null
-    // (every non-empty partition has exactly one offsets row, so a null
-    // means the pinned-partitioning invariant broke — e.g. the pin above
-    // was removed and the range sampler re-drew boundaries).
+    // Pass 2: partition-local running sum + the partition's offset, looked
+    // up in a ≤ n-entry literal map. Every non-empty partition has exactly
+    // one offset, so a null lookup means the pinned-partitioning invariant
+    // broke (e.g. the pin above was removed and the range sampler re-drew
+    // boundaries) — it raises rather than yield a wrong sum.
     val w = Window.partitionBy(col("_scan_pid")).orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // Uniqueness guard: peers = rows tied on the FULL composite order
@@ -124,9 +116,7 @@ object Scan {
       Window.partitionBy(col("_scan_pid")).orderBy(order: _*)
         .rangeBetween(Window.currentRow, Window.currentRow))
     val named = (v: String) => if (v == valCol) cumCol else s"cum_$v"
-    val withCum = vals.zipWithIndex.foldLeft(
-        ranged.join(broadcast(offDf),
-          col("_scan_pid") === col("_scan_pid_o"), "left")) {
+    val withCum = vals.zipWithIndex.foldLeft(ranged) {
       case (acc, (v, i)) =>
         val dupGuard =
           if (i > 0) lit(0L)
@@ -136,16 +126,18 @@ object Scan {
               "the range sampler splits the tie — aggregate to one row " +
               "per key (or extend the order with a tiebreaker) first")))
             .otherwise(lit(0L))
+        val off = element_at(
+          typedLit(offsets.map { case (pid, os) => pid -> os(i) }.toMap),
+          col("_scan_pid"))
         acc.withColumn(named(v),
           sum(col(v)).over(w) + dupGuard +
-            when(col(s"_off_$v").isNotNull, col(s"_off_$v"))
-              .otherwise(raise_error(concat(
-                lit("prefixSum offset misalignment: partition "),
-                col("_scan_pid").cast("string"),
-                lit(" has rows but no collected offset — the pinned range " +
-                  "partitioning invariant is broken")))))
+            coalesce(off, raise_error(concat(
+              lit("prefixSum offset misalignment: partition "),
+              col("_scan_pid").cast("string"),
+              lit(" has rows but no collected offset — the pinned range " +
+                "partitioning invariant is broken")))))
     }
-    withCum.drop("_scan_pid", "_scan_pid_o").drop(vals.map(v => s"_off_$v"): _*)
+    withCum.drop("_scan_pid")
   }
 
   /** Per-GROUP inclusive running sum over an arbitrary unique composite
@@ -174,7 +166,8 @@ object Scan {
     * bounded — the stats table is one row per group and broadcasts back.
     *
     * Returns the input plus `cumCol` (inclusive within-group running sum
-    * in sortCols order) and `totCol` (the group's value total).
+    * in sortCols order) and `totCol` (the group's value total). A null
+    * group key is a group of its own, as in SQL's `PARTITION BY`.
     */
   def groupedPrefixSum(df: DataFrame, grpCols: Seq[String],
       sortCols: Seq[Column], valCol: String, cumCol: String,
@@ -193,9 +186,14 @@ object Scan {
       .agg(max(col("_gps_cum")).as("_gps_max"), sum(col(valCol)).as(totCol))
       .withColumn("_gps_off", col("_gps_max") - col(totCol))
       .drop("_gps_max")
-    scanned.join(broadcast(grpStats), grpCols)
+    // Null-safe on every group column: a null group is its own group, as
+    // in SQL's PARTITION BY (an equi-join would drop its rows).
+    val keys = grpCols.indices.map(i => s"_gps_k$i")
+    val keyed = grpStats.toDF(keys ++ Seq(totCol, "_gps_off"): _*)
+    scanned.join(broadcast(keyed), grpCols.zip(keys)
+        .map { case (g, k) => col(g) <=> col(k) }.reduce(_ && _))
       .withColumn(cumCol, col("_gps_cum") - col("_gps_off"))
-      .drop("_gps_cum", "_gps_off")
+      .drop("_gps_cum" +: "_gps_off" +: keys: _*)
   }
 
   /** Per-GROUP cumulative counts at value grain — the exact-rank device

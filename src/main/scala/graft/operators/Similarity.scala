@@ -296,30 +296,21 @@ object Similarity {
   }
 
   private def manifestPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/ivf_centroids.digest")
+    new org.apache.hadoop.fs.Path(s"$path/ivf_centroids.digest").toString
 
   private def writeCentroidManifest(spark: org.apache.spark.sql.SparkSession,
-      path: String, centroids: Seq[Seq[Double]]): Unit = {
-    val p = manifestPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(centroidDigest(centroids)
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+      path: String, centroids: Seq[Seq[Double]]): Unit =
+    graft.io.Fs.writeString(spark, manifestPath(path), centroidDigest(centroids))
 
   private def assertCentroidManifest(spark: org.apache.spark.sql.SparkSession,
       path: String, centroids: Seq[Seq[Double]]): Unit = {
     val p = manifestPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p),
+    val stored = graft.io.Fs.readString(spark, p)
+    require(stored.isDefined,
       s"no centroid manifest at $p — index not written by writeIvfIndex?")
-    val in = fs.open(p)
-    val stored = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
     val expected = centroidDigest(centroids)
-    require(stored == expected,
-      s"IVF index at $path was written with centroid digest $stored but " +
+    require(stored.contains(expected),
+      s"IVF index at $path was written with centroid digest ${stored.get} but " +
         s"queried with $expected — retrain or rebuild, don't mix families")
   }
 

@@ -354,6 +354,22 @@ class DedupSpec extends SparkTestBase {
     assert(incr.nonEmpty)
   }
 
+  test("LSH index queried with other band parameters fails naming both sets") {
+    val docs = Seq((1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "a quick brown fox jumped over a lazy dog today")).toDF("doc_id", "text")
+    val path = java.nio.file.Files.createTempDirectory("graft_lsh_params").toString
+    Dedup.writeLshIndex(docs, "doc_id", "text", path, numBands = 8)
+    val err = intercept[IllegalArgumentException] {
+      Dedup.lshPairsAgainstIndex(spark,
+        Seq((3L, "the quick brown fox")).toDF("doc_id", "text"),
+        "doc_id", "text", path, numBands = 4)
+    }
+    assert(err.getMessage.contains(
+      """written with {"numHashes":32,"numBands":8,"shingleSize":5}"""), err.getMessage)
+    assert(err.getMessage.contains(
+      """queried with {"numHashes":32,"numBands":4,"shingleSize":5}"""), err.getMessage)
+  }
+
   test("LSH banding computes each doc's minhash signature once") {
     // the sentinel check must not be pushed below the projection that
     // computes the signature: the written band frame's plan calls the

@@ -493,6 +493,22 @@ class PlanSpec extends SparkTestBase {
     }
   }
 
+  test("scan consumers join nothing on the scan partition id") {
+    // Scan.prefixSumOrdered reads each partition's offset from a literal
+    // map keyed by _scan_pid; an offsets table joined back on it would
+    // cost a join and a broadcast job per scan
+    val joinKeys = raw"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin) \[([^\]]*)\], \[([^\]]*)\]".r
+    for (q <- Seq("q_gini", "q_ks_stat", "t_conformal", "q_rank_suite",
+        "q_winsorized_mean", "q_mad_outliers", "t_token_budget",
+        "c_pack_sequences")) {
+      val p = planOf(q)
+      assert(!p.contains("_scan_pid_o"), s"$q still carries an offsets table")
+      for (m <- joinKeys.findAllMatchIn(p); keys = m.group(2) + ", " + m.group(3))
+        assert(!raw"(^|[ (,])_scan_pid#".r.findFirstIn(keys).isDefined,
+          s"$q joins on the scan partition id: ${m.matched}")
+    }
+  }
+
   test("EXISTS audit plans as a LEFT SEMI hash join with no post-join distinct") {
     val p = planOf("q_semi_join")
     assert(p.contains("LeftSemi"), p.linesIterator.take(8).mkString("\n"))

@@ -61,6 +61,20 @@ class Round12OpsSpec extends SparkTestBase {
       ("a", 3L, 7L, 7L), ("b", 1L, 4L, 4L)))
   }
 
+  test("groupedPrefixSum keeps a null group as its own group") {
+    // PARTITION BY semantics: rows whose group key is null are one group,
+    // not dropped by the group-stats join
+    val df = Seq((Option("a"), 1L, 5L), (Option("a"), 2L, 2L),
+      (Option.empty[String], 1L, 3L), (Option.empty[String], 2L, 4L),
+      (Option("b"), 1L, 1L)).toDF("g", "t", "v")
+    val got = graft.operators.Scan.groupedPrefixSum(df, Seq("g"),
+        Seq(col("t")), "v", "cum", "tot")
+      .collect().map(r => (Option(r.getString(0)), r.getLong(1),
+        r.getLong(3), r.getLong(4))).toSet
+    assert(got === Set((Some("a"), 1L, 7L, 5L), (Some("a"), 2L, 7L, 7L),
+      (None, 1L, 7L, 3L), (None, 2L, 7L, 7L), (Some("b"), 1L, 1L, 1L)))
+  }
+
   // ---- Allocate.fifo: negative quantities + width-outlier key ---------
 
   test("fifo raises on negative quantities instead of silently dropping them") {

@@ -140,6 +140,19 @@ class SimilaritySpec extends SparkTestBase {
     assert(err.getMessage.contains("does not match the index's stored"))
   }
 
+  test("IVF append with a different centroid family fails: retrain or rebuild") {
+    val emb = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
+    val centroids = VectorOps.rademacherPlanes(8, 64)
+    val path = java.nio.file.Files.createTempDirectory("graft_ivfc").toString + "/index"
+    Similarity.writeIvfIndex(emb.filter(col("vec_id") < 10), "vec_id", "embedding",
+      centroids, path)
+    val err = intercept[IllegalArgumentException] {
+      Similarity.appendIvfIndex(emb.filter(col("vec_id") >= 10), "vec_id",
+        "embedding", centroids.reverse, path)
+    }
+    assert(err.getMessage.contains("retrain or rebuild"), err.getMessage)
+  }
+
   test("int8 quantization: bounded range, zero-vector safe, argmax preserved") {
     import graft.functions.KernelExpressions.{dotLong, int8Quantize}
     val df = Seq(
