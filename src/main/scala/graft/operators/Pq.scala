@@ -4,7 +4,6 @@ import graft.util.Checkpoints._
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 import graft.functions.VectorOps
 
@@ -80,15 +79,17 @@ object Pq {
       encodeExpr(col(vecCol), codebooks).as("codes"))
     val q = queries.select(col(idCol).as("query_id"),
       col(vecCol).cast("array<double>").as("q_vec"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(round(col("adist"), 6).asc, col("neighbor_id"))
-    c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("adist", adcDistanceExpr(col("codes"), col("q_vec"), codebooks))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("adist"), 6).as("adist"))
+    adcTopK(Similarity.flatScan(q, c), "q_vec", codebooks, k)
   }
+
+  /** ADC distance of each (query, codes) pair, ranked ascending per query
+    * — the refinement every PQ search ends in; `Pq` ranks are long.
+    */
+  private def adcTopK(pairs: DataFrame, qVec: String,
+      codebooks: Seq[Seq[Seq[Double]]], k: Int): DataFrame =
+    Similarity.rankedBy(
+      pairs.withColumn("adist", adcDistanceExpr(col("codes"), col(qVec), codebooks)),
+      "adist", k, ascending = true).withColumn("rank", col("rank").cast("long"))
 
   /** IVF-PQ: coarse cells prune the scan, PQ codes compress what's left —
     * composed exactly from [[Similarity.nearestCells]] (cell assignment /
@@ -102,12 +103,18 @@ object Pq {
     */
   def ivfPqTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, centroids: Seq[Seq[Double]],
-      codebooks: Seq[Seq[Seq[Double]]], k: Int = 10, nprobe: Int = 2): DataFrame = {
-    val c = corpus.select(col(idCol).as("neighbor_id"),
+      codebooks: Seq[Seq[Seq[Double]]], k: Int = 10, nprobe: Int = 2): DataFrame =
+    rankCoded(coded(corpus, idCol, vecCol, centroids, codebooks), queries, idCol,
+      vecCol, centroids, codebooks, k, nprobe)
+
+  /** (neighbor_id, cell, codes): the IVF-PQ corpus projection, searched
+    * directly or written as the index.
+    */
+  private def coded(corpus: DataFrame, idCol: String, vecCol: String,
+      centroids: Seq[Seq[Double]], codebooks: Seq[Seq[Seq[Double]]]): DataFrame =
+    corpus.select(col(idCol).as("neighbor_id"),
       element_at(Similarity.nearestCells(col(vecCol), centroids, 1), 1).as("cell"),
       encodeExpr(col(vecCol), codebooks).as("codes"))
-    rankCoded(c, queries, idCol, vecCol, centroids, codebooks, k, nprobe)
-  }
 
   /** Probe + ADC-rank a (neighbor_id, cell, codes) corpus — shared by the
     * recompute and materialized-index paths.
@@ -119,15 +126,7 @@ object Pq {
         col(vecCol).cast("array<double>").as("q_vec"),
         Similarity.nearestCells(col(vecCol), centroids, nprobe).as("cells"))
       .select(col("query_id"), col("q_vec"), explode(col("cells")).as("cell"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(round(col("adist"), 6).asc, col("neighbor_id"))
-    c.join(broadcast(q), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adist", adcDistanceExpr(col("codes"), col("q_vec"), codebooks))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("adist"), 6).as("adist"))
+    adcTopK(Similarity.cellProbe(c, q), "q_vec", codebooks, k)
   }
 
   /** Residual of a vector against its nearest coarse centroid: the
@@ -165,15 +164,7 @@ object Pq {
       .select(col("query_id"), col("cell"),
         zip_with(col("q_vec"), element_at(cen, col("cell") + 1),
           (x, ctr) => x - ctr).as("q_res"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(round(col("adist"), 6).asc, col("neighbor_id"))
-    c.join(broadcast(q), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adist", adcDistanceExpr(col("codes"), col("q_res"), codebooks))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("adist"), 6).as("adist"))
+    adcTopK(Similarity.cellProbe(c, q), "q_res", codebooks, k)
   }
 
   /** Materialized IVF-PQ index: codes + coarse cell written ONCE,
@@ -185,44 +176,25 @@ object Pq {
     */
   def writePqIndex(corpus: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[Seq[Double]], codebooks: Seq[Seq[Seq[Double]]],
-      path: String): Unit = {
-    val projected = corpus.select(col(idCol).as("neighbor_id"),
-      element_at(Similarity.nearestCells(col(vecCol), centroids, 1), 1).as("cell"),
-      encodeExpr(col(vecCol), codebooks).as("codes"))
-    projected.write.partitionBy("cell").mode("overwrite").parquet(path)
-    // record the STORED types (the id column, in particular, follows the
-    // corpus, not a later query frame) — see graft.io.IndexSchema
-    graft.io.IndexSchema.write(corpus.sparkSession, path, projected.schema)
-  }
+      path: String): Unit =
+    Similarity.writeCellIndex(coded(corpus, idCol, vecCol, centroids, codebooks),
+      path, Similarity.indexIdentity(centroids, codebooks))
 
   /** Search an index written by [[writePqIndex]] with the SAME centroids
-    * and codebooks. Identical results to [[ivfPqTopK]]; the corpus-side
-    * cell and codes are read back, never recomputed.
+    * and codebooks — asserted against the index's identity manifest, so a
+    * retrained centroid list or codebook fails instead of returning wrong
+    * neighbors. Identical results to [[ivfPqTopK]]; the corpus-side cell
+    * and codes are read back, never recomputed.
     */
   def pqIndexTopK(spark: org.apache.spark.sql.SparkSession, queries: DataFrame,
       idCol: String, vecCol: String, centroids: Seq[Seq[Double]],
       codebooks: Seq[Seq[Seq[Double]]], path: String, k: Int = 10,
-      nprobe: Int = 2): DataFrame = {
-    // explicit read schema: the writer's sidecar when present, else a
-    // 0-row projection of the query frame (see Similarity.ivfIndexTopK) —
-    // an empty-corpus index has no data files under partitionBy and
-    // inference would fail the read
-    val idxSchema = graft.io.IndexSchema.read(spark, path).getOrElse(
-      queries.limit(0)
-        .select(col(idCol).as("neighbor_id"),
-          encodeExpr(col(vecCol), codebooks).as("codes"),
-          lit(0).cast("int").as("cell")).schema)
-    val c = spark.read.schema(idxSchema).parquet(path)
-      .select(col("neighbor_id"), col("codes"), col("cell").cast("int").as("cell"))
-    rankCoded(c, queries, idCol, vecCol, centroids, codebooks, k, nprobe)
-  }
+      nprobe: Int = 2): DataFrame =
+    rankCoded(Similarity.readCellIndex(spark, path,
+        Similarity.indexIdentity(centroids, codebooks), queries, idCol, "codes",
+        encodeExpr(col(vecCol), codebooks)),
+      queries, idCol, vecCol, centroids, codebooks, k, nprobe)
 
-  /** Per-subspace L2 Lloyd training, one aggregation job per iteration for
-    * ALL subspaces at once: vectors explode into (subspace, subvector)
-    * rows, assign to the current nearest centroid, average per
-    * (subspace, centroid, dimension). Only numSub × ksub × dsub doubles
-    * ever reach the driver. Train on a sample at scale, then freeze.
-    */
   /** [[trainCodebooks]] behind the same executable sample-first contract
     * as [[Similarity.trainCentroidsSampled]]: at most `maxTrainRows`
     * vectors feed the per-subspace Lloyd loop. Returns the codebooks plus
@@ -239,6 +211,12 @@ object Pq {
     (trainCodebooks(train, vecCol, numSub, ksub, dim, iters), used)
   }
 
+  /** Per-subspace L2 Lloyd training, one aggregation job per iteration for
+    * ALL subspaces at once: vectors explode into (subspace, subvector)
+    * rows, assign to the current nearest centroid, average per
+    * (subspace, centroid, dimension). Only numSub × ksub × dsub doubles
+    * ever reach the driver. Train on a sample at scale, then freeze.
+    */
   def trainCodebooks(corpus: DataFrame, vecCol: String, numSub: Int,
       ksub: Int, dim: Int, iters: Int = 5): Seq[Seq[Seq[Double]]] = {
     require(dim % numSub == 0, s"dim $dim not divisible into $numSub subspaces")

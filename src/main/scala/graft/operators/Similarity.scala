@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.util.Checkpoints._
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.VectorOps
@@ -19,38 +19,89 @@ import graft.functions.VectorOps
   *    At 100 TB the corpus-side work is one signature projection + a
   *    bucket-keyed shuffle; no cross join.
   *
-  * The flat scans (a cross join with a non-equi filter) hint their query
-  * side with a plain `broadcast(...)`: unhinted, a query side the planner
-  * sizes above the auto-broadcast threshold plans as a CartesianProduct
-  * against the whole corpus, which AQE cannot turn back into a broadcast.
-  * [[graft.plans.BroadcastGuard]] drops the hint when that side is
-  * oversized, as in corpus-vs-corpus retrieval; the IVF cell join is
-  * hinted too, or the planner builds the corpus side. The SRP signature
-  * equi-join carries no hint: the planner sizes it, and an oversized query
-  * side shuffles on the signature instead of an OOM.
+  * Every search here and in [[Pq]] is one shape — candidate generation,
+  * then one per-query top-k refinement (the REPOSE decomposition of
+  * distributed top-k search) — spelled once: candidates come from
+  * [[flatScan]] (the hinted cross join), [[cellProbe]] (the hinted IVF cell
+  * equi-join) or the SRP signature equi-join; [[topKPerQuery]] is the one
+  * rank window; [[rescore]] is the exact-cosine fetch-on-verify tail of the
+  * compressed flat scans; [[cellsByCosine]] is the one centroid sort; and
+  * [[writeCellIndex]]/[[readCellIndex]] are the one cell-partitioned index
+  * format. The SRP signature equi-join carries no hint: the planner sizes
+  * it, and an oversized query side shuffles on the signature instead of an
+  * OOM.
   */
 object Similarity {
 
   import graft.functions.KernelExpressions.vecCosine
+
+  /** The flat scan: every corpus row against every query, self-matches
+    * removed. The query side is hinted with a plain `broadcast(...)`:
+    * unhinted, a query side the planner sizes above the auto-broadcast
+    * threshold plans this non-equi join as a CartesianProduct against the
+    * whole corpus, which AQE cannot turn back into a broadcast.
+    * [[graft.plans.BroadcastGuard]] drops the hint when that side is
+    * oversized, as in corpus-vs-corpus retrieval.
+    */
+  private[operators] def flatScan(q: DataFrame, c: DataFrame): DataFrame =
+    c.crossJoin(broadcast(q)).filter(col("query_id") =!= col("neighbor_id"))
+
+  /** The IVF probe: each corpus row meets the queries that probe its
+    * `cell`, self-matches removed. Hinted like [[flatScan]]: unhinted, the
+    * planner builds the corpus side of this equi-join.
+    */
+  private[operators] def cellProbe(c: DataFrame, q: DataFrame): DataFrame =
+    c.join(broadcast(q), Seq("cell")).filter(col("query_id") =!= col("neighbor_id"))
+
+  /** The one rank window: per query, the first `k` rows by `order` with
+    * the neighbor id as tiebreak, numbered 1.. in an int `rank`.
+    */
+  private def topKPerQuery(scored: DataFrame, order: Column,
+      k: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(
+        Window.partitionBy(col("query_id")).orderBy(order, col("neighbor_id"))))
+      .filter(col("rank") <= k)
+
+  /** [[topKPerQuery]] on `score` rounded to 6 places (descending, or
+    * ascending for distances), projected to
+    * (query_id, neighbor_id, rank, score) — the output of every search.
+    */
+  private[operators] def rankedBy(scored: DataFrame, score: String, k: Int,
+      ascending: Boolean = false): DataFrame = {
+    val rounded = round(col(score), 6)
+    topKPerQuery(scored, if (ascending) rounded.asc else rounded.desc, k)
+      .select(col("query_id"), col("neighbor_id"), col("rank"), rounded.as(score))
+  }
+
+  /** Exact cosine of (q_vec, c_vec) pairs, ranked per query. */
+  private def cosineTopK(pairs: DataFrame, k: Int): DataFrame =
+    rankedBy(pairs.withColumn("cosine", vecCosine(col("q_vec"), col("c_vec"))),
+      "cosine", k)
+
+  private def querySide(queries: DataFrame, idCol: String, vecCol: String) =
+    queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
+
+  private def corpusSide(corpus: DataFrame, idCol: String, vecCol: String) =
+    corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
+
+  /** Fetch-on-verify: only the candidate (query_id, neighbor_id) pairs
+    * rejoin their full-precision vectors through id equi-joins (the shape
+    * of the LSH dedup verifies) and rank by exact cosine — the tail of
+    * [[quantizedTopK]], [[binaryTopK]] and [[truncatedTopK]].
+    */
+  private def rescore(cand: DataFrame, queries: DataFrame,
+      corpus: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame =
+    cosineTopK(cand.join(corpusSide(corpus, idCol, vecCol), Seq("neighbor_id"))
+      .join(querySide(queries, idCol, vecCol), Seq("query_id")), k)
 
   /** Exact top-k: queries × corpus cosine, rank per query.
     * The query side is usually small and broadcast; an oversized one loses
     * the hint to [[graft.plans.BroadcastGuard]].
     */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-      vecCol: String, k: Int = 10): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", vecCosine(col("q_vec"), col("c_vec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(round(col("cosine"), 6).desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cosine"), 6).as("cosine"))
-  }
+      vecCol: String, k: Int = 10): DataFrame =
+    cosineTopK(flatScan(querySide(queries, idCol, vecCol),
+      corpusSide(corpus, idCol, vecCol)), k)
 
   /** Exact maximum-inner-product top-k (MIPS — the retrieval scoring for
     * unnormalized embeddings, e.g. recommendation and learned-sparse
@@ -60,19 +111,11 @@ object Similarity {
     * query-side broadcast and shuffle shape as [[bruteForceTopK]].
     */
   def mipsTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-      vecCol: String, k: Int = 10): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("dot", graft.functions.KernelExpressions.vecDot(col("q_vec"), col("c_vec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(round(col("dot"), 6).desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("dot"), 6).as("dot"))
-  }
+      vecCol: String, k: Int = 10): DataFrame =
+    rankedBy(flatScan(querySide(queries, idCol, vecCol),
+        corpusSide(corpus, idCol, vecCol))
+      .withColumn("dot", graft.functions.KernelExpressions.vecDot(col("q_vec"), col("c_vec"))),
+      "dot", k)
 
   /** Order-preserving MIPS→cosine reduction (the Shrivastava–Li /
     * Neyshabur–Srebro augmentation): corpus vectors append
@@ -141,21 +184,13 @@ object Similarity {
       graft.functions.KernelExpressions.srpBucketKeys(v, planes, 1, numPlanes), 1)
     val masks: Seq[Long] = (0 to probeRadius).flatMap(i =>
       (0 until numPlanes).combinations(i).map(_.foldLeft(0L)((a, p) => a | (1L << p))))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
+    val q = querySide(queries, idCol, vecCol)
       .withColumn("q_sig", sig(col("q_vec")))
       .withColumn("probe_sig",
         explode(transform(typedLit(masks), m => col("q_sig").bitwiseXOR(m))))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-      .withColumn("c_sig", sig(col("c_vec")))
-    val candidates = c.join(q,
-      col("probe_sig") === col("c_sig") && col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", vecCosine(col("q_vec"), col("c_vec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(round(col("cosine"), 6).desc, col("neighbor_id"))
-    candidates.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cosine"), 6).as("cosine"))
+    val c = corpusSide(corpus, idCol, vecCol).withColumn("c_sig", sig(col("c_vec")))
+    cosineTopK(c.join(q,
+      col("probe_sig") === col("c_sig") && col("query_id") =!= col("neighbor_id")), k)
   }
 
   /** Spherical k-means for IVF coarse centroids: each Lloyd iteration is
@@ -170,11 +205,8 @@ object Similarity {
       iters: Int = 5): Seq[Seq[Double]] = {
     var centroids = VectorOps.rademacherPlanes(k, dim)
     for (_ <- 0 until iters) {
-      val cell = centroids.zipWithIndex.map { case (ctr, i) =>
-        struct((vecCosine(col("v"), typedLit(ctr)) * -1).as("negCos"), lit(i).as("cell"))
-      }
       val assigned = corpus.select(col(vecCol).as("v"))
-        .withColumn("cell", element_at(slice(array_sort(array(cell: _*)), 1, 1), 1).getField("cell"))
+        .withColumn("cell", element_at(nearestCells(col("v"), centroids, 1), 1))
       val means = assigned
         .select(col("cell"), posexplode(col("v")).as(Seq("pos", "x")))
         .groupBy(col("cell"), col("pos"))
@@ -232,18 +264,22 @@ object Similarity {
     (trainCentroids(train, vecCol, k, dim, iters), used)
   }
 
-  /** The `n` nearest centroid cells of a vector by cosine, descending
-    * (ties by cell index — the exact order the DuckDB oracles replicate).
+  /** Every centroid of a vector as a (negCos, cell) struct, sorted
+    * ascending by negCos = descending by cosine, ties by cell index — the
+    * exact order the DuckDB oracles replicate (`Shared.sqlCellsByCosine`).
+    * Position 1 is the vector's own cell, position 2 its nearest other.
     */
-  def nearestCells(vec: org.apache.spark.sql.Column,
-      centroids: Seq[Seq[Double]], n: Int): org.apache.spark.sql.Column = {
-    val scored = centroids.zipWithIndex.map { case (ctr, i) =>
-      struct((vecCosine(vec, typedLit(ctr)) * -1).as("negCos"),
-        lit(i).as("cell"))
-    }
-    // sort ascending by negCos = descending by cosine; take n cells
-    slice(array_sort(array(scored: _*)), 1, n).getField("cell")
-  }
+  private def cellsByCosine(vec: Column,
+      centroids: Seq[Seq[Double]]): Column =
+    array_sort(array(centroids.zipWithIndex.map { case (ctr, i) =>
+      struct((vecCosine(vec, typedLit(ctr)) * -1).as("negCos"), lit(i).as("cell"))
+    }: _*))
+
+  /** The `n` nearest centroid cells of a vector by cosine, descending
+    * (ties by cell index — see [[cellsByCosine]]).
+    */
+  def nearestCells(vec: Column, centroids: Seq[Seq[Double]], n: Int): Column =
+    slice(cellsByCosine(vec, centroids), 1, n).getField("cell")
 
   /** IVF-style coarse quantization: assign every corpus vector to its
     * nearest of `centroids` (driver-side literal list — see
@@ -253,11 +289,13 @@ object Similarity {
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, centroids: Seq[Seq[Double]], k: Int = 10,
-      nprobe: Int = 2): DataFrame = {
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-      .withColumn("cell", element_at(nearestCells(col("c_vec"), centroids, 1), 1))
-    rankCells(queries, c, idCol, vecCol, centroids, k, nprobe)
-  }
+      nprobe: Int = 2): DataFrame =
+    rankCells(queries, withCell(corpusSide(corpus, idCol, vecCol), centroids),
+      idCol, vecCol, centroids, k, nprobe)
+
+  /** A [[corpusSide]] frame with each vector's nearest `cell`. */
+  private def withCell(c: DataFrame, centroids: Seq[Seq[Double]]) =
+    c.withColumn("cell", element_at(nearestCells(col("c_vec"), centroids, 1), 1))
 
   /** Materialized IVF index: the corpus written ONCE partitioned by coarse
     * cell. At 100 TB you do not re-assign cells per query — the directory
@@ -266,52 +304,77 @@ object Similarity {
     * partition pruning, so the scan touches ~nprobe/k of the files.
     */
   def writeIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      centroids: Seq[Seq[Double]], path: String): Unit = {
-    val projected = corpus
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-      .withColumn("cell", element_at(nearestCells(col("c_vec"), centroids, 1), 1))
-    projected.write.partitionBy("cell").mode("overwrite").parquet(path)
-    writeCentroidManifest(corpus.sparkSession, path, centroids)
-    // record the STORED types so a later search with differently-typed
-    // query vectors (float corpus / double queries) still reads the index
-    graft.io.IndexSchema.write(corpus.sparkSession, path, projected.schema)
-  }
+      centroids: Seq[Seq[Double]], path: String): Unit =
+    writeCellIndex(withCell(corpusSide(corpus, idCol, vecCol), centroids),
+      path, indexIdentity(centroids))
 
-  /** The centroid list is part of the index's identity — cell numbers from
-    * a DIFFERENT centroid family still join numerically and return
-    * confidently wrong neighbors with no error — so a digest of the exact
-    * centroid doubles (bit patterns) is persisted with the index and
-    * asserted on every query/append, the same discipline as the LSH band
-    * index's parameter manifest.
+  /** The trained artifacts are part of a cell index's identity — cell
+    * numbers from a DIFFERENT centroid family still join numerically, and
+    * codes from different codebooks still score, returning confidently
+    * wrong neighbors with no error — so a digest of the exact doubles (bit
+    * patterns) of the centroids and of every codebook is persisted with
+    * the index and asserted on every query/append, the same discipline as
+    * the LSH band index's parameter manifest. An IVF index, with no
+    * codebooks, records the centroid digest alone.
     */
-  private def centroidDigest(centroids: Seq[Seq[Double]]): String = {
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    val buf = java.nio.ByteBuffer.allocate(8)
-    centroids.foreach(_.foreach { d =>
-      buf.clear(); buf.putLong(java.lang.Double.doubleToLongBits(d))
-      md.update(buf.array())
-    })
-    s"${centroids.size}x${centroids.headOption.map(_.size).getOrElse(0)}:" +
-      md.digest().map("%02x".format(_)).mkString
-  }
+  private[operators] def indexIdentity(centroids: Seq[Seq[Double]],
+      codebooks: Seq[Seq[Seq[Double]]] = Nil): String =
+    (centroids +: codebooks).map { m =>
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      val buf = java.nio.ByteBuffer.allocate(8)
+      m.foreach(_.foreach { d =>
+        buf.clear(); buf.putLong(java.lang.Double.doubleToLongBits(d))
+        md.update(buf.array())
+      })
+      s"${m.size}x${m.headOption.map(_.size).getOrElse(0)}:" +
+        md.digest().map("%02x".format(_)).mkString
+    }.mkString(" ")
 
   private def manifestPath(path: String) =
     new org.apache.hadoop.fs.Path(s"$path/ivf_centroids.digest").toString
 
-  private def writeCentroidManifest(spark: org.apache.spark.sql.SparkSession,
-      path: String, centroids: Seq[Seq[Double]]): Unit =
-    graft.io.Fs.writeString(spark, manifestPath(path), centroidDigest(centroids))
-
-  private def assertCentroidManifest(spark: org.apache.spark.sql.SparkSession,
-      path: String, centroids: Seq[Seq[Double]]): Unit = {
+  private def assertIdentity(spark: SparkSession, path: String,
+      identity: String): Unit = {
     val p = manifestPath(path)
     val stored = graft.io.Fs.readString(spark, p)
     require(stored.isDefined,
-      s"no centroid manifest at $p — index not written by writeIvfIndex?")
-    val expected = centroidDigest(centroids)
-    require(stored.contains(expected),
-      s"IVF index at $path was written with centroid digest ${stored.get} but " +
-        s"queried with $expected — retrain or rebuild, don't mix families")
+      s"no identity manifest at $p — index not written by writeIvfIndex/writePqIndex?")
+    require(stored.contains(identity),
+      s"index at $path was written with identity digest ${stored.get} but " +
+        s"queried with $identity — retrain or rebuild, don't mix families")
+  }
+
+  /** The one cell-partitioned index writer ([[writeIvfIndex]],
+    * [[Pq.writePqIndex]]): `projected` written partitioned by its `cell`
+    * column, then the identity manifest and the STORED schema (so a later
+    * search with differently-typed query vectors — float corpus, double
+    * queries — still reads the index; see [[graft.io.IndexSchema]]).
+    */
+  private[operators] def writeCellIndex(projected: DataFrame, path: String,
+      identity: String): Unit = {
+    val spark = projected.sparkSession
+    projected.write.partitionBy("cell").mode("overwrite").parquet(path)
+    graft.io.Fs.writeString(spark, manifestPath(path), identity)
+    graft.io.IndexSchema.write(spark, path, projected.schema)
+  }
+
+  /** The one cell-index reader ([[ivfIndexTopK]], [[Pq.pqIndexTopK]]):
+    * asserts the identity, then reads (neighbor_id, `payload`, cell) under
+    * an explicit schema — the writer's sidecar when present (the STORED
+    * types), else a 0-row projection of the query frame with `payloadExpr`
+    * (pre-sidecar indexes). Explicit either way because an index written
+    * from an EMPTY corpus has no data files under partitionBy and
+    * inference would fail the read.
+    */
+  private[operators] def readCellIndex(spark: SparkSession, path: String,
+      identity: String, queries: DataFrame, idCol: String, payload: String,
+      payloadExpr: Column): DataFrame = {
+    assertIdentity(spark, path, identity)
+    val schema = graft.io.IndexSchema.read(spark, path).getOrElse(
+      queries.limit(0).select(col(idCol).as("neighbor_id"), payloadExpr.as(payload),
+        lit(0).cast("int").as("cell")).schema)
+    spark.read.schema(schema).parquet(path)
+      .select(col("neighbor_id"), col(payload), col("cell").cast("int").as("cell"))
   }
 
   /** Incrementally APPEND new vectors to an index written by
@@ -323,10 +386,8 @@ object Similarity {
     */
   def appendIvfIndex(newVecs: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[Seq[Double]], path: String): Unit = {
-    assertCentroidManifest(newVecs.sparkSession, path, centroids)
-    val projected = newVecs
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-      .withColumn("cell", element_at(nearestCells(col("c_vec"), centroids, 1), 1))
+    assertIdentity(newVecs.sparkSession, path, indexIdentity(centroids))
+    val projected = withCell(corpusSide(newVecs, idCol, vecCol), centroids)
     // an append whose id/vector types differ from the stored ones would
     // produce a mixed-type parquet directory that fails only at READ time
     // under the sidecar schema — fail loudly here instead
@@ -347,23 +408,12 @@ object Similarity {
     * centroid list. Identical results to [[ivfTopK]]; the corpus-side cell
     * assignment is read from the partition column instead of recomputed.
     */
-  def ivfIndexTopK(spark: org.apache.spark.sql.SparkSession, queries: DataFrame,
+  def ivfIndexTopK(spark: SparkSession, queries: DataFrame,
       idCol: String, vecCol: String, centroids: Seq[Seq[Double]], path: String,
-      k: Int = 10, nprobe: Int = 2): DataFrame = {
-    assertCentroidManifest(spark, path, centroids)
-    // explicit read schema: the writer's sidecar when present (the STORED
-    // types — a float corpus stays readable under double queries), else a
-    // 0-row projection of the query frame (pre-sidecar indexes). Explicit
-    // either way because an index written from an EMPTY corpus has no
-    // data files under partitionBy and inference would fail the read.
-    val idxSchema = graft.io.IndexSchema.read(spark, path).getOrElse(
-      queries.limit(0)
-        .select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"),
-          lit(0).cast("int").as("cell")).schema)
-    val c = spark.read.schema(idxSchema).parquet(path)
-      .select(col("neighbor_id"), col("c_vec"), col("cell").cast("int").as("cell"))
-    rankCells(queries, c, idCol, vecCol, centroids, k, nprobe)
-  }
+      k: Int = 10, nprobe: Int = 2): DataFrame =
+    rankCells(queries, readCellIndex(spark, path, indexIdentity(centroids),
+        queries, idCol, "c_vec", col(vecCol)),
+      idCol, vecCol, centroids, k, nprobe)
 
   /** Quantized flat search with exact rescore — the int8 compression
     * pattern (FAISS `IndexFlat`-with-SQ8 analog): candidates are scored
@@ -386,27 +436,12 @@ object Similarity {
       int8Quantize(col(vecCol)).as("q8"))
     val c8 = corpus.select(col(idCol).as("neighbor_id"),
       int8Quantize(col(vecCol)).as("c8"))
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("qdot").desc, col("neighbor_id"))
     // the flat scan is inherently a small-query-set operator
-    val cand = c8.crossJoin(broadcast(q8))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("qdot", dotLong(col("q8"), col("c8")))
-      .withColumn("crank", row_number().over(wq))
-      .filter(col("crank") <= candidates)
+    val cand = topKPerQuery(flatScan(q8, c8)
+        .withColumn("qdot", dotLong(col("q8"), col("c8"))),
+        col("qdot").desc, candidates)
       .select(col("query_id"), col("neighbor_id"))
-    // fetch-on-verify: only candidate ids rejoin the full-precision vectors
-    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-    val cv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(round(col("cosine"), 6).desc, col("neighbor_id"))
-    cand.join(cv, Seq("neighbor_id"))
-      .join(qv, Seq("query_id"))
-      .withColumn("cosine", vecCosine(col("q_vec"), col("c_vec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cosine"), 6).as("cosine"))
+    rescore(cand, queries, corpus, idCol, vecCol, k)
   }
 
   /** Binary-quantized flat ANN with exact rescore: vectors pack to 1 bit
@@ -428,25 +463,11 @@ object Similarity {
       signBits(col(vecCol)).as("qb"))
     val cb = corpus.select(col(idCol).as("neighbor_id"),
       signBits(col(vecCol)).as("cb"))
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("hd").asc, col("neighbor_id"))
-    val cand = cb.crossJoin(broadcast(qb))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("hd", hammingLong(col("qb"), col("cb")))
-      .withColumn("crank", row_number().over(wq))
-      .filter(col("crank") <= candidates)
+    val cand = topKPerQuery(flatScan(qb, cb)
+        .withColumn("hd", hammingLong(col("qb"), col("cb"))),
+        col("hd").asc, candidates)
       .select(col("query_id"), col("neighbor_id"))
-    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-    val cv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(round(col("cosine"), 6).desc, col("neighbor_id"))
-    cand.join(cv, Seq("neighbor_id"))
-      .join(qv, Seq("query_id"))
-      .withColumn("cosine", vecCosine(col("q_vec"), col("c_vec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cosine"), 6).as("cosine"))
+    rescore(cand, queries, corpus, idCol, vecCol, k)
   }
 
   /** Prefix-dimension (Matryoshka-style) two-stage retrieval: candidates
@@ -467,55 +488,13 @@ object Similarity {
       slice(col(vecCol), 1, prefixDim).as("qp"))
     val cp = corpus.select(col(idCol).as("neighbor_id"),
       slice(col(vecCol), 1, prefixDim).as("cp"))
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(round(col("pdot"), 6).desc, col("neighbor_id"))
-    val cand = cp.crossJoin(broadcast(qp))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("pdot", vecDot(col("qp"), col("cp")))
-      .withColumn("crank", row_number().over(wq))
-      .filter(col("crank") <= candidates)
+    val cand = topKPerQuery(flatScan(qp, cp)
+        .withColumn("pdot", vecDot(col("qp"), col("cp"))),
+        round(col("pdot"), 6).desc, candidates)
       .select(col("query_id"), col("neighbor_id"))
-    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-    val cv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(round(col("cosine"), 6).desc, col("neighbor_id"))
-    cand.join(cv, Seq("neighbor_id"))
-      .join(qv, Seq("query_id"))
-      .withColumn("cosine", vecCosine(col("q_vec"), col("c_vec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cosine"), 6).as("cosine"))
+    rescore(cand, queries, corpus, idCol, vecCol, k)
   }
 
-  /** Embedding-distribution drift between two corpus slices, measured on
-    * the trained coarse cells — the vector-side dual of the text JS-drift
-    * audit: each slice's per-cell share (ppm, exact integers when slice
-    * sizes divide 1e6 — true for the generated corpora) and the absolute
-    * per-cell share delta. One narrow assignment projection + one
-    * conditional aggregation; the share window runs over k cell rows
-    * (bounded by the centroid count, never the corpus), so nothing here
-    * scales with |corpus| except the single scan.
-    */
-  /** Greedy k-center (farthest-point) selection — coreset-style diversity
-    * pruning for training-data curation: pick the row with the smallest id
-    * as the seed, then k-1 times the row FARTHEST (squared L2, index-order
-    * fold) from the selected set, ties to the smaller id.
-    *
-    * Scale contract: each round is ONE narrow aggregation over the corpus
-    * (`max(struct(minDist, -id, vec))` — map-side combined), so the driver
-    * receives exactly k rows of (id, dim floats, radius) and the corpus
-    * never shuffles. Distances re-derive from the accumulating `least(...)`
-    * expression rather than a cached column, trading k² tiny vector evals
-    * per row (k ≤ ~64) for zero persisted state.
-    *
-    * Returns (sel_round, id, radius): radius is the selected row's distance
-    * to the previously selected set — the coverage radius the corpus had
-    * BEFORE this center was added (0 for the seed). May return FEWER than
-    * k picks: once every remaining row is at distance 0 from the selected
-    * set (k exceeds the distinct-vector count), selection stops instead of
-    * padding with duplicate centers.
-    */
   /** Maximal-Marginal-Relevance diversified rerank (Carbonell & Goldstein,
     * SIGIR 1998): the slate a RAG / few-shot selector actually wants — each
     * pick maximizes `lambda*relevance - (1-lambda)*maxCosineToPicked`, so
@@ -580,6 +559,25 @@ object Similarity {
     picks.toList
   }
 
+  /** Greedy k-center (farthest-point) selection — coreset-style diversity
+    * pruning for training-data curation: pick the row with the smallest id
+    * as the seed, then k-1 times the row FARTHEST (squared L2, index-order
+    * fold) from the selected set, ties to the smaller id.
+    *
+    * Scale contract: each round is ONE narrow aggregation over the corpus
+    * (`max(struct(minDist, -id, vec))` — map-side combined), so the driver
+    * receives exactly k rows of (id, dim floats, radius) and the corpus
+    * never shuffles. Distances re-derive from the accumulating `least(...)`
+    * expression rather than a cached column, trading k² tiny vector evals
+    * per row (k ≤ ~64) for zero persisted state.
+    *
+    * Returns (sel_round, id, radius): radius is the selected row's distance
+    * to the previously selected set — the coverage radius the corpus had
+    * BEFORE this center was added (0 for the seed). May return FEWER than
+    * k picks: once every remaining row is at distance 0 from the selected
+    * set (k exceeds the distinct-vector count), selection stops instead of
+    * padding with duplicate centers.
+    */
   def kCenterGreedy(corpus: DataFrame, idCol: String, vecCol: String,
       k: Int): Seq[(Int, Long, Double)] = {
     require(k >= 1, s"k must be >= 1, got $k")
@@ -620,6 +618,15 @@ object Similarity {
     picks.toList
   }
 
+  /** Embedding-distribution drift between two corpus slices, measured on
+    * the trained coarse cells — the vector-side dual of the text JS-drift
+    * audit: each slice's per-cell share (ppm, exact integers when slice
+    * sizes divide 1e6 — true for the generated corpora) and the absolute
+    * per-cell share delta. One narrow assignment projection + one
+    * conditional aggregation; the share window runs over k cell rows
+    * (bounded by the centroid count, never the corpus), so nothing here
+    * scales with |corpus| except the single scan.
+    */
   def cellDrift(corpus: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[Seq[Double]]): DataFrame = {
     val assigned = corpus.select((col(idCol) % 2 === 0).as("even"),
@@ -647,13 +654,8 @@ object Similarity {
     */
   def clusterProfile(corpus: DataFrame, vecCol: String,
       centroids: Seq[Seq[Double]]): DataFrame = {
-    val best = element_at(slice(array_sort(array(centroids.zipWithIndex.map {
-      case (ctr, i) =>
-        struct((vecCosine(col("v"), typedLit(ctr)) * -1).as("negCos"),
-          lit(i).as("cell"))
-    }: _*)), 1, 1), 1)
     corpus.select(col(vecCol).as("v"))
-      .withColumn("best", best)
+      .withColumn("best", element_at(cellsByCosine(col("v"), centroids), 1))
       .select(col("best").getField("cell").cast("long").as("cell"),
         round(col("best").getField("negCos") * -1, 6).as("cos"))
       .groupBy(col("cell"))
@@ -681,12 +683,8 @@ object Similarity {
     // silhouette is undefined for a single cluster anyway
     require(centroids.size >= 2,
       s"silhouette needs >= 2 centroids, got ${centroids.size}")
-    val sorted = array_sort(array(centroids.zipWithIndex.map { case (ctr, i) =>
-      struct((vecCosine(col("v"), typedLit(ctr)) * -1).as("negCos"),
-        lit(i).as("cell"))
-    }: _*))
     corpus.select(col(vecCol).as("v"))
-      .withColumn("arr", sorted)
+      .withColumn("arr", cellsByCosine(col("v"), centroids))
       .select(element_at(col("arr"), 1).getField("cell").cast("long").as("cell"),
         (lit(1.0) + element_at(col("arr"), 1).getField("negCos")).as("a"),
         (lit(1.0) + element_at(col("arr"), 2).getField("negCos")).as("b"))
@@ -721,13 +719,8 @@ object Similarity {
   def embeddingOutliers(corpus: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[Seq[Double]], topN: Int): DataFrame = {
     require(centroids.nonEmpty && topN > 0)
-    val best = element_at(slice(array_sort(array(centroids.zipWithIndex.map {
-      case (ctr, i) =>
-        struct((vecCosine(col("v"), typedLit(ctr)) * -1).as("negCos"),
-          lit(i).as("cell"))
-    }: _*)), 1, 1), 1)
     val assigned = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("best", best)
+      .withColumn("best", element_at(cellsByCosine(col("v"), centroids), 1))
       .select(col("id"), col("best").getField("cell").cast("long").as("cell"),
         round(col("best").getField("negCos") * -1, 6).as("cos"))
       .withColumn("cos_e6", round(col("cos") * 1000000, 0).cast("long"))
@@ -754,16 +747,8 @@ object Similarity {
 
   private def rankCells(queries: DataFrame, cellsCorpus: DataFrame, idCol: String,
       vecCol: String, centroids: Seq[Seq[Double]], k: Int, nprobe: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
+    val q = querySide(queries, idCol, vecCol)
       .withColumn("cell", explode(nearestCells(col("q_vec"), centroids, nprobe)))
-    val candidates = cellsCorpus.join(broadcast(q), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", vecCosine(col("q_vec"), col("c_vec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(round(col("cosine"), 6).desc, col("neighbor_id"))
-    candidates.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cosine"), 6).as("cosine"))
+    cosineTopK(cellProbe(cellsCorpus, q), k)
   }
 }

@@ -361,15 +361,16 @@ object Pipeline {
     // re-sending, and the `_uploaded` anti-join keeps a retried RUN
     // idempotent. At cluster scale `graft.checkpoint.reliable` makes the pin
     // durable.
-    if (!branch.needsIteration) {
-      val (outcomes, parts) = rdd.mapPartitionsWithIndex { (pid, it) =>
-        val offset = batchOffsets.getOrElse(pid, 0L)
-        it.grouped(batchSize).zipWithIndex.flatMap { case (rows, localIdx) =>
-          sendBatch(rows, offset + localIdx + 1)
-        }
-      }.pinned(spark)(summarise)
-      (Seq(outcomes), report(parts))
-    } else if (counts.values.sum == 0L) {
+    // Iteration-1 requests carry SIDE EFFECTS later batches depend on
+    // (REPLACE remove_all, job create, data-import erase) — with all
+    // partitions sending concurrently, a later batch could reach the API
+    // first and be wiped or rejected. For `needsIteration` branches, phase A
+    // runs ONLY the globally first batch and its pin job is the ordering
+    // BARRIER; the send job then sends every other batch concurrently as
+    // usual. Other branches have no first batch to hold back.
+    val firstPid: Option[Int] =
+      if (branch.needsIteration) sortedPids.find(p => counts(p) > 0L) else None
+    if (branch.needsIteration && firstPid.isEmpty) {
       // Reference semantics: an EMPTY source still yields ONE empty batch
       // (batches_from_executions.py:113-131), so iteration-1 cleanup
       // actions (REPLACE remove_all, data-import erase) fire and stale
@@ -384,25 +385,19 @@ object Pipeline {
           Some(s"Error uploading data: $msg")))
       (Seq(spark.sparkContext.parallelize(synthetic, 1)), report(Seq(summarise(synthetic.iterator))))
     } else {
-      // Iteration-1 requests carry SIDE EFFECTS later batches depend on
-      // (REPLACE remove_all, job create, data-import erase) — with all
-      // partitions sending concurrently, a later batch could reach the API
-      // first and be wiped or rejected. Phase A runs ONLY the globally
-      // first batch and its pin job is the ordering BARRIER; phase B then
-      // sends every other batch concurrently as usual.
-      val firstPid = sortedPids.find(p => counts(p) > 0L).get
-      val (phaseA, partsA) = rdd.mapPartitionsWithIndex { (pid, it) =>
-        if (pid != firstPid) Iterator.empty
+      val phaseA = firstPid.map(first => rdd.mapPartitionsWithIndex { (pid, it) =>
+        if (pid != first) Iterator.empty
         else it.grouped(batchSize).take(1).flatMap(rows => sendBatch(rows, 1L))
-      }.pinned(spark)(summarise)
-      val (phaseB, partsB) = rdd.mapPartitionsWithIndex { (pid, it) =>
+      }.pinned(spark)(summarise))
+      val (sent, parts) = rdd.mapPartitionsWithIndex { (pid, it) =>
         val offset = batchOffsets.getOrElse(pid, 0L)
         it.grouped(batchSize).zipWithIndex.flatMap { case (rows, localIdx) =>
-          if (pid == firstPid && localIdx == 0) Iterator.empty
+          if (firstPid.contains(pid) && localIdx == 0) Iterator.empty
           else sendBatch(rows, offset + localIdx + 1)
         }
       }.pinned(spark)(summarise)
-      (Seq(phaseA, phaseB), report(partsA ++ partsB))
+      (phaseA.map(_._1).toSeq :+ sent,
+        report(phaseA.toSeq.flatMap(_._2) ++ parts))
     }
   }
 

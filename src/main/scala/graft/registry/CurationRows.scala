@@ -659,18 +659,11 @@ object CurationRows extends Family {
       .map(_.toString).mkString("[", ", ", "]")
     val flatPq = graft.operators.TrainedPq.sf001.flatten.flatten
       .map(_.toString).mkString("[", ", ", "]")
-    val centroidList = (ci: String) => s"sg[($ci) * 64 + 1 : ($ci) * 64 + 64]"
-    def subV(v: String, m: String) = s"$v[($m) * 16 + 1 : ($m) * 16 + 16]"
-    def cbV(m: String, j: String) =
-      s"pq[(($m) * 8 + ($j)) * 16 + 1 : (($m) * 8 + ($j)) * 16 + 16]"
-    def term(m: Int) =
-      sqlL2sq(subV("qv", m.toString), cbV(m.toString, s"codes[$m + 1]"))
     s"""WITH RECURSIVE sgt AS (SELECT $flatC::DOUBLE[] AS sg),
          pqt AS (SELECT $flatPq::DOUBLE[] AS pq),
          e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          cells AS MATERIALIZED (SELECT vec_id, v,
-             list_transform(list_sort(list_transform(range(0, 8), ci ->
-               {'negCos': -${sqlCos("v", centroidList("ci"))}, 'cell': ci})),
+             list_transform(${sqlCellsByCosine("v")},
                st -> st.cell) AS sorted_cells
            FROM e CROSS JOIN sgt),
          cl AS MATERIALIZED (SELECT vec_id, v, sorted_cells[1] AS cell FROM cells),
@@ -688,14 +681,12 @@ object CurationRows extends Family {
          keep AS (SELECT vec_id FROM sd_comp WHERE comp = vec_id),
          cc AS (SELECT cl.vec_id AS neighbor_id, cl.v AS cv, cl.cell
                 FROM cl JOIN keep USING (vec_id)),
-         enc AS (SELECT neighbor_id, cell, list_transform(range(0, 4), m ->
-             (list_sort(list_transform(range(0, 8), j ->
-               {'d': ${sqlL2sq(subV("cv", "m"), cbV("m", "j"))}, 'j': j})))[1].j) AS codes
+         enc AS (SELECT neighbor_id, cell, ${sqlPqEncode("cv")} AS codes
            FROM cc CROSS JOIN pqt),
          q AS (SELECT vec_id AS query_id, v AS qv, unnest(sorted_cells[1:2]) AS cell
                FROM cells WHERE vec_id < 5),
          cand AS (SELECT query_id, neighbor_id,
-             ${term(0)} + ${term(1)} + ${term(2)} + ${term(3)} AS adist
+             ${sqlPqAdc("qv")} AS adist
            FROM enc JOIN q USING (cell) CROSS JOIN pqt
            WHERE query_id <> neighbor_id)
          SELECT query_id, neighbor_id, rank, round(adist, 6) AS adist FROM (

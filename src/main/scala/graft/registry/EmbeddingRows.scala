@@ -289,12 +289,10 @@ object EmbeddingRows extends Family {
     // doubles (Double.toString round-trips through DuckDB's parser)
     val flat = graft.operators.TrainedCentroids.sf001.flatten
       .map(_.toString).mkString("[", ", ", "]")
-    val centroidList = (ci: String) => s"sg[($ci) * 64 + 1 : ($ci) * 64 + 64]"
     s"""WITH sgt AS (SELECT $flat::DOUBLE[] AS sg),
          e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          cells AS (SELECT vec_id, v,
-             list_transform(list_sort(list_transform(range(0, 8), ci ->
-               {'negCos': -${sqlCos("v", centroidList("ci"))}, 'cell': ci})),
+             list_transform(${sqlCellsByCosine("v")},
                st -> st.cell) AS sorted_cells
            FROM e CROSS JOIN sgt),
          c AS (SELECT vec_id AS neighbor_id, v AS cv, sorted_cells[1] AS cell FROM cells),
@@ -322,7 +320,6 @@ object EmbeddingRows extends Family {
   row("e_semdedup_keep", eSemdedupKeep) {
     val flat = graft.operators.TrainedCentroids.sf001.flatten
       .map(_.toString).mkString("[", ", ", "]")
-    val centroidList = (ci: String) => s"sg[($ci) * 64 + 1 : ($ci) * 64 + 64]"
     // cells/mp/sd_edges MATERIALIZED: each is referenced 2-4 times
     // (DuckDB inlines per reference by default) and the fuzz corpus's
     // clustered embeddings made the re-inlined cosine work breach the
@@ -330,8 +327,7 @@ object EmbeddingRows extends Family {
     s"""WITH RECURSIVE sgt AS (SELECT $flat::DOUBLE[] AS sg),
          e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          cells AS MATERIALIZED (SELECT vec_id, v,
-             (list_transform(list_sort(list_transform(range(0, 8), ci ->
-               {'negCos': -${sqlCos("v", centroidList("ci"))}, 'cell': ci})),
+             (list_transform(${sqlCellsByCosine("v")},
                st -> st.cell))[1] AS cell
            FROM e CROSS JOIN sgt),
          mp AS MATERIALIZED (SELECT a.vec_id AS id_a, b.vec_id AS id_b
@@ -432,12 +428,10 @@ object EmbeddingRows extends Family {
   row("e_cluster_profile", eClusterProfile) {
     val flat = graft.operators.TrainedCentroids.sf001.flatten
       .map(_.toString).mkString("[", ", ", "]")
-    val centroidList = (ci: String) => s"sg[($ci) * 64 + 1 : ($ci) * 64 + 64]"
     s"""WITH sgt AS (SELECT $flat::DOUBLE[] AS sg),
          e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          cells AS (SELECT vec_id,
-             (list_sort(list_transform(range(0, 8), ci ->
-               {'negCos': -${sqlCos("v", centroidList("ci"))}, 'cell': ci})))[1] AS best
+             (${sqlCellsByCosine("v")})[1] AS best
            FROM e CROSS JOIN sgt),
          p AS (SELECT CAST(best.cell AS BIGINT) AS cell,
                       round(-best.negCos, 6) AS cos FROM cells)
@@ -458,12 +452,10 @@ object EmbeddingRows extends Family {
   row("e_cell_drift", eCellDrift) {
     val flat = graft.operators.TrainedCentroids.sf001.flatten
       .map(_.toString).mkString("[", ", ", "]")
-    val centroidList = (ci: String) => s"sg[($ci) * 64 + 1 : ($ci) * 64 + 64]"
     s"""WITH sgt AS (SELECT $flat::DOUBLE[] AS sg),
          e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          cells AS (SELECT vec_id,
-             (list_sort(list_transform(range(0, 8), ci ->
-               {'negCos': -${sqlCos("v", centroidList("ci"))}, 'cell': ci})))[1] AS best
+             (${sqlCellsByCosine("v")})[1] AS best
            FROM e CROSS JOIN sgt),
          a AS (SELECT CAST(best.cell AS BIGINT) AS cell,
                       vec_id % 2 = 0 AS even FROM cells),
@@ -488,12 +480,10 @@ object EmbeddingRows extends Family {
   row("e_silhouette", eSilhouette) {
     val flat = graft.operators.TrainedCentroids.sf001.flatten
       .map(_.toString).mkString("[", ", ", "]")
-    val centroidList = (ci: String) => s"sg[($ci) * 64 + 1 : ($ci) * 64 + 64]"
     s"""WITH sgt AS (SELECT $flat::DOUBLE[] AS sg),
          e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          arr AS (SELECT vec_id,
-             list_sort(list_transform(range(0, 8), ci ->
-               {'negCos': -${sqlCos("v", centroidList("ci"))}, 'cell': ci})) AS ar
+             ${sqlCellsByCosine("v")} AS ar
            FROM e CROSS JOIN sgt),
          p AS (SELECT CAST(ar[1].cell AS BIGINT) AS cell,
                       1.0 + ar[1].negCos AS a, 1.0 + ar[2].negCos AS b FROM arr),
@@ -561,20 +551,13 @@ object EmbeddingRows extends Family {
   row("e_pq_topk", ePqTopK) {
     val flat = graft.operators.TrainedPq.sf001.flatten.flatten
       .map(_.toString).mkString("[", ", ", "]")
-    def subV(v: String, m: String) = s"$v[($m) * 16 + 1 : ($m) * 16 + 16]"
-    def cbV(m: String, j: String) =
-      s"pq[(($m) * 8 + ($j)) * 16 + 1 : (($m) * 8 + ($j)) * 16 + 16]"
-    def term(m: Int) =
-      sqlL2sq(subV("qv", m.toString), cbV(m.toString, s"codes[$m + 1]"))
     s"""WITH pqt AS (SELECT $flat::DOUBLE[] AS pq),
          e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         enc AS (SELECT vec_id, list_transform(range(0, 4), m ->
-             (list_sort(list_transform(range(0, 8), j ->
-               {'d': ${sqlL2sq(subV("v", "m"), cbV("m", "j"))}, 'j': j})))[1].j) AS codes
+         enc AS (SELECT vec_id, ${sqlPqEncode("v")} AS codes
            FROM e CROSS JOIN pqt),
          q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
          cand AS (SELECT query_id, enc.vec_id AS neighbor_id,
-             ${term(0)} + ${term(1)} + ${term(2)} + ${term(3)} AS adist
+             ${sqlPqAdc("qv")} AS adist
            FROM enc CROSS JOIN q CROSS JOIN pqt WHERE query_id <> enc.vec_id)
          SELECT query_id, neighbor_id, rank, round(adist, 6) AS adist FROM (
            SELECT *, row_number() OVER (PARTITION BY query_id
@@ -640,12 +623,10 @@ object EmbeddingRows extends Family {
   row("e_ood_outliers", eOodOutliers) {
     val flat = graft.operators.TrainedCentroids.sf001.flatten
       .map(_.toString).mkString("[", ", ", "]")
-    val centroidList = (ci: String) => s"sg[($ci) * 64 + 1 : ($ci) * 64 + 64]"
     s"""WITH sgt AS (SELECT $flat::DOUBLE[] AS sg),
          e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          cells AS (SELECT vec_id,
-             (list_sort(list_transform(range(0, 8), ci ->
-               {'negCos': -${sqlCos("v", centroidList("ci"))}, 'cell': ci})))[1] AS best
+             (${sqlCellsByCosine("v")})[1] AS best
            FROM e CROSS JOIN sgt),
          b AS (SELECT vec_id, CAST(best.cell AS BIGINT) AS cell,
              round(-best.negCos, 6) AS cos,
@@ -743,30 +724,21 @@ object EmbeddingRows extends Family {
       .map(_.toString).mkString("[", ", ", "]")
     val flatPq = graft.operators.TrainedPq.sf001.flatten.flatten
       .map(_.toString).mkString("[", ", ", "]")
-    val centroidList = (ci: String) => s"sg[($ci) * 64 + 1 : ($ci) * 64 + 64]"
-    def subV(v: String, m: String) = s"$v[($m) * 16 + 1 : ($m) * 16 + 16]"
-    def cbV(m: String, j: String) =
-      s"pq[(($m) * 8 + ($j)) * 16 + 1 : (($m) * 8 + ($j)) * 16 + 16]"
-    def term(m: Int) =
-      sqlL2sq(subV("qv", m.toString), cbV(m.toString, s"codes[$m + 1]"))
     s"""WITH sgt AS (SELECT $flatC::DOUBLE[] AS sg),
        pqt AS (SELECT $flatPq::DOUBLE[] AS pq),
        e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
        cells AS (SELECT vec_id, v,
-           list_transform(list_sort(list_transform(range(0, 8), ci ->
-             {'negCos': -${sqlCos("v", centroidList("ci"))}, 'cell': ci})),
+           list_transform(${sqlCellsByCosine("v")},
              st -> st.cell) AS sorted_cells
          FROM e CROSS JOIN sgt),
        c AS (SELECT vec_id AS neighbor_id, v AS cv, sorted_cells[1] AS cell
              FROM cells),
-       enc AS (SELECT neighbor_id, cell, list_transform(range(0, 4), m ->
-           (list_sort(list_transform(range(0, 8), j ->
-             {'d': ${sqlL2sq(subV("cv", "m"), cbV("m", "j"))}, 'j': j})))[1].j) AS codes
+       enc AS (SELECT neighbor_id, cell, ${sqlPqEncode("cv")} AS codes
          FROM c CROSS JOIN pqt),
        q AS (SELECT vec_id AS query_id, v AS qv, unnest(sorted_cells[1:2]) AS cell
              FROM cells WHERE vec_id < 5),
        cand AS (SELECT query_id, neighbor_id,
-           ${term(0)} + ${term(1)} + ${term(2)} + ${term(3)} AS adist
+           ${sqlPqAdc("qv")} AS adist
          FROM enc JOIN q USING (cell) CROSS JOIN pqt
          WHERE query_id <> neighbor_id)
        SELECT query_id, neighbor_id, rank, round(adist, 6) AS adist FROM (
@@ -785,37 +757,28 @@ object EmbeddingRows extends Family {
       .map(_.toString).mkString("[", ", ", "]")
     val flatPq = graft.operators.TrainedPqResidual.sf001.flatten.flatten
       .map(_.toString).mkString("[", ", ", "]")
-    val centroidList = (ci: String) => s"sg[($ci) * 64 + 1 : ($ci) * 64 + 64]"
-    def subV(v: String, m: String) = s"$v[($m) * 16 + 1 : ($m) * 16 + 16]"
-    def cbV(m: String, j: String) =
-      s"pq[(($m) * 8 + ($j)) * 16 + 1 : (($m) * 8 + ($j)) * 16 + 16]"
-    def term(m: Int) =
-      sqlL2sq(subV("qrv", m.toString), cbV(m.toString, s"codes[$m + 1]"))
     s"""WITH sgt AS (SELECT $flatC::DOUBLE[] AS sg),
        pqt AS (SELECT $flatPq::DOUBLE[] AS pq),
        e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
        cells AS (SELECT vec_id, v,
-           list_transform(list_sort(list_transform(range(0, 8), ci ->
-             {'negCos': -${sqlCos("v", centroidList("ci"))}, 'cell': ci})),
+           list_transform(${sqlCellsByCosine("v")},
              st -> st.cell) AS sorted_cells
          FROM e CROSS JOIN sgt),
        c AS (SELECT vec_id AS neighbor_id,
              list_transform(range(1, 65),
-               i -> v[i] - ${centroidList("sorted_cells[1]")}[i]) AS rv,
+               i -> v[i] - ${sqlCentroid("sorted_cells[1]")}[i]) AS rv,
              sorted_cells[1] AS cell
            FROM cells CROSS JOIN sgt),
-       enc AS (SELECT neighbor_id, cell, list_transform(range(0, 4), m ->
-           (list_sort(list_transform(range(0, 8), j ->
-             {'d': ${sqlL2sq(subV("rv", "m"), cbV("m", "j"))}, 'j': j})))[1].j) AS codes
+       enc AS (SELECT neighbor_id, cell, ${sqlPqEncode("rv")} AS codes
          FROM c CROSS JOIN pqt),
        q AS (SELECT query_id, cell,
              list_transform(range(1, 65),
-               i -> qv[i] - ${centroidList("cell")}[i]) AS qrv
+               i -> qv[i] - ${sqlCentroid("cell")}[i]) AS qrv
            FROM (SELECT vec_id AS query_id, v AS qv,
                    unnest(sorted_cells[1:2]) AS cell
                  FROM cells WHERE vec_id < 5) CROSS JOIN sgt),
        cand AS (SELECT query_id, neighbor_id,
-           ${term(0)} + ${term(1)} + ${term(2)} + ${term(3)} AS adist
+           ${sqlPqAdc("qrv")} AS adist
          FROM enc JOIN q USING (cell) CROSS JOIN pqt
          WHERE query_id <> neighbor_id)
        SELECT query_id, neighbor_id, rank, round(adist, 6) AS adist FROM (
@@ -831,11 +794,9 @@ object EmbeddingRows extends Family {
     * dims.
     */
   private lazy val sqlMipsIvfTopK: String = {
-    val centroidList = (ci: String) => s"sg[($ci) * 65 + 1 : ($ci) * 65 + 65]"
     def cellsOf(src: String) =
       s"""SELECT vec_id, v,
-             list_transform(list_sort(list_transform(range(0, 8), ci ->
-               {'negCos': -${sqlCos("v", centroidList("ci"))}, 'cell': ci})),
+             list_transform(${sqlCellsByCosine("v", 65)},
                st -> st.cell) AS sorted_cells
            FROM $src CROSS JOIN sgt"""
     s"""WITH sgt AS (SELECT ${sqlSigns(8, 65)}::DOUBLE[] AS sg),
@@ -869,12 +830,10 @@ object EmbeddingRows extends Family {
     * e_ivf_topk oracle (k=10) and the hard-negative oracle's wider cut.
     */
   private def sqlIvfCand(k: Int, corpusPred: String = "TRUE"): String = {
-    val centroidList = (ci: String) => s"sg[($ci) * 64 + 1 : ($ci) * 64 + 64]"
     s"""WITH sgt AS (SELECT ${sqlSigns(8, 64)}::DOUBLE[] AS sg),
          e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
          cells AS (SELECT vec_id, label, v,
-             list_transform(list_sort(list_transform(range(0, 8), ci ->
-               {'negCos': -${sqlCos("v", centroidList("ci"))}, 'cell': ci})),
+             list_transform(${sqlCellsByCosine("v")},
                st -> st.cell) AS sorted_cells
            FROM e CROSS JOIN sgt),
          c AS (SELECT vec_id AS neighbor_id, v AS cv, sorted_cells[1] AS cell

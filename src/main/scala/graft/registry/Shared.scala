@@ -265,6 +265,42 @@ private[graft] object Shared {
     s"list_reduce([0.0] || list_transform(list_zip($a, $b), " +
       s"zz -> (zz[1] - zz[2]) * (zz[1] - zz[2])), (lacc, lx) -> lacc + lx)"
 
+  /** Centroid `ci` (a SQL int expr) of the flat `sg` list of 8 centroids
+    * of `dim` doubles each (the `sgt(sg)` CTE of the trained-cell oracles).
+    */
+  def sqlCentroid(ci: String, dim: Int = 64): String =
+    s"sg[($ci) * $dim + 1 : ($ci) * $dim + $dim]"
+
+  /** Every `sg` centroid of DOUBLE[] `v` as {negCos, cell}, sorted
+    * ascending by negCos = descending by cosine, ties by cell — the order
+    * of `Similarity.cellsByCosine`. `[1]` is the own cell, `[2]` the
+    * nearest other.
+    */
+  def sqlCellsByCosine(v: String, dim: Int = 64): String =
+    "list_sort(list_transform(range(0, 8), ci -> " +
+      s"{'negCos': -${sqlCos(v, sqlCentroid("ci", dim))}, 'cell': ci}))"
+
+  // subspace `m` of a 64-dim vector, and code `j` of subspace `m` in the
+  // flat `pq` list (the `pqt(pq)` CTE): 4 subspaces × 8 codes × 16 dims,
+  // the TrainedPq shape
+  private def sqlPqSub(v: String, m: String) = s"$v[($m) * 16 + 1 : ($m) * 16 + 16]"
+  private def sqlPqCode(m: String, j: String) =
+    s"pq[(($m) * 8 + ($j)) * 16 + 1 : (($m) * 8 + ($j)) * 16 + 16]"
+
+  /** PQ codes (INT[4]) of DOUBLE[] `v`: per subspace, the nearest code by
+    * (squared L2, index) — `Pq.encodeExpr`.
+    */
+  def sqlPqEncode(v: String): String =
+    "list_transform(range(0, 4), m -> (list_sort(list_transform(range(0, 8), j -> " +
+      s"{'d': ${sqlL2sq(sqlPqSub(v, "m"), sqlPqCode("m", "j"))}, 'j': j})))[1].j)"
+
+  /** ADC distance of query DOUBLE[] `q` to the row's `codes`, summed in
+    * subspace order — `Pq.adcDistanceExpr`.
+    */
+  def sqlPqAdc(q: String): String = (0 until 4).map(m =>
+    sqlL2sq(sqlPqSub(q, m.toString), sqlPqCode(m.toString, s"codes[$m + 1]")))
+    .mkString(" + ")
+
   /** Shared by the batch query and its streaming dual — the stream's output
     * is hash-checked against the SAME DuckDB result.
     */

@@ -72,6 +72,22 @@ class PqSpec extends SparkTestBase {
     assert(viaIndex.nonEmpty)
   }
 
+  test("materialized PQ index refuses a different codebook: retrain or rebuild") {
+    val emb = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
+    val centroids = graft.operators.TrainedCentroids.sf001
+    val path = java.nio.file.Files.createTempDirectory("pq_idx_id").toString + "/idx"
+    Pq.writePqIndex(emb, "vec_id", "embedding", centroids, books, path)
+    // one codebook double moved by one ulp: codes still score, wrongly
+    val v = books(1)(3)(5)
+    val perturbed = books.updated(1, books(1).updated(3,
+      books(1)(3).updated(5, math.nextUp(v))))
+    val err = intercept[IllegalArgumentException] {
+      Pq.pqIndexTopK(spark, emb.filter(col("vec_id") < 3), "vec_id", "embedding",
+        centroids, perturbed, path, k = 5, nprobe = 2).collect()
+    }
+    assert(err.getMessage.contains("retrain or rebuild"), err.getMessage)
+  }
+
   test("ivfPqTopK stays hash-joinable and agrees with flat ADC inside the probed cells") {
     val emb = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
     val centroids = graft.operators.TrainedCentroids.sf001

@@ -153,6 +153,53 @@ class SimilaritySpec extends SparkTestBase {
     assert(err.getMessage.contains("retrain or rebuild"), err.getMessage)
   }
 
+  test("every flat scan and IVF cell probe broadcasts its query side with no size estimate to lean on") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildSide}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+      BroadcastNestedLoopJoinExec, CartesianProductExec}
+    import graft.operators.{Pq, TrainedCentroids, TrainedPq, TrainedPqResidual}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => p +: nodes(a.executedPlan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    def buildsQueries(side: BuildSide, left: SparkPlan, right: SparkPlan) =
+      (if (side == BuildLeft) left else right).output.exists(_.name == "query_id")
+    // with auto-broadcast off, only the hints can keep these joins broadcast
+    graft.util.Sessions.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") { s =>
+      val emb = s.read.parquet(sf("sf0.001") + "/embeddings.parquet")
+      val q = emb.filter(col("vec_id") < 3)
+      val c = TrainedCentroids.sf001
+      val flat: Seq[(String, DataFrame)] = Seq(
+        "bruteForceTopK" -> Similarity.bruteForceTopK(q, emb, "vec_id", "embedding"),
+        "mipsTopK" -> Similarity.mipsTopK(q, emb, "vec_id", "embedding"),
+        "quantizedTopK" -> Similarity.quantizedTopK(q, emb, "vec_id", "embedding"),
+        "binaryTopK" -> Similarity.binaryTopK(q, emb, "vec_id", "embedding"),
+        "truncatedTopK" -> Similarity.truncatedTopK(q, emb, "vec_id", "embedding", 16),
+        "pqTopK" -> Pq.pqTopK(q, emb, "vec_id", "embedding", TrainedPq.sf001))
+      flat.foreach { case (name, df) =>
+        val plan = nodes(df.queryExecution.executedPlan)
+        assert(!plan.exists(_.isInstanceOf[CartesianProductExec]), s"$name plans a cartesian product")
+        val bnlj = plan.collect { case j: BroadcastNestedLoopJoinExec => j }
+        assert(bnlj.exists(j => buildsQueries(j.buildSide, j.left, j.right)),
+          s"$name does not broadcast its query side:\n${df.queryExecution.executedPlan}")
+      }
+      val probes: Seq[(String, DataFrame)] = Seq(
+        "ivfTopK" -> Similarity.ivfTopK(q, emb, "vec_id", "embedding", c),
+        "ivfPqTopK" -> Pq.ivfPqTopK(q, emb, "vec_id", "embedding", c, TrainedPq.sf001),
+        "ivfPqResidualTopK" -> Pq.ivfPqResidualTopK(q, emb, "vec_id", "embedding", c,
+          TrainedPqResidual.sf001))
+      probes.foreach { case (name, df) =>
+        val bhj = nodes(df.queryExecution.executedPlan)
+          .collect { case j: BroadcastHashJoinExec => j }
+        assert(bhj.exists(j => buildsQueries(j.buildSide, j.left, j.right)),
+          s"$name does not broadcast its query side:\n${df.queryExecution.executedPlan}")
+      }
+    }
+  }
+
   test("int8 quantization: bounded range, zero-vector safe, argmax preserved") {
     import graft.functions.KernelExpressions.{dotLong, int8Quantize}
     val df = Seq(

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Compare the join strategies of two sets of registry plan dumps.
 
-Usage: tools/join_strategies.py <dumpDirA> <dumpDirB>
+Usage: tools/join_strategies.py [--shape] <dumpDirA> <dumpDirB>
 
 Each directory holds `graft.ExplainDump` output, one `<row>_<suffix>.txt`
 per registry row (the suffix may differ between the two directories). For
@@ -16,8 +16,14 @@ Exit status: 1 when any row in B has more SortMergeJoin, ShuffledHashJoin or
 CartesianProduct operators than in A (a join that moved to a shuffle or to a
 cartesian product), 2 on a usage error, else 0. A row dumped on one side only
 is listed but does not fail the run.
+
+With --shape, the script instead compares each row's full ordered list of
+`(<id>) <Operator>` headers — the "plan shape unchanged" gate for a
+refactor. It prints every row whose list differs, with the first differing
+operators, and exits 1 when any row differs or is dumped on one side only.
 """
 import collections
+import difflib
 import os
 import re
 import sys
@@ -47,13 +53,47 @@ def counts(path):
     return c
 
 
-def load(d):
-    """{row: counts} for every `<row>_<suffix>.txt` in `d`."""
-    return {f[:-len(".txt")].rsplit("_", 1)[0]: counts(os.path.join(d, f))
+def shape(path):
+    """Ordered operator headers of one dump's formatted (initial) plan."""
+    ops = []
+    with open(path) as f:
+        for line in f:
+            if line.startswith(FINAL):
+                break
+            m = HEADER.match(line)
+            if m:
+                ops.append(m.group(1))
+    return ops
+
+
+def load(d, read=counts):
+    """{row: read(dump)} for every `<row>_<suffix>.txt` in `d`."""
+    return {f[:-len(".txt")].rsplit("_", 1)[0]: read(os.path.join(d, f))
             for f in sorted(os.listdir(d)) if f.endswith(".txt") and "_" in f}
 
 
+def compare_shapes(a, b):
+    """Rows whose ordered operator lists differ; 1 if any, else 0."""
+    differ = []
+    for row in sorted(a.keys() | b.keys()):
+        if row not in a or row not in b:
+            print(f"{row}: only in {'A' if row in a else 'B'}")
+            differ.append(row)
+        elif a[row] != b[row]:
+            sm = difflib.SequenceMatcher(a=a[row], b=b[row], autojunk=False)
+            edits = [f"{tag} {a[row][i1:i2]} -> {b[row][j1:j2]}"
+                     for tag, i1, i2, j1, j2 in sm.get_opcodes() if tag != "equal"]
+            print(f"{row}: {len(a[row])} -> {len(b[row])} operators; "
+                  + "; ".join(edits[:3]))
+            differ.append(row)
+    print(f"{len(a.keys() & b.keys())} rows in both; "
+          f"{len(differ)} differ in plan shape")
+    return 1 if differ else 0
+
+
 def main(argv):
+    if len(argv) == 4 and argv[1] == "--shape":
+        return compare_shapes(load(argv[2], shape), load(argv[3], shape))
     if len(argv) != 3:
         print(__doc__.strip(), file=sys.stderr)
         return 2
